@@ -66,20 +66,27 @@ object Bench {
       passTotals.sliding(2).forall(p => p(1) < p(0)) &&
       passTotals.last > 0 && passTotals.head / passTotals.last > 1.4
 
+  /** How each query is forced: the noop sink (see FORCING CONVENTION). */
+  private[graft] val Forcing = "noop"
+
   /** The previous round's record (BENCH_FULL.json at repo root, about to
     * be overwritten): (total, cpu_cal, io_cal, per-query min map). Lets
     * this run adjudicate host noise ITSELF instead of leaving the judge
     * to hand-divide uniform query deltas by the calibration ratio. */
-  private def readPrev(sfDir: String): Option[(Double, Double, Double, Map[String, Double])] =
+  private[graft] def readPrev(sfDir: String,
+      p: java.nio.file.Path = java.nio.file.Paths.get("BENCH_FULL.json"))
+      : Option[(Double, Double, Double, Map[String, Double])] =
     try {
-      val p = java.nio.file.Paths.get("BENCH_FULL.json")
       if (!java.nio.file.Files.exists(p)) None
       else {
         val root = new com.fasterxml.jackson.databind.ObjectMapper()
           .readTree(java.nio.file.Files.readAllBytes(p))
         // only like-for-like: a record from another scale factor (a local
-        // debug run) must not masquerade as the previous round
-        if (root.get("sf") == null || root.get("sf").asText() != sfDir) None
+        // debug run) or another forcing convention (records without the
+        // field predate the noop sink) must not masquerade as the
+        // previous round
+        def field(k: String) = Option(root.get(k)).map(_.asText())
+        if (!field("sf").contains(sfDir) || !field("forcing").contains(Forcing)) None
         else {
           val qs = scala.collection.mutable.Map.empty[String, Double]
           val it = root.get("queries").properties().iterator()
@@ -263,7 +270,7 @@ object Bench {
         s""""cal_norm_ratio":${f"$norm%.3f"},"compared":$n,""" +
         s""""outliers":$outJson}"""
     }.getOrElse("null")
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","forcing":"noop","value_median":$totalMedian,"failed":${errors.size},"errors":$errJson,"intermittent":$interJson,"pass_totals":$passTotals,"host_settling":$settling,"cpu_cal_sec":$cal,"io_cal_sec":$ioCal,"cal_norm_total":${f"$calNormTotal%.3f"},"prev":$prevJson,"jvm":${jvmDiag()},"queries":$qs,"queries_median":$qsMedian,"sf":"$sfDir"}"""
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","forcing":"$Forcing","value_median":$totalMedian,"failed":${errors.size},"errors":$errJson,"intermittent":$interJson,"pass_totals":$passTotals,"host_settling":$settling,"cpu_cal_sec":$cal,"io_cal_sec":$ioCal,"cal_norm_total":${f"$calNormTotal%.3f"},"prev":$prevJson,"jvm":${jvmDiag()},"queries":$qs,"queries_median":$qsMedian,"sf":"$sfDir"}"""
     try {
       val p = java.nio.file.Paths.get("BENCH_FULL.json")
       java.nio.file.Files.write(p, fullJson.getBytes("UTF-8"))
@@ -306,7 +313,7 @@ object Bench {
       (if (errors.nonEmpty) s""","errors":$errJson""" else "") +
         (if (intermittent.nonEmpty) s""","intermittent":$interJson""" else "")
     val extraConfs = sys.env.get("SPARK_GRAFT_EXTRA_CONFS").exists(_.trim.nonEmpty)
-    val line = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","forcing":"noop","value_median":${f"$totalMedian%.3f"},"failed":${errors.size}$errPart,"pass_totals":$passTotalsShort,"host_settling":$settling,"cpu_cal_sec":${f"$cal%.3f"},"io_cal_sec":${f"$ioCal%.3f"},"cal_norm":${f"$calNormTotal%.1f"},"extra_confs":$extraConfs,"prev":$prevShort,"queries_file":"BENCH_FULL.json","queries":$qsShort,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","forcing":"$Forcing","value_median":${f"$totalMedian%.3f"},"failed":${errors.size}$errPart,"pass_totals":$passTotalsShort,"host_settling":$settling,"cpu_cal_sec":${f"$cal%.3f"},"io_cal_sec":${f"$ioCal%.3f"},"cal_norm":${f"$calNormTotal%.1f"},"extra_confs":$extraConfs,"prev":$prevShort,"queries_file":"BENCH_FULL.json","queries":$qsShort,"sf":"$sfDir"}"""
     spark.stop()
     println(line)
   }

@@ -345,14 +345,28 @@ object Terminators {
 }
 
 /** Small-file compaction for parquet locations (the OSS stand-in for
-  * Delta OPTIMIZE in this build). */
+  * Delta OPTIMIZE in this build). A hive-partitioned location keeps its
+  * layout: rows are hashed on the partition columns, so each partition
+  * dir is rewritten as one file. */
 object FileCompaction {
   def compact(spark: SparkSession, location: String, targetPartitions: Int): Unit = {
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(location)
+    val partCols = graft.io.PartitionedRewrite.discoverLayout(root.getFileSystem(conf), root)
     val df = spark.read.parquet(location)
+    val files = df.inputFiles
     val n = if (targetPartitions > 0) targetPartitions
-      else math.max(1, (df.inputFiles.length / 8.0).ceil.toInt)
+      else math.max(1, (files.length / 8.0).ceil.toInt)
     val stage = location.stripSuffix("/") + "__compact"
-    df.repartition(n).write.mode("overwrite").parquet(stage)
-    graft.io.StagedSwap.commit(spark.sparkContext.hadoopConfiguration, location, stage)
+    if (partCols.isEmpty) df.repartition(n).write.mode("overwrite").parquet(stage)
+    else {
+      // at least one task per partition dir, so the per-dir files are
+      // written in parallel rather than queued behind a few tasks
+      val dirs = files.map(f => new Path(f).getParent.toString).distinct.length
+      df.repartition(math.max(n, dirs), partCols.map(org.apache.spark.sql.functions.col): _*)
+        .write.partitionBy(partCols: _*).mode("overwrite").parquet(stage)
+    }
+    graft.io.StagedSwap.commit(conf, location, stage)
   }
 }

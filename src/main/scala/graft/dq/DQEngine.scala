@@ -677,8 +677,9 @@ object DQEngine {
     }
   }
 
-  /** Run a DQ spec: one scan for all row-level expectations + one action
-    * per table-level expectation; apply the failure policy. */
+  /** Run a DQ spec: one scan for every row-level and aggregate table
+    * expectation + one action per other table-level expectation; apply
+    * the failure policy. */
   def runOutcome(spark: SparkSession, df: DataFrame,
       spec: DQSpec): (DQRunResult, Option[DQValidationFailedException]) = {
     // Each function instance carries its own critical flag — the same
@@ -689,25 +690,37 @@ object DQEngine {
     val rowFns = allFns.flatMap { case (f, crit) => rowPredicate(f).map(p => (f, crit, p)) }
     val tableFns = allFns.filter { case (f, _) => rowPredicate(f).isEmpty }
 
-    val rowOutcomes: Seq[(ExpectationOutcome, Boolean)] =
+    // ONE df.agg action scans the input for every row expectation's
+    // counts and every aggregate-expressible table expectation; the other
+    // table expectations evaluate one by one.
+    //
+    // GX column-map semantics: a row whose predicate is NULL (the null
+    // domain of the expectation, e.g. a NULL value under
+    // in_set/regex/between) is MISSING, not unexpected — GX filters
+    // unexpected rows as `~condition`, which drops nulls — and `mostly`
+    // compares against the NON-MISSING count, not count(*). The custom
+    // pair/multicolumn expectations encode the same rule inside their
+    // predicates (coalesce(..., true)), so for them the non-missing count
+    // equals count(*) and nothing changes. `when(!pred, 1)` skips NULL
+    // predicates by construction (a NULL condition falls through to
+    // otherwise(0)).
+    val rowAggs =
       if (rowFns.isEmpty) Seq.empty
-      else {
-        // GX column-map semantics: a row whose predicate is NULL (the
-        // null domain of the expectation, e.g. a NULL value under
-        // in_set/regex/between) is MISSING, not unexpected — GX filters
-        // unexpected rows as `~condition`, which drops nulls — and
-        // `mostly` compares against the NON-MISSING count, not count(*).
-        // The custom pair/multicolumn expectations encode the same rule
-        // inside their predicates (coalesce(..., true)), so for them the
-        // non-missing count equals count(*) and nothing changes.
-        // `when(!pred, 1)` skips NULL predicates by construction (a NULL
-        // condition falls through to otherwise(0)).
-        val aggs = count(lit(1)).as("__n") +:
-          rowFns.zipWithIndex.flatMap { case ((_, _, pred), i) =>
-            Seq(sum(when(!pred, 1L).otherwise(0L)).as(s"__u$i"),
-              sum(when(pred.isNotNull, 1L).otherwise(0L)).as(s"__nn$i"))
-          }
-        val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+      else count(lit(1)).as("__n") +:
+        rowFns.zipWithIndex.flatMap { case ((_, _, pred), i) =>
+          Seq(sum(when(!pred, 1L).otherwise(0L)).as(s"__u$i"),
+            sum(when(pred.isNotNull, 1L).otherwise(0L)).as(s"__nn$i"))
+        }
+    val aggPlans = tableFns.map { case (f, crit) => (f, crit, aggExpectation(f)) }
+    val planned = aggPlans.zipWithIndex.collect {
+      case ((_, crit, Some((aggs, mk))), i) => (i, crit, aggs, mk)
+    }
+    val allAggs = rowAggs ++ planned.flatMap(_._3)
+    val aggRow =
+      if (allAggs.isEmpty) None else Some(df.agg(allAggs.head, allAggs.tail: _*).collect()(0))
+
+    val rowOutcomes: Seq[(ExpectationOutcome, Boolean)] = aggRow match {
+      case Some(row) if rowFns.nonEmpty =>
         val n = row.getLong(0)
         // sum over an EMPTY input is NULL — read the slots null-safely
         // (an empty streaming micro-batch must not NPE the DQ pass)
@@ -720,7 +733,8 @@ object DQEngine {
             if (nonMissing == 0) 1.0 else 1.0 - unexpected.toDouble / nonMissing
           ExpectationOutcome(f.function, f.args, okFraction >= mostly, n, unexpected) -> crit
         }
-      }
+      case _ => Seq.empty
+    }
     // bounded failing-PK collection per failing expectation (reference
     // `dq_factory.py:851-994` chunks these to protect the driver)
     val rowOutcomesWithIdx =
@@ -735,25 +749,14 @@ object DQEngine {
           (o.copy(unexpectedIndexList = sample), crit)
         }
       }
-    // Combined aggregate pass: every aggregate-expressible table
-    // expectation contributes its columns to ONE df.agg action (N
-    // aggregate expectations = one scan); the rest evaluate one by one.
-    val aggPlans = tableFns.map { case (f, crit) => (f, crit, aggExpectation(f)) }
-    val combined: Map[Int, (ExpectationOutcome, Boolean)] = {
-      val planned = aggPlans.zipWithIndex.collect {
-        case ((_, crit, Some((aggs, mk))), i) => (i, crit, aggs, mk)
-      }
-      if (planned.isEmpty) Map.empty
-      else {
-        val allAggs = planned.flatMap(_._3)
-        val row = df.agg(allAggs.head, allAggs.tail: _*).collect()(0)
-        var off = 0
-        planned.map { case (i, crit, aggs, mk) =>
-          val slice = aggs.indices.map(j => row.get(off + j))
-          off += aggs.length
-          i -> (mk(slice), crit)
-        }.toMap
-      }
+    val combined: Map[Int, (ExpectationOutcome, Boolean)] = aggRow.fold(
+        Map.empty[Int, (ExpectationOutcome, Boolean)]) { row =>
+      var off = rowAggs.length
+      planned.map { case (i, crit, aggs, mk) =>
+        val slice = aggs.indices.map(j => row.get(off + j))
+        off += aggs.length
+        i -> (mk(slice), crit)
+      }.toMap
     }
     val tableOutcomes: Seq[(ExpectationOutcome, Boolean)] =
       aggPlans.zipWithIndex.flatMap {

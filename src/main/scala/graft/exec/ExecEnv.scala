@@ -33,9 +33,9 @@ object ExecEnv {
     // Round 19 (measured — OPTIMIZATION_r19.md): let the planner choose
     // shuffled-hash over sort-merge when its size conditions hold, and let
     // AQE rewrite SMJ->SHJ at runtime when every post-shuffle build
-    // partition is under 64 MB. Full-outer merges (q27/q28/q48 family)
-    // cannot broadcast, so they paid two sorts for joins whose build side
-    // fits a partition-local hash map. Suite A/B at sf0.1: untouched-query
+    // partition is under 64 MB. Joins too big to broadcast (full-outer
+    // joins, merges of a large source) paid two sorts for joins whose
+    // build side fits a partition-local hash map. Suite A/B at sf0.1: untouched-query
     // median ratio 0.92 on a 1.14x-slower-cal window; interleaved min-of-4
     // on the five widest movers showed zero regressions. Scale story: the
     // 64 MB threshold bounds the per-partition build exactly like the

@@ -2,16 +2,15 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** Shared machinery for PARTITION-SCOPED rewrites of parquet locations —
   * used by the merge writer and by TableManager's delete-where. The
   * contract: the caller computes which partitions an operation touches and
   * the full new contents of exactly those partitions; this object rewrites
-  * those partition dirs (and only those) via a stage hop + dynamic
-  * partition overwrite, leaving every other partition's files physically
-  * untouched. That is what makes incremental maintenance of a 100 TB
-  * table cost O(touched partitions), not O(table).
+  * those partition dirs (and only those) via one stage write + a rename
+  * of each staged partition dir into place, leaving every other
+  * partition's files physically untouched. That is what makes incremental
+  * maintenance of a 100 TB table cost O(touched partitions), not O(table).
   *
   * Everything here is driver-side dir-walking — deliberately NEVER Spark's
   * O(all partitions) distributed discovery, which is the cost the scoped
@@ -108,44 +107,28 @@ private[graft] object PartitionedRewrite {
 
   /** Rewrite exactly the `touchedNames` partition dirs of `loc` so they
     * afterwards contain `contents` (the FULL new rows of those
-    * partitions). Two-hop: `contents` lands in a stage dir first, then a
-    * stage->live dynamic partition overwrite — the overwriting job never
-    * reads the location it is rewriting (Spark refuses
-    * overwrite-what-you-read, and a mid-job crash must not corrupt live
-    * data). Cost is 2x the TOUCHED data. A touched partition with no rows
-    * in `contents` has its live dir dropped (delete-all case). */
+    * partitions). `contents` is written once, partitioned, to a stage dir
+    * — the writing job never touches the location it reads, and a
+    * mid-job crash leaves live data intact — then
+    * [[StagedSwap.commitPartitions]] renames each staged partition dir
+    * into place. Cost is one write of the TOUCHED data, O(touched), not
+    * O(table). A touched partition with no rows in `contents` has its
+    * live dir dropped (delete-all case). Callers must
+    * [[StagedSwap.recover]] the location before reading it. */
   def overwriteTouched(spark: SparkSession, contents: DataFrame, loc: String,
       partCols: Seq[String], touchedNames: Seq[String], fmt: String,
       options: Map[String, String]): Unit = {
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
     val stage = new Path(loc.stripSuffix("/") + "__stage_parts")
+    val fs = stage.getFileSystem(conf)
     fs.delete(stage, true)
     contents.write.format(fmt).options(options)
       .partitionBy(partCols: _*).mode("overwrite").save(stage.toString)
-    // explicit schema: partition-column types must NOT be re-inferred from
-    // dir names (a string date '0123' must stay a string), and the declared
-    // schema also restores the pre-partitionBy column order
-    val stageDf = spark.read.format(fmt).schema(contents.schema).load(stage.toString)
-      .select(contents.columns.map(col).toSeq: _*)
-    // the write-level option is not honored on every Spark write path, so
-    // pin the session conf for the duration of the overwrite
-    val confKey = "spark.sql.sources.partitionOverwriteMode"
-    val prevMode = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, "dynamic")
-    try stageDf.write.format(fmt).options(options)
-      .partitionBy(partCols: _*)
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").save(loc)
-    finally prevMode match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None => spark.conf.unset(confKey)
-    }
-    // touched partitions emptied entirely produce no stage output, so
-    // their stale live dirs are dropped explicitly
-    val surviving = listPartitionDirs(fs, stage, partCols.size)
-    touchedNames.foreach { rel =>
-      if (!surviving.contains(rel)) fs.delete(new Path(loc, rel), true)
-    }
-    fs.delete(stage, true)
+    // every staged dir replaces its live twin (as a dynamic partition
+    // overwrite would); touched partitions emptied entirely produce no
+    // stage output, so their live dirs are dropped
+    val moves = listPartitionDirs(fs, stage, partCols.size).toSeq.sorted
+    StagedSwap.commitPartitions(conf, loc, stage.toString, moves,
+      touchedNames.filterNot(moves.toSet))
   }
 }

@@ -2,9 +2,12 @@ package graft.io
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import java.nio.charset.StandardCharsets
 
 /** Checked staged-swap commit for whole-directory rewrites (merge,
-  * delete-where, compaction, control-table update, GAB insights).
+  * delete-where, compaction, control-table update, GAB insights), and
+  * its partition-level form for partition-scoped rewrites
+  * ([[commitPartitions]]).
   *
   * Protocol: the caller writes the new contents to `<location>__stage`
   * (or any sibling staging dir) and calls [[commit]]. The swap is NOT
@@ -23,6 +26,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *      target is never left missing;
   *   4. `__old` and the intent are deleted only after the new live path
   *      is verified.
+  *
+  * The partition-level commit follows the same rules under its own marker
+  * `<location>__intent_parts`, which names the stage dir, every staged
+  * partition dir to move into place and every touched partition dir to
+  * drop; [[recover]] rolls it forward the same way.
   *
   * Readers racing the swap can still observe a missing path between the
   * two renames (documented, unavoidable without a transaction log, which
@@ -51,12 +59,62 @@ object StagedSwap {
     }
   }
 
+  private def partsIntentPath(location: String) =
+    new Path(location.stripSuffix("/") + "__intent_parts")
+
+  /** The partition-commit intent: the stage dir on the first line, then
+    * one line per partition dir, `+rel` to move into place, `-rel` to
+    * drop. Plain text, so the list has no size limit. */
+  private[io] def writePartsIntent(fs: FileSystem, location: String, stage: Path,
+      moves: Seq[String], drops: Seq[String]): Unit = {
+    val text = (stage.toString +: (moves.map("+" + _) ++ drops.map("-" + _))).mkString("\n")
+    val out = fs.create(partsIntentPath(location), true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  /** Move each staged partition dir into place, drop the emptied ones,
+    * then clear the stage and the intent. Idempotent, so a recovery can
+    * resume it after a crash at any point: a staged dir still present has
+    * not been moved yet (a rename is atomic per dir), one that is gone
+    * already has. */
+  private def rollPartsForward(fs: FileSystem, location: String, stage: Path,
+      moves: Seq[String], drops: Seq[String]): Unit = {
+    val live = new Path(location.stripSuffix("/"))
+    moves.foreach { rel =>
+      val (src, dst) = (new Path(stage, rel), new Path(live, rel))
+      if (fs.exists(src)) {
+        // Hadoop moves a dir INTO an existing destination, so the live
+        // twin must be gone before the rename
+        fs.delete(dst, true)
+        require(!fs.exists(dst), s"partition commit: cannot remove $dst")
+        fs.mkdirs(dst.getParent)
+        require(fs.rename(src, dst), s"partition commit: rename $src -> $dst failed")
+      } else require(fs.exists(dst), s"partition commit: $src and $dst both missing")
+    }
+    drops.foreach(rel => fs.delete(new Path(live, rel), true))
+    fs.delete(stage, true)
+    fs.delete(partsIntentPath(location), false)
+  }
+
+  /** Commit a partition-level stage: every `moves` dir under `stage`
+    * replaces its twin under `location`, every `drops` dir under
+    * `location` is deleted, and all other partitions stay physically
+    * untouched. The intent is written before the first rename, so a crash
+    * from then on is rolled forward by the next [[recover]]. */
+  def commitPartitions(conf: Configuration, location: String, stage: String,
+      moves: Seq[String], drops: Seq[String]): Unit = {
+    val stagePath = new Path(stage.stripSuffix("/"))
+    val fs = stagePath.getFileSystem(conf)
+    writePartsIntent(fs, location, stagePath, moves, drops)
+    rollPartsForward(fs, location, stagePath, moves, drops)
+  }
+
   /** Settle an interrupted swap at `location`. Returns a short action
     * string for logging/tests: "none" if nothing to do, "forward" if a
-    * declared swap was completed from its stage, "finalize" if only
-    * leftover markers needed clearing, "rollback" if a pre-intent-era
-    * crash was restored from `__old`. Safe to call any time under the
-    * single-writer assumption. */
+    * declared swap (or partition commit) was completed from its stage,
+    * "finalize" if only leftover markers needed clearing, "rollback" if a
+    * pre-intent-era crash was restored from `__old`. Safe to call any
+    * time under the single-writer assumption. */
   def recover(conf: Configuration, location: String): String =
     recoverInternal(conf, location)._1
 
@@ -67,6 +125,17 @@ object StagedSwap {
     val live = new Path(location.stripSuffix("/"))
     val fs = live.getFileSystem(conf)
     val old = oldPath(location)
+    val parts = partsIntentPath(location)
+    if (fs.exists(parts)) {
+      val in = fs.open(parts)
+      val lines = try new String(in.readAllBytes(), StandardCharsets.UTF_8).split("\n").toSeq
+        finally in.close()
+      val stage = new Path(lines.head)
+      val ops = lines.tail
+      rollPartsForward(fs, location, stage,
+        ops.filter(_.startsWith("+")).map(_.tail), ops.filter(_.startsWith("-")).map(_.tail))
+      return ("forward", Some(stage))
+    }
     readIntent(fs, location) match {
       case Some(stage) if fs.exists(stage) =>
         // Intent declared and the staged data is still there: roll the

@@ -330,16 +330,18 @@ object Writers {
     * When the target is PARTITIONED and every partition column exists on
     * the source, the merge is PARTITION-SCOPED: only the partitions the
     * source touches are read (partition-pruned scan), merged, and
-    * rewritten — via Spark's dynamic partition overwrite — while every
-    * other partition's files are left physically untouched. That is what
-    * makes a daily delta load into a 100 TB table cost O(touched
-    * partitions), not O(table). Unpartitioned targets (or > cap touched
+    * rewritten — one stage write, then a rename of each staged partition
+    * dir into place — while every other partition's files are left
+    * physically untouched. That is what makes a daily delta load into a
+    * 100 TB table cost O(touched partitions), not O(table). Unpartitioned targets (or > cap touched
     * partitions, or null partition values) fall back to the full
-    * rewrite + whole-location staged swap. A crash mid-overwrite can
-    * leave a torn (some-partitions-new) table; re-running the same merge
-    * converges — the recency-guarded update/delete predicates the delta
-    * loads use make merges idempotent (the reference's loaded-twice
-    * streaming golden test pins exactly that property). */
+    * rewrite + whole-location staged swap. A crash mid-commit leaves a
+    * torn (some-partitions-new) table only until the next merge or
+    * delete-where, whose [[StagedSwap.recover]] rolls the commit forward
+    * from its intent; re-running the same merge then converges — the
+    * recency-guarded update/delete predicates the delta loads use make
+    * merges idempotent (the reference's loaded-twice streaming golden
+    * test pins exactly that property). */
   private def mergeWrite(spark: SparkSession, spec: OutputSpec, source: DataFrame): Unit = {
     val opts = spec.mergeOpts.getOrElse(sys.error("merge write_type needs merge_opts"))
     val loc = spec.location.getOrElse(sys.error("native merge needs a location"))
@@ -371,7 +373,7 @@ object Writers {
       (if (spec.partitions.nonEmpty) w.partitionBy(spec.partitions: _*) else w).save(loc)
     } else {
       // The DISCOVERED layout (not the declared one) gates partition
-      // scoping: dynamic overwrite only replaces partition DIRS, so
+      // scoping: the partition commit only replaces partition DIRS, so
       // scoping a target whose files actually sit unpartitioned at the
       // root would leave every stale root file in place. A declared-but-
       // different layout falls through to the full rewrite, which
@@ -423,18 +425,17 @@ object Writers {
   }
 
   /** Partition-scoped MERGE: read only the partitions the source touches,
-    * merge, and rewrite exactly those partitions via dynamic partition
-    * overwrite. Returns false (caller falls back to the full rewrite) when
-    * the touched-partition set exceeds the cap or contains nulls.
+    * merge, and rewrite exactly those partitions. Returns false (caller
+    * falls back to the full rewrite) when the touched-partition set
+    * exceeds the cap or contains nulls.
     *
-    * Two-hop write: the merged touched partitions land in a stage dir
-    * first, then a stage->live dynamic overwrite rewrites the touched
-    * partition dirs — the overwriting job never reads the location it is
-    * rewriting (Spark refuses overwrite-what-you-read, and a mid-job crash
-    * must not corrupt live data). Cost is 2x the TOUCHED data, O(touched),
-    * not O(table). A touched partition whose rows are all deleted by the
-    * merge produces no stage output, so its live dir is dropped explicitly
-    * after the overwrite. */
+    * One write: the merged touched partitions land in a stage dir, then
+    * each staged partition dir is renamed into place
+    * ([[PartitionedRewrite.overwriteTouched]]) — the writing job never
+    * writes the location it reads, and a mid-job crash leaves live data
+    * intact. Cost is one write of the TOUCHED data, O(touched), not
+    * O(table). A touched partition whose rows are all deleted by the
+    * merge produces no stage output, so its live dir is dropped. */
   private def partitionScopedMerge(
       spark: SparkSession, spec: OutputSpec, source: DataFrame,
       opts: graft.spec.MergeOptions, mergeFmt: String, loc: String,
@@ -451,7 +452,7 @@ object Writers {
     //    Conservative: any OR in the predicate rejects scoping.
     //  - update/insert column sets must not assign partition columns
     //    (an assigned value could land outside the touched set, and the
-    //    dynamic overwrite would then wipe that un-read live partition).
+    //    commit would then replace that un-read live partition).
     if (!predicatePinsPartitions(opts.mergePredicate, partCols)) return false
     if ((opts.updateColumnSet.keySet ++ opts.insertColumnSet.keySet)
         .exists(partCols.contains)) return false

@@ -62,6 +62,8 @@ final class TableManager(spark: SparkSession) {
     import graft.io.PartitionedRewrite
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(location).getFileSystem(conf)
+    // settle an interrupted commit before reading, as the merge writer does
+    graft.io.StagedSwap.recover(conf, location)
     // a freshly created (never written) table has no data directory yet —
     // deleting from nothing is a no-op, as on an empty Delta table
     if (!fs.exists(new Path(location))) return

@@ -10,16 +10,21 @@ import org.apache.spark.sql.functions._
   * (`lakehouse_engine/io/writers/delta_merge_writer.py:28-210`): matched
   * delete / matched update (full or per-column set, optionally predicated)
   * / not-matched insert (optionally insert_only). This environment ships
-  * no Delta jars, so the engine expresses MERGE as a keyed full-outer join
-  * and the writers persist the result transactionally (stage + swap).
+  * no Delta jars, so the engine expresses MERGE as two joins — a
+  * left-outer join of the target with the source for the matched clauses
+  * (every target row kept) and a left-anti join of the source against the
+  * target for the insert clause — and the writers persist the result
+  * transactionally (stage + rename commit).
   *
-  * Scale notes: the join shuffles both sides on the merge key — the same
-  * partitioning Delta's low-shuffle merge would use for touched files.
-  * Merge conditions are written against struct aliases `t` (target) and
-  * `s` (source); equality conditions on struct fields are extracted by
-  * Catalyst as equi-join keys, so the plan is a shuffle/sort-merge join,
-  * never a cartesian product. For 100 TB targets, pre-bucketing the
-  * target table on the merge key makes this a co-located join.
+  * Scale notes: unlike a full-outer join, the left-outer join can
+  * broadcast a small source (the CDC delta), so the target's rows are
+  * scanned, never shuffled. The anti-join reads only the target columns
+  * the condition names, and builds on them: broadcast when they are
+  * small, shuffled otherwise. Merge conditions are written against struct
+  * aliases `t` (target) and `s` (source); equality conditions on struct
+  * fields are extracted by Catalyst as equi-join keys, so a source too
+  * big to broadcast gives a shuffled hash or sort-merge join, never a
+  * cartesian product.
   */
 object MergeOps {
 
@@ -37,7 +42,7 @@ object MergeOps {
     mergeWithCondition(target, source,
       keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _),
       updateCondition, updateSet, deleteCondition, insertCondition, insertOnly,
-      insertSet, equiKeys = Some(keys.map(_ -> true)))
+      insertSet, equiKeys = Some(keys))
 
   /** MERGE from a declarative [[MergeOptions]] spec whose predicates use
     * the reference's `current.` / `new.` aliases. */
@@ -55,25 +60,24 @@ object MergeOps {
   }
 
   /** When the merge predicate is PURELY a conjunction of same-column
-    * equalities (`current.k = new.k` / `<=>`, either order), the key list
-    * with each key's null-safety — the common CDC-upsert shape, which
-    * lets the multiple-match guard run on the source side instead of the
-    * joined set (see [[mergeWithCondition]]). Any OR, theta conjunct, or
-    * cross-column equality yields None (guard falls back to the general
-    * path). */
-  private[operators] def equiKeysOf(predicate: String): Option[Seq[(String, Boolean)]] = {
+    * equalities (`current.k = new.k` / `<=>`, either order), the key
+    * list — the common CDC-upsert shape, which lets the multiple-match
+    * guard run on the source side instead of the joined set (see
+    * [[mergeWithCondition]]). Any OR, theta conjunct, or cross-column
+    * equality yields None (guard falls back to the general path). */
+  private[operators] def equiKeysOf(predicate: String): Option[Seq[String]] = {
     val p = predicate.toLowerCase(java.util.Locale.ROOT)
     if (p.matches("(?s).*\\bor\\b.*")) return None
     val conjuncts = p.split("\\band\\b").map(_.trim.stripPrefix("(").stripSuffix(")").trim)
     val ident = "([a-z_][a-z0-9_]*)"
-    val fwd = s"current\\.$ident\\s*(=|<=>)\\s*new\\.$ident".r
-    val rev = s"new\\.$ident\\s*(=|<=>)\\s*current\\.$ident".r
+    val fwd = s"current\\.$ident\\s*(?:=|<=>)\\s*new\\.$ident".r
+    val rev = s"new\\.$ident\\s*(?:=|<=>)\\s*current\\.$ident".r
     val keys = conjuncts.toSeq.map {
-      case fwd(a, op, b) if a == b => Some(a -> (op == "<=>"))
-      case rev(a, op, b) if a == b => Some(a -> (op == "<=>"))
+      case fwd(a, b) if a == b => Some(a)
+      case rev(a, b) if a == b => Some(a)
       case _ => None
     }
-    if (keys.forall(_.isDefined) && keys.nonEmpty) Some(keys.flatten.distinctBy(_._1))
+    if (keys.forall(_.isDefined) && keys.nonEmpty) Some(keys.flatten.distinct)
     else None
   }
 
@@ -175,7 +179,7 @@ object MergeOps {
       insertCondition: Option[Column] = None,
       insertOnly: Boolean = false,
       insertSet: Map[String, Column] = Map.empty,
-      equiKeys: Option[Seq[(String, Boolean)]] = None): DataFrame = {
+      equiKeys: Option[Seq[String]] = None): DataFrame = {
     val dataCols = target.columns.toSeq
     val t = target.select(struct(dataCols.map(col): _*).as("t"))
     // the target schema is authoritative: source columns are cast to the
@@ -194,7 +198,10 @@ object MergeOps {
     // the delete clause, or filtered out by the insert predicate, never
     // evaluates the guard for values those clauses don't use.
     val targetTypes = target.schema.map(f => f.name -> f.dataType).toMap
-    val sourceTypes = source.schema.map(f => f.name -> f.dataType).toMap
+    val targetName = dataCols.map(c => c.toLowerCase -> c).toMap
+    // source column type per TARGET column name (case-insensitive match)
+    val sourceTypes = source.schema.flatMap(f =>
+      targetName.get(f.name.toLowerCase).map(_ -> f.dataType)).toMap
     def guardedCast(src: Column, c: String): Column = {
       val tgtType = targetTypes(c)
       val casted = src.cast(tgtType)
@@ -207,12 +214,18 @@ object MergeOps {
     val condRefs: Set[String] = org.apache.spark.sql.graft.ColumnRefs.names(condition)
     def eagerlyCast(c: String): Boolean =
       sourceTypes.get(c).contains(targetTypes(c)) || condRefs.contains(c)
-    val s = source.select(struct(
-      dataCols.map { c =>
-        if (sourceTypes.get(c).contains(targetTypes(c))) col(c).as(c)
-        else if (condRefs.contains(c)) guardedCast(col(c), c).as(c)
-        else col(c).as(c)
-      }: _*).as("s"))
+    // `s` carries EVERY source column, so clause predicates can read
+    // source-only columns (`new.op` where the target has no `op`), as in
+    // Delta; target columns keep the target's name and, when the
+    // condition reads them, the target's type
+    val s = source.select(struct(source.schema.map { f =>
+      targetName.get(f.name.toLowerCase) match {
+        case Some(c) if f.dataType != targetTypes(c) && condRefs.contains(c) =>
+          guardedCast(col(f.name), c).as(c)
+        case Some(c) => col(f.name).as(c)
+        case None => col(f.name).as(f.name)
+      }
+    }: _*).as("s"))
     // target-typed view of the source row, for the branches that assign it
     def sCast = struct(dataCols.map { c =>
       if (eagerlyCast(c)) col(s"s.$c").as(c)
@@ -229,21 +242,19 @@ object MergeOps {
           .getOrElse(lit(null).cast(targetTypes(c))).as(c)
       }: _*)
 
-    if (insertOnly) {
-      // WHEN NOT MATCHED ... INSERT only: the target passes through
-      // untouched (no shuffle, no join) and only the source is anti-joined
-      // against it. This also makes multi-match trivially sound — a target
-      // row matched by N source rows is emitted exactly once, where the
-      // full-outer formulation would emit it once per matched pair.
-      val anti = s.join(t, condition, "left_anti")
-      val filtered = insertCondition.fold(anti)(anti.where)
-      return target.unionAll(
-        filtered.select(insertedStruct.as("r")).select(col("r.*")))
-    }
+    // WHEN NOT MATCHED ... INSERT: source rows with no match, a left-anti
+    // join against the target's condition columns
+    val unmatched = s.join(t, condition, "left_anti")
+    val inserted = insertCondition.fold(unmatched)(unmatched.where)
+      .select(insertedStruct.as("r"))
+    // insert-only: the target passes through untouched (no join at all),
+    // which also makes multi-match trivially sound
+    if (insertOnly) return target.unionAll(inserted.select(col("r.*")))
 
-    val matched = col("t").isNotNull && col("s").isNotNull
-    val sourceOnly = col("t").isNull && col("s").isNotNull
-
+    // WHEN MATCHED: a left-outer join keeps every target row, paired with
+    // its matching source rows (if any). Unlike a full-outer join it can
+    // broadcast the source, so a CDC merge never shuffles the target.
+    //
     // Multiple-match guard, mirroring Delta MERGE's runtime contract
     // (DeltaErrors.multipleSourceRowMatchingTargetRowInMergeException,
     // surfaced by the reference through `delta_merge_writer.py:110-139`):
@@ -253,55 +264,33 @@ object MergeOps {
     // twice is idempotent).
     //
     // Cost model, in order:
+    //  - unconditional delete: no guard, no window;
     //  - pure equi-key merge (the CDC-upsert hot path): per-key source
-    //    multiplicity IS the per-target-row match count, so `__n` is a
-    //    window over the SOURCE ONLY — the guard's extra shuffle moves
-    //    just the source (the small delta in a CDC merge), never the
-    //    target. (The window partitions by the SMJ's own key rewrite so
-    //    the exchange COULD be shared, but Spark pre-projects window
-    //    partition expressions into `_w` aliases, which hides the
-    //    equivalence from EnsureRequirements — hence source-shuffle
-    //    cost, not zero.)
-    //  - general theta condition: a count over the joined set keyed by
-    //    the target-row id (unmatched rows get singleton partitions via
-    //    the unique negative __sid — no skew). One extra shuffle of the
-    //    joined set (target + source), the price Delta pays in its own
-    //    multiple-match detection join.
+    //    multiplicity IS the per-target-row match count (a window
+    //    partition groups NULL keys together, matching `<=>`; a NULL `=`
+    //    key never matches), so `__n` is a window over the SOURCE ONLY,
+    //    below the join — it moves just the source, never the target;
+    //  - general theta condition: a count over the joined set keyed by a
+    //    target-row id, above the join — one extra shuffle of the joined
+    //    set, the price Delta pays in its own multiple-match detection.
     val unconditionalDelete =
       deleteCondition.exists(org.apache.spark.sql.graft.ColumnRefs.isTrueLiteral)
-    val targetTypeCI = target.schema.map(f => f.name.toLowerCase -> f.dataType).toMap
-    // Partition the source-side window by the SAME expressions the SMJ's
-    // key extraction produces — plain `s.k` for `=`, the
-    // `(coalesce(s.k, default), isnull(s.k))` rewrite for `<=>` — so the
-    // window's exchange IS the join's exchange. None when a key's type
-    // has no default literal or the key is unknown (fall back to the
-    // joined-set window).
-    def equiPartExprs(keys: Seq[(String, Boolean)]): Option[Seq[Column]] =
-      scala.util.Try(keys.flatMap { case (k, nullSafe) =>
-        if (nullSafe) Seq(
-          coalesce(col(s"s.$k"), org.apache.spark.sql.graft.ColumnRefs
-            .defaultLiteral(targetTypeCI(k.toLowerCase))),
-          isnull(col(s"s.$k")))
-        else Seq(col(s"s.$k"))
-      }).toOption
-    val joined = (equiKeys.flatMap(equiPartExprs), unconditionalDelete) match {
+    val matched = col("s").isNotNull
+    val joined = (equiKeys, unconditionalDelete) match {
       case (_, true) =>
-        t.join(s, condition, "full_outer").withColumn("__n", lit(1L))
-      case (Some(partExprs), _) =>
+        t.join(s, condition, "left_outer").withColumn("__n", lit(1L))
+      case (Some(keys), _) =>
         val sw = s.withColumn("__n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(partExprs: _*)))
-        t.join(sw, condition, "full_outer")
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(keys.map(k => col(s"s.$k")): _*)))
+        t.join(sw, condition, "left_outer")
       case (None, _) =>
-        // row identities exist ONLY on this path — the tiered fast paths
-        // never pay for them: __tid names the target row the count is
-        // per; the unique negative __sid gives every unmatched row its
-        // own singleton window partition (no skew, no collision)
-        val tt = t.withColumn("__tid", monotonically_increasing_id())
-        val ss = s.withColumn("__sid", -monotonically_increasing_id() - 1L)
-        tt.join(ss, condition, "full_outer").withColumn("__n",
-          count(when(matched, lit(1))).over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(coalesce(col("__tid"), col("__sid")))))
+        // __tid names the target row the count is per; only this path
+        // pays for row identities
+        t.withColumn("__tid", monotonically_increasing_id())
+          .join(s, condition, "left_outer")
+          .withColumn("__n", count(when(matched, lit(1))).over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col("__tid"))))
     }
 
     val updatedStruct =
@@ -325,13 +314,9 @@ object MergeOps {
           " cannot be applied deterministically (Delta MERGE" +
           " multiple-source-row-match contract)"))))
       .when(matched, matchedResult)
-      .when(sourceOnly,
-        insertCondition match {
-          case Some(i) => when(i, insertedStruct).otherwise(lit(null))
-          case None => insertedStruct
-        })
       .otherwise(col("t"))
 
-    joined.select(keep.as("r")).where(col("r").isNotNull).select(col("r.*"))
+    joined.select(keep.as("r")).where(col("r").isNotNull)
+      .unionAll(inserted).select(col("r.*"))
   }
 }

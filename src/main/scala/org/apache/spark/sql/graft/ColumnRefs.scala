@@ -11,14 +11,6 @@ object ColumnRefs {
   def names(c: Column): Set[String] =
     ExpressionUtils.expression(c).references.map(_.name).toSet
 
-  /** Column wrapping the type's default ("zero") literal — the exact value
-    * Catalyst substitutes when rewriting null-safe-equality join keys to
-    * `(coalesce(k, default), isnull(k))`, so a caller can reproduce that
-    * rewrite and share the join's hash partitioning. */
-  def defaultLiteral(dt: org.apache.spark.sql.types.DataType): Column =
-    ExpressionUtils.column(
-      org.apache.spark.sql.catalyst.expressions.Literal.default(dt))
-
   /** Whether the column is the literal TRUE (an unconditional predicate).
     * Matched on the Column's node (Spark 4 Columns carry a lazily-analyzed
     * ColumnNode; the Catalyst expression is not evaluable pre-analysis).

@@ -43,4 +43,20 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.hostSettling(Seq(100.0, 50.0)))
     assert(!Bench.hostSettling(Nil))
   }
+
+  test("readPrev refuses a previous record from another forcing convention") {
+    def record(forcing: String) = {
+      val p = java.nio.file.Files.createTempFile("bench-prev", ".json")
+      java.nio.file.Files.writeString(p, s"""{"value":10.0,"cpu_cal_sec":1.0,""" +
+        s""""io_cal_sec":2.0,"sf":"/sf"$forcing,"queries":{"q01":1.5}}""")
+      p
+    }
+    assert(Bench.readPrev("/sf", record(s""","forcing":"${Bench.Forcing}"""")) ==
+      Some((10.0, 1.0, 2.0, Map("q01" -> 1.5))))
+    // the count() convention, and records that predate the field
+    assert(Bench.readPrev("/sf", record(""","forcing":"count"""")).isEmpty)
+    assert(Bench.readPrev("/sf", record("")).isEmpty)
+    // another scale factor is refused as before
+    assert(Bench.readPrev("/other", record(s""","forcing":"${Bench.Forcing}"""")).isEmpty)
+  }
 }

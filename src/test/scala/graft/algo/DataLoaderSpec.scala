@@ -691,6 +691,27 @@ class DataLoaderSpec extends SparkSpec {
       .count(_.getPath.getName.endsWith(".parquet")) > 1)
   }
 
+  test("optimize_dataset on a partitioned location keeps the partition layout") {
+    import spark.implicits._
+    import graft.spec.TerminatorSpec
+    val loc = tmpDir("termopt-parts") + "/t"
+    (1 to 120).map(i => (i.toLong, i % 3, s"r${i % 2}")).toDF("v", "day", "region")
+      .repartition(6).write.partitionBy("day", "region").mode("overwrite").parquet(loc)
+    val before = spark.read.parquet(loc).as[(Long, Int, String)].collect().sorted.toSeq
+    Terminators.run(spark, TerminatorSpec("optimize_dataset", Map("location" -> loc)))
+    val root = new org.apache.hadoop.fs.Path(loc)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(graft.io.PartitionedRewrite.discoverLayout(fs, root) == Seq("day", "region"))
+    assert(fs.listStatus(root).count(_.getPath.getName.endsWith(".parquet")) == 0,
+      "compaction wrote data files at the root")
+    // one file per partition dir, and the same rows
+    val dirs = graft.io.PartitionedRewrite.listPartitionDirs(fs, root, 2)
+    assert(dirs.size == 6)
+    dirs.foreach(d => assert(fs.listStatus(new org.apache.hadoop.fs.Path(root, d))
+      .count(_.getPath.getName.endsWith(".parquet")) == 1, d))
+    assert(spark.read.parquet(loc).as[(Long, Int, String)].collect().sorted.toSeq == before)
+  }
+
   test("tokenizer-to-shards: bpe_tokenize -> sequence_pack + shard_export through one ACON") {
     import spark.implicits._
     val docs = Seq(

@@ -28,6 +28,46 @@ class DQEngineSpec extends SparkSpec {
     assert(!r.success)
   }
 
+  test("row and aggregate table expectations share one SQL execution") {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.analyzed.toString)
+      def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        seen.add(qe.analyzed.toString)
+    }
+    // listener events arrive asynchronously, in order: bracket the run
+    // with two marker actions and count the executions between them
+    def mark(m: String): Unit = {
+      spark.range(1).select(org.apache.spark.sql.functions.lit(m).as("m")).collect()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.toArray.exists(_.toString.contains(m)) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.toArray.exists(_.toString.contains(m)), s"no event for $m")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      mark("dq-start-marker")
+      val r = DQEngine.run(spark, df, spec(
+        "expect_column_values_to_not_be_null" -> Map("column" -> "name"),
+        "expect_column_values_to_be_between" -> Map("column" -> "amount", "min_value" -> 0),
+        "expect_table_row_count_to_be_between" -> Map("min_value" -> 1),
+        "expect_column_max_to_be_between" -> Map("column" -> "amount", "max_value" -> 100)))
+      mark("dq-end-marker")
+      val between = seen.toArray.map(_.toString)
+        .dropWhile(!_.contains("dq-start-marker")).drop(1)
+        .takeWhile(!_.contains("dq-end-marker"))
+      assert(between.length == 1, between.mkString("\n---\n"))
+      val byFn = r.outcomes.map(o => o.function -> o).toMap
+      assert(byFn("expect_column_values_to_not_be_null").unexpectedCount == 1)
+      assert(!byFn("expect_column_values_to_be_between").success)
+      assert(byFn("expect_table_row_count_to_be_between").success)
+      assert(byFn("expect_column_max_to_be_between").success)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("mostly threshold tolerates a failing fraction") {
     val r = DQEngine.run(spark, df, spec(
       "expect_column_values_to_not_be_null" -> Map("column" -> "name", "mostly" -> 0.7)))

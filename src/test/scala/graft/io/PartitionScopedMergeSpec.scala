@@ -3,6 +3,7 @@ package graft.io
 import graft.SparkSpec
 import graft.spec.{MergeOptions, OutputSpec}
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import scala.jdk.CollectionConverters._
 
@@ -82,6 +83,41 @@ class PartitionScopedMergeSpec extends SparkSpec {
     assert(out.count() == 5)
     assert(out.where("day = 40 AND id = 9").count() == 1)
     before.foreach { case (r, fs) => assert(files(loc, r) == fs, s"$r was rewritten") }
+  }
+
+  test("an interrupted partition commit rolls forward; a retried merge gives the same table") {
+    val base = tmpDir("psm-crash")
+    val (done, torn) = (s"$base/done", s"$base/torn")
+    initTarget(done)
+    initTarget(torn)
+    // touches day=10 (update), day=20 (deletes its only row), day=40 (new)
+    val src = Seq((1, "a2", 10, "U"), (3, "c", 20, "D"), (9, "z", 40, "U"))
+      .toDF("id", "name", "day", "op")
+    // a delta load's merge: a delete of a missing row is not an insert,
+    // so applying the same batch twice is idempotent
+    def merge(loc: String): Unit = Writers.write(spark, mergeSpec(loc).copy(
+      mergeOpts = mergeSpec(loc).mergeOpts.map(_.copy(insertPredicate = Some("new.op <> 'D'")))),
+      src)
+    merge(done)
+    def rows(loc: String) =
+      spark.read.parquet(loc).as[(Int, String, String, Int)].collect().sortBy(_._1).toSeq
+    val expected = rows(done)
+    // the same merge on `torn`, cut after its intent and ONE of its renames
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(torn).getFileSystem(conf)
+    val stage = new Path(torn + "__stage_parts")
+    spark.read.parquet(done).where("day IN (10, 40)")
+      .write.partitionBy("day").parquet(stage.toString)
+    StagedSwap.writePartsIntent(fs, torn, stage, Seq("day=10", "day=40"), Seq("day=20"))
+    fs.delete(new Path(torn, "day=10"), true)
+    assert(fs.rename(new Path(stage, "day=10"), new Path(torn, "day=10")))
+    assert(StagedSwap.recover(conf, torn) == "forward")
+    assert(!fs.exists(stage) && !fs.exists(new Path(torn + "__intent_parts")))
+    assert(!Files.exists(Paths.get(torn, "day=20")), "dropped partition survived recovery")
+    assert(rows(torn) == expected)
+    assert(StagedSwap.recover(conf, torn) == "none")
+    merge(torn)
+    assert(rows(torn) == expected, "a retried merge changed the recovered table")
   }
 
   test("multi-column partitioning scopes on the tuple") {
