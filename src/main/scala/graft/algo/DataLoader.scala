@@ -103,23 +103,12 @@ final class DataLoader(
         // PRISMA rules resolve only where they run: streaming specs
         // re-resolve at plan time (buildMicroBatchPlan) — resolving them
         // here too would double the rules-table reads for nothing
-        val dq = resolvePrisma(spec)
-        val (result, failure) = DQEngine.runOutcome(spark, df, dq)
-        dq.resultSink.foreach { sink =>
-          val sdf = DQEngine.resultSinkOutput(spark, df, dq, result)
-          Writers.writeBatch(spark, DQEngine.resultSinkSpec(dq, sink), sdf)
-        }
-        graft.dq.Prisma.writeProcessedKeys(spark, dq, df, result.runName)
-        // the failed run's results land in the sink BEFORE the policy
-        // raises (reference dq_factory.py _process_chunk order)
-        failure.foreach(throw _)
         // The validated (optionally tagged) frame registers under the DQ
         // spec's OWN id only — reference semantics (`data_loader.py:175`
         // stores `dfs[dq_spec.spec_id]`); the input spec's frame stays
         // untouched, so an output chaining on the INPUT id keeps writing
         // the untagged schema.
-        data(dq.specId) =
-          if (dq.tagSourceData) DQEngine.tagSource(df, dq, result) else df
+        data(spec.specId) = runDq(df, resolvePrisma(spec))
       } else {
         // Streaming DQ runs inside foreachBatch (see write()); the spec
         // id aliases the stream for downstream chaining.
@@ -127,6 +116,22 @@ final class DataLoader(
       }
     }
     this
+  }
+
+  /** One DQ step, batch or micro-batch: run the expectations, write the
+    * result sink and the processed keys, raise a failed run, and return
+    * the validated (optionally tagged) frame. The failed run's results
+    * land in the sink BEFORE the policy raises (reference dq_factory.py
+    * _process_chunk order). */
+  private def runDq(df: DataFrame, dq: DQSpec): DataFrame = {
+    val (result, failure) = DQEngine.runOutcome(spark, df, dq)
+    dq.resultSink.foreach { sink =>
+      val sdf = DQEngine.resultSinkOutput(spark, df, dq, result)
+      Writers.writeBatch(spark, DQEngine.resultSinkSpec(dq, sink), sdf)
+    }
+    graft.dq.Prisma.writeProcessedKeys(spark, dq, df, result.runName)
+    failure.foreach(throw _)
+    if (dq.tagSourceData) DQEngine.tagSource(df, dq, result) else df
   }
 
   /** PRISMA resolution at the load execution point
@@ -231,16 +236,7 @@ final class DataLoader(
       val transformed = deferred.foldLeft(batch) { case (df, (tr, _)) =>
         df.transform(Transformers.resolve(tr.function, tr.args, ctx))
       }
-      streamingDqs.foldLeft(transformed) { (df, dq) =>
-        val (result, failure) = DQEngine.runOutcome(spark, df, dq)
-        dq.resultSink.foreach { sink =>
-          val sdf = DQEngine.resultSinkOutput(spark, df, dq, result)
-          Writers.writeBatch(spark, DQEngine.resultSinkSpec(dq, sink), sdf)
-        }
-        graft.dq.Prisma.writeProcessedKeys(spark, dq, df, result.runName)
-        failure.foreach(throw _)
-        if (dq.tagSourceData) DQEngine.tagSource(df, dq, result) else df
-      }
+      streamingDqs.foldLeft(transformed)(runDq)
     })
   }
 
@@ -341,32 +337,5 @@ object Terminators {
       graft.operators.ChangeCapture.exposeCdf(spark, spec.args)
     case other =>
       throw new IllegalArgumentException(s"unknown terminator: $other")
-  }
-}
-
-/** Small-file compaction for parquet locations (the OSS stand-in for
-  * Delta OPTIMIZE in this build). A hive-partitioned location keeps its
-  * layout: rows are hashed on the partition columns, so each partition
-  * dir is rewritten as one file. */
-object FileCompaction {
-  def compact(spark: SparkSession, location: String, targetPartitions: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(location)
-    val partCols = graft.io.PartitionedRewrite.discoverLayout(root.getFileSystem(conf), root)
-    val df = spark.read.parquet(location)
-    val files = df.inputFiles
-    val n = if (targetPartitions > 0) targetPartitions
-      else math.max(1, (files.length / 8.0).ceil.toInt)
-    val stage = location.stripSuffix("/") + "__compact"
-    if (partCols.isEmpty) df.repartition(n).write.mode("overwrite").parquet(stage)
-    else {
-      // at least one task per partition dir, so the per-dir files are
-      // written in parallel rather than queued behind a few tasks
-      val dirs = files.map(f => new Path(f).getParent.toString).distinct.length
-      df.repartition(math.max(n, dirs), partCols.map(org.apache.spark.sql.functions.col): _*)
-        .write.partitionBy(partCols: _*).mode("overwrite").parquet(stage)
-    }
-    graft.io.StagedSwap.commit(conf, location, stage)
   }
 }

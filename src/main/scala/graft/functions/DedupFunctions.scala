@@ -265,7 +265,10 @@ object DedupFunctions {
     // (every edit changes the length by at most 1) prunes candidates
     // BEFORE the O(len^2) verify — §3 "cheap predicate before expensive
     // verify"; rows with the length gap over maxEdits can never pass the
-    // edits filter, so the result set is identical.
+    // edits filter, so the result set is identical. The regroup also
+    // counts the text rows per side: an id with two rows has no single
+    // text to compare, so the query fails naming `idCol` instead of
+    // keeping one arbitrary text.
     val sides = cands.select(col("id_a"), col("id_b"), col("hamming"),
       explode(array(
         struct(lit(0).as("side"), col("id_a").as("id")),
@@ -275,8 +278,17 @@ object DedupFunctions {
     val txt = df.select(col(idCol).as("id"), col(textCol).as("__t"))
     sides.join(txt, Seq("id"))
       .groupBy(col("id_a"), col("id_b"), col("hamming"))
-      .agg(max(when(col("side") === 0, col("__t"))).as("text_a"),
-        max(when(col("side") === 1, col("__t"))).as("text_b"))
+      .agg(max(when(col("side") === 0, col("__t"))).as("__a"),
+        max(when(col("side") === 1, col("__t"))).as("__b"),
+        count(when(col("side") === 0, 1)).as("__na"),
+        count(when(col("side") === 1, 1)).as("__nb"))
+      .select(col("id_a"), col("id_b"), col("hamming"),
+        when(col("__na") > 1 || col("__nb") > 1, raise_error(concat(
+          lit(s"editDistancePairs: ids in column '$idCol' must be unique; id "),
+          when(col("__na") > 1, col("id_a")).otherwise(col("id_b")).cast("string"),
+          lit(" has more than one row"))))
+          .otherwise(col("__a")).as("text_a"),
+        col("__b").as("text_b"))
       .where(abs(length(col("text_a")) - length(col("text_b"))) <= maxEdits)
       .select(col("id_a"), col("id_b"), col("hamming"),
         levenshtein(col("text_a"), col("text_b")).cast("long").as("edits"))
@@ -913,8 +925,7 @@ object DedupFunctions {
       indexPath: String,
       targetFileBytes: Long = 128L << 20): graft.maintain.IndexMaintenance.CompactionResult =
     graft.maintain.IndexMaintenance.compactIndex(
-      spark, indexPath, partitionBy = Nil, distinctRows = true,
-      targetFileBytes = targetFileBytes)
+      spark, indexPath, distinctRows = true, targetFileBytes = targetFileBytes)
 
   /** Tokenize with the split fenced (one evaluation feeds every
     * downstream use — PlanAuditSpec gates the duplication); empty and
@@ -1005,25 +1016,19 @@ object DedupFunctions {
     * at 2000x, same host window — more shuffle files on every exchange
     * of an 8-exchange pipeline), so the over-provision is scoped to the
     * operators whose exchange provably needs it. Source bytes come from
-    * the optimizer's plan statistics; when the plan has no usable
+    * the optimizer's plan statistics — a localCheckpointed input (lazy or
+    * eager) carries its origin plan's statistics, so the curation chain
+    * (filter → checkpoint → dedup) sizes too; when the plan has no usable
     * estimate (the Long.MaxValue default), the operator keeps the
-    * session setting — the pre-r17 plan, verbatim.
+    * session setting.
     *
     * Note: forcing `optimizedPlan` here runs the analyzer/optimizer on
     * the input lineage at DataFrame BUILD time (before any action) — a
     * deliberate driver-side cost, bounded by plan depth, paid once per
     * operator construction. */
   private def fingerprintPartitions(src: DataFrame, expansion: Double): Option[Int] =
-    if (adaptivePartitionsOff(src.sparkSession)) None
-    else partitionsForBytes(src.sparkSession, fingerprintSourceBytes(src), expansion)
-
-  /** Kill switch (session conf): pins the pre-r17 static-partition plan.
-    * Parsed tolerantly — only an explicit case-insensitive "false"/"0"
-    * disables; any other junk value keeps the default-on behavior
-    * rather than crashing operator construction. */
-  private def adaptivePartitionsOff(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption("graft.window.adaptivePartitions")
-      .exists(v => v.trim.equalsIgnoreCase("false") || v.trim == "0")
+    partitionsForBytes(src.sparkSession,
+      src.queryExecution.optimizedPlan.stats.sizeInBytes, expansion)
 
   /** The sizing arithmetic of [[fingerprintPartitions]], split out so the
     * cascade can feed it DECAYED byte estimates (survivor fraction of the
@@ -1038,37 +1043,6 @@ object DedupFunctions {
         math.ceil(size.toDouble * expansion / (64L << 20).toDouble)).toInt
       if (n > default) Some(n) else None
     }
-  }
-
-  /** Source-byte estimate feeding [[fingerprintPartitions]]: the
-    * optimizer's plan statistics when usable, else (round 18) the block
-    * manager's materialized byte count for a localCheckpointed input —
-    * the realistic curation-chain case (filter → checkpoint → dedup)
-    * where the optimizer estimate is the defaultSizeInBytes sentinel and
-    * the proportional sizing previously went dark exactly where
-    * pipelines need it most. The checkpoint's blocks bound any plan
-    * built ON TOP of it from above (downstream stages only shrink), the
-    * same argument the cascade already makes for reusing stage-1 parts.
-    * Memory blocks report uncompressed bytes where parquet stats report
-    * compressed — both feed the same order-of-magnitude sizing and the
-    * clamp bounds the tails. */
-  private def fingerprintSourceBytes(src: DataFrame): BigInt = {
-    val stats = src.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (stats > 0 && stats <= BigInt(1L << 50)) return stats
-    // Round 19 (r18 advice): SUM block-manager bytes across ALL
-    // LogicalRDD leaves — a lineage joining two checkpointed frames
-    // previously sized its exchange from whichever leaf collectFirst
-    // happened to visit. Block-manager bytes are UNCOMPRESSED where
-    // parquet stats are compressed, so this path over-estimates — the
-    // safe direction (more, smaller sort partitions), bounded by the
-    // 4096-partition clamp in [[partitionsForBytes]].
-    val ids = src.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-    }
-    val info = src.sparkSession.sparkContext.getRDDStorageInfo
-    val total = ids.flatMap(id => info.find(_.id == id))
-      .map(i => BigInt(i.memSize + i.diskSize)).sum
-    if (total > 0) total else stats
   }
 
   /** Fingerprint expansion of the span family relative to (typically
@@ -1214,21 +1188,12 @@ object DedupFunctions {
     // vs 32 cores) and this removes one of its fixed jobs.
     val based = df.select(col(idCol).as("id"), col(textCol).as("__text"))
       .localCheckpoint(false)
-    val adaptiveOff = adaptivePartitionsOff(spark)
     // Compressed-calibration bytes for the window sizing: the input's
-    // own plan stats when usable (parquet-compressed — what
-    // SpanKeyExpansion is calibrated against), else the checkpoint's
-    // block-manager bytes scaled down by a nominal uncompressed:parquet
-    // ratio. Token estimates derive from the same figure (~2 compressed
-    // bytes per token — see SpanKeyExpansion's scaladoc); the decay only
-    // needs order-of-magnitude.
-    // (r20: the fallback reads the INPUT lineage's checkpointed leaves —
-    // the curation-chain case the r18 fix targeted — because `based` is
-    // now lazily checkpointed and has no blocks until stage 1 runs.)
-    val dfStats = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val baseBytes: BigInt =
-      if (dfStats > 0 && dfStats <= BigInt(1L << 50)) dfStats
-      else fingerprintSourceBytes(df) / 4
+    // own plan stats (parquet-compressed — what SpanKeyExpansion is
+    // calibrated against). Token estimates derive from the same figure
+    // (~2 compressed bytes per token — see SpanKeyExpansion's scaladoc);
+    // the decay only needs order-of-magnitude.
+    val baseBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     var acc: DataFrame = null
     var droppedTokens = 0L
     var accRows = 0L
@@ -1247,18 +1212,13 @@ object DedupFunctions {
       if (accRows + droppedTokens / 8 <= cascadeBroadcastLimit(spark)) broadcast(acc)
       else acc.hint("shuffle_hash")
     ordered.foreach { k =>
-      val parts =
-        if (adaptiveOff) None
-        else {
-          // stage 1 sizes from the full corpus; later stages decay by
-          // the measured drop counts (distinct starts cover distinct
-          // positions, so the sum under-counts dropped tokens and the
-          // next exchange over-sizes — the safe direction), restoring
-          // the AQE-coalescible natural exchange on small tails.
-          val droppedBytes = BigInt(droppedTokens) * 2
-          partitionsForBytes(spark,
-            (baseBytes - droppedBytes).max(BigInt(0)), SpanKeyExpansion)
-        }
+      // stage 1 sizes from the full corpus; later stages decay by the
+      // measured drop counts (distinct starts cover distinct positions, so
+      // the sum under-counts dropped tokens and the next exchange
+      // over-sizes — the safe direction), restoring the AQE-coalescible
+      // natural exchange on small tails.
+      val parts = partitionsForBytes(spark,
+        (baseBytes - BigInt(droppedTokens) * 2).max(BigInt(0)), SpanKeyExpansion)
       // Stage windows: stage 1 windows the checkpointed text directly;
       // later stages REPLAY the accumulated narrow drops against the
       // original tokens and emit the cleaned text's windows in the same

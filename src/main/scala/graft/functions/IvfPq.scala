@@ -156,8 +156,7 @@ final class IvfPqIndex private[functions] (
       targetFileBytes: Long = 128L << 20): IvfPqIndex = {
     val spark = codes.sparkSession
     graft.maintain.IndexMaintenance.compactIndex(
-      spark, location, partitionBy = Seq("cell"),
-      targetFileBytes = targetFileBytes)
+      spark, location, targetFileBytes = targetFileBytes)
     new IvfPqIndex(
       spark.read.parquet(location)
         .select(col("id"), col("cell").cast("long").as("cell"), col("codes")),

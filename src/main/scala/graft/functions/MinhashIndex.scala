@@ -59,8 +59,7 @@ final class MinhashIndex private (
   def compact(spark: SparkSession,
       targetFileBytes: Long = 128L << 20): graft.maintain.IndexMaintenance.CompactionResult =
     graft.maintain.IndexMaintenance.compactIndex(
-      spark, location, partitionBy = Seq("band"),
-      targetFileBytes = targetFileBytes)
+      spark, location, targetFileBytes = targetFileBytes)
 
   /** Near-duplicate pairs of `batch` documents against the INDEXED corpus
     * (including documents appended earlier): (batch_id, corpus_id,

@@ -2,20 +2,118 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Shared machinery for PARTITION-SCOPED rewrites of parquet locations —
-  * used by the merge writer and by TableManager's delete-where. The
-  * contract: the caller computes which partitions an operation touches and
-  * the full new contents of exactly those partitions; this object rewrites
-  * those partition dirs (and only those) via one stage write + a rename
-  * of each staged partition dir into place, leaving every other
-  * partition's files physically untouched. That is what makes incremental
-  * maintenance of a 100 TB table cost O(touched partitions), not O(table).
+/** The one staged-rewrite path for parquet locations — merge,
+  * delete-where, optimize (compaction and Z-order) and index compaction
+  * all commit through it, in one of two shapes:
   *
-  * Everything here is driver-side dir-walking — deliberately NEVER Spark's
+  *   - [[rewriteAll]]: the whole location is read, transformed, written
+  *     to a stage dir with its partition layout and swapped in by
+  *     [[StagedSwap.commit]];
+  *   - [[resolveTouched]] + [[rewriteTouched]]: only the partitions an
+  *     operation touches are read and rewritten, via one stage write + a
+  *     rename of each staged partition dir into place, leaving every other
+  *     partition's files physically untouched. That is what makes
+  *     incremental maintenance of a 100 TB table cost O(touched
+  *     partitions), not O(table).
+  *
+  * Both settle an interrupted commit ([[StagedSwap.recover]]) before they
+  * read: [[rewriteAll]] itself, the scoped shape in its callers, which
+  * must recover before they resolve.
+  *
+  * The dir-walking here is driver-side — deliberately NEVER Spark's
   * O(all partitions) distributed discovery, which is the cost the scoped
   * paths exist to avoid. */
 private[graft] object PartitionedRewrite {
+
+  /** Most partitions one scoped operation may touch; past it the touched
+    * set is not collected and the operation is not scopable. */
+  val TouchedCap = 10000
+
+  /** What an operation touches, as [[resolveTouched]] answers it. */
+  sealed trait Touched
+  /** No row lands in any partition. */
+  case object NothingTouched extends Touched
+  /** Not scopable: more than [[TouchedCap]] partitions, a null or
+    * escaping value, or a live dir spelled differently from a touched
+    * value. */
+  case object NotScopable extends Touched
+  /** The touched `c1=v1/c2=v2` dirs, and every live partition dir. */
+  final case class TouchedDirs(names: Seq[String], live: Set[String]) extends Touched
+
+  /** The partitions of `loc` (layout `partCols`) that the rows of `keys`
+    * land in — a bounded driver collect of their distinct partition
+    * tuples (cap + 1 detects overflow without draining). Touched dir
+    * names are constructed from the VALUE TEXT, so unescapable values,
+    * nulls and spelling collisions answer [[NotScopable]]. */
+  def resolveTouched(fs: FileSystem, loc: String, partCols: Seq[String],
+      keys: DataFrame): Touched = {
+    val rows = keys.select(partCols.map(col): _*).distinct().limit(TouchedCap + 1).collect()
+    if (rows.isEmpty) NothingTouched
+    else if (rows.length > TouchedCap ||
+        rows.exists(r => partCols.indices.exists(r.isNullAt))) NotScopable
+    else touchedNames(partCols,
+        rows.map(r => partCols.indices.map(i => String.valueOf(r.get(i)))).toSeq) match {
+      case None => NotScopable
+      case Some(names) =>
+        val live = listPartitionDirs(fs, new Path(loc), partCols.size)
+        if (spellingCollision(live, names)) NotScopable else TouchedDirs(names, live)
+    }
+  }
+
+  /** Rewrite the `touched` partitions of `loc` to `transform` of their
+    * live rows (the FULL new rows of those partitions). ONLY those dirs
+    * are read (basePath keeps the partition columns); when none of them
+    * is live yet, `transform` gets an empty frame with the table's schema.
+    * The result is written once, partitioned, to a stage dir — the
+    * writing job never touches the location it reads, and a mid-job
+    * crash leaves live data intact — then [[StagedSwap.commitPartitions]]
+    * renames each staged partition dir into place. Cost is one write of
+    * the TOUCHED data, O(touched), not O(table). A touched partition that
+    * `transform` leaves empty has its live dir dropped. */
+  def rewriteTouched(spark: SparkSession, loc: String, partCols: Seq[String],
+      touched: TouchedDirs, fmt: String = "parquet",
+      options: Map[String, String] = Map.empty)(transform: DataFrame => DataFrame): Unit = {
+    val base = loc.stripSuffix("/")
+    val reader = spark.read.format(fmt).option("basePath", loc)
+    val existing = touched.names.filter(touched.live)
+    val slice =
+      if (existing.nonEmpty) reader.load(existing.map(n => s"$base/$n"): _*)
+      else reader.load(s"$base/${touched.live.head}").limit(0)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val stage = new Path(base + "__stage_parts")
+    val fs = stage.getFileSystem(conf)
+    fs.delete(stage, true)
+    transform(slice).write.format(fmt).options(options)
+      .partitionBy(partCols: _*).mode("overwrite").save(stage.toString)
+    // every staged dir replaces its live twin (as a dynamic partition
+    // overwrite would); touched partitions emptied entirely produce no
+    // stage output, so their live dirs are dropped
+    val moves = listPartitionDirs(fs, stage, partCols.size).toSeq.sorted
+    StagedSwap.commitPartitions(conf, loc, stage.toString, moves,
+      touched.names.filterNot(moves.toSet))
+  }
+
+  /** Rewrite all of `loc`: settle an interrupted commit, read the
+    * location, write `transform` of its rows to `<loc>__stage` with the
+    * `declared` layout (the discovered one when none is declared) and
+    * swap the stage in with [[StagedSwap.commit]]. `transform` also gets
+    * the layout its output is written with. */
+  def rewriteAll(spark: SparkSession, loc: String, fmt: String = "parquet",
+      options: Map[String, String] = Map.empty, declared: Seq[String] = Nil)(
+      transform: (DataFrame, Seq[String]) => DataFrame): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    StagedSwap.recover(conf, loc)
+    val root = new Path(loc)
+    val layout =
+      if (declared.nonEmpty) declared else discoverLayout(root.getFileSystem(conf), root)
+    val stage = loc.stripSuffix("/") + "__stage"
+    val w = transform(spark.read.format(fmt).load(loc), layout)
+      .write.format(fmt).options(options).mode("overwrite")
+    (if (layout.nonEmpty) w.partitionBy(layout: _*) else w).save(stage)
+    StagedSwap.commit(conf, loc, stage)
+  }
 
   /** Partition-column names read off the directory structure (first
     * `c=v`-shaped chain), driver-side. Empty for unpartitioned layouts. */
@@ -68,7 +166,7 @@ private[graft] object PartitionedRewrite {
     * catalog escapes), so constructed dir names line up with what
     * `partitionBy` wrote for plain values; exotic values that escape
     * differently only make the stale-dir delete a no-op, never wrong. */
-  def escapePartitionValue(v: String): String =
+  private def escapePartitionValue(v: String): String =
     v.flatMap { c =>
       if (c >= 'a' && c <= 'z' || c >= 'A' && c <= 'Z' || c >= '0' && c <= '9' ||
         "_-.".contains(c)) c.toString
@@ -78,7 +176,7 @@ private[graft] object PartitionedRewrite {
   /** `c1=v1/c2=v2` names for the touched tuples, or None when any value's
     * text would escape ('/', spaces, '%', '=') — falling back beats
     * reasoning about escaping mismatches. */
-  def touchedNames(partCols: Seq[String], values: Seq[Seq[String]]): Option[Seq[String]] =
+  private def touchedNames(partCols: Seq[String], values: Seq[Seq[String]]): Option[Seq[String]] =
     if (values.exists(_.exists(v => escapePartitionValue(v) != v))) None
     else Some(values.map(vs =>
       partCols.zip(vs).map { case (c, v) => s"$c=$v" }.mkString("/")))
@@ -98,37 +196,10 @@ private[graft] object PartitionedRewrite {
     * spellings live side by side) would be shadowed by — or wrongly
     * deleted beside — the canonical dir the scoped rewrite writes.
     * Untouched partitions with odd names are harmless. */
-  def spellingCollision(live: Set[String], touched: Seq[String]): Boolean = {
+  private def spellingCollision(live: Set[String], touched: Seq[String]): Boolean = {
     val liveByCanon = live.groupBy(canon)
     touched.exists { t =>
       liveByCanon.get(canon(t)).exists(g => g.size > 1 || g.head != t)
     }
-  }
-
-  /** Rewrite exactly the `touchedNames` partition dirs of `loc` so they
-    * afterwards contain `contents` (the FULL new rows of those
-    * partitions). `contents` is written once, partitioned, to a stage dir
-    * — the writing job never touches the location it reads, and a
-    * mid-job crash leaves live data intact — then
-    * [[StagedSwap.commitPartitions]] renames each staged partition dir
-    * into place. Cost is one write of the TOUCHED data, O(touched), not
-    * O(table). A touched partition with no rows in `contents` has its
-    * live dir dropped (delete-all case). Callers must
-    * [[StagedSwap.recover]] the location before reading it. */
-  def overwriteTouched(spark: SparkSession, contents: DataFrame, loc: String,
-      partCols: Seq[String], touchedNames: Seq[String], fmt: String,
-      options: Map[String, String]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val stage = new Path(loc.stripSuffix("/") + "__stage_parts")
-    val fs = stage.getFileSystem(conf)
-    fs.delete(stage, true)
-    contents.write.format(fmt).options(options)
-      .partitionBy(partCols: _*).mode("overwrite").save(stage.toString)
-    // every staged dir replaces its live twin (as a dynamic partition
-    // overwrite would); touched partitions emptied entirely produce no
-    // stage output, so their live dirs are dropped
-    val moves = listPartitionDirs(fs, stage, partCols.size).toSeq.sorted
-    StagedSwap.commitPartitions(conf, loc, stage.toString, moves,
-      touchedNames.filterNot(moves.toSet))
   }
 }

@@ -333,12 +333,14 @@ object Writers {
     * rewritten — one stage write, then a rename of each staged partition
     * dir into place — while every other partition's files are left
     * physically untouched. That is what makes a daily delta load into a
-    * 100 TB table cost O(touched partitions), not O(table). Unpartitioned targets (or > cap touched
-    * partitions, or null partition values) fall back to the full
-    * rewrite + whole-location staged swap. A crash mid-commit leaves a
-    * torn (some-partitions-new) table only until the next merge or
-    * delete-where, whose [[StagedSwap.recover]] rolls the commit forward
-    * from its intent; re-running the same merge then converges — the
+    * 100 TB table cost O(touched partitions), not O(table). Unpartitioned
+    * or unscopable targets fall back to the full rewrite + whole-location
+    * staged swap ([[PartitionedRewrite.rewriteAll]]), which keeps the
+    * declared layout, else the discovered one. A crash mid-commit leaves
+    * a torn (some-partitions-new) table only until the next rewrite of
+    * the location (merge, delete-where, optimize), whose
+    * [[StagedSwap.recover]] rolls the commit forward from its intent;
+    * re-running the same merge then converges — the
     * recency-guarded update/delete predicates the delta loads use make
     * merges idempotent (the reference's loaded-twice streaming golden
     * test pins exactly that property). */
@@ -409,102 +411,51 @@ object Writers {
       if (!evolving && discovered.nonEmpty &&
           (spec.partitions.isEmpty || spec.partitions == discovered) &&
           discovered.forall(source.columns.contains) &&
-          partitionScopedMerge(spark, spec, source, opts, mergeFmt, loc, discovered))
+          partitionScopedMerge(spark, source, opts, mergeFmt, spec.options, loc, discovered))
         return
-      val target = spark.read.format(mergeFmt).load(loc)
-      val (t2, s2, opts2) =
-        if (autoMerge) MergeOps.evolveForAutoMerge(target, source, opts)
-        else (target, source, opts)
-      val merged = MergeOps.mergeWithOptions(t2, s2, opts2)
-      val stage = loc.stripSuffix("/") + "__stage"
-      val w = merged.write.format(mergeFmt)
-        .options(spec.options).mode("overwrite")
-      (if (spec.partitions.nonEmpty) w.partitionBy(spec.partitions: _*) else w).save(stage)
-      StagedSwap.commit(spark.sparkContext.hadoopConfiguration, loc, stage)
+      PartitionedRewrite.rewriteAll(spark, loc, mergeFmt, spec.options, spec.partitions) {
+        (target, _) =>
+          val (t2, s2, opts2) =
+            if (autoMerge) MergeOps.evolveForAutoMerge(target, source, opts)
+            else (target, source, opts)
+          MergeOps.mergeWithOptions(t2, s2, opts2)
+      }
     }
   }
 
   /** Partition-scoped MERGE: read only the partitions the source touches,
-    * merge, and rewrite exactly those partitions. Returns false (caller
-    * falls back to the full rewrite) when the touched-partition set
-    * exceeds the cap or contains nulls.
+    * merge, and rewrite exactly those partitions
+    * ([[PartitionedRewrite.rewriteTouched]]). A source that touches no
+    * partition leaves the table as it is. Returns false (caller falls back
+    * to the full rewrite) when the merge is not scopable.
     *
-    * One write: the merged touched partitions land in a stage dir, then
-    * each staged partition dir is renamed into place
-    * ([[PartitionedRewrite.overwriteTouched]]) — the writing job never
-    * writes the location it reads, and a mid-job crash leaves live data
-    * intact. Cost is one write of the TOUCHED data, O(touched), not
-    * O(table). A touched partition whose rows are all deleted by the
-    * merge produces no stage output, so its live dir is dropped. */
+    * SEMANTIC guards — scoping is only equivalent to the full merge when
+    * a source row cannot match, or land in, a partition outside the
+    * touched set:
+    *  - the merge predicate must PIN every partition column (an equality
+    *    conjunct `current.p = new.p`); otherwise a key match living in an
+    *    un-read partition is missed and the row duplicates;
+    *  - update/insert column sets must not assign partition columns (an
+    *    assigned value could land outside the touched set, and the commit
+    *    would then replace that un-read live partition). */
   private def partitionScopedMerge(
-      spark: SparkSession, spec: OutputSpec, source: DataFrame,
-      opts: graft.spec.MergeOptions, mergeFmt: String, loc: String,
+      spark: SparkSession, source: DataFrame, opts: graft.spec.MergeOptions,
+      mergeFmt: String, options: Map[String, String], loc: String,
       partCols: Seq[String]): Boolean = {
-    val cap = spec.options.get("merge_touched_partition_cap").map(_.toInt)
-      .getOrElse(if (partCols.size == 1) 10000 else 1000)
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // SEMANTIC guards — scoping is only equivalent to the full merge when
-    // a source row cannot match, or land in, a partition outside the
-    // touched set:
-    //  - the merge predicate must PIN every partition column (an
-    //    equality conjunct `current.p = new.p`); otherwise a key match
-    //    living in an un-read partition is missed and the row duplicates.
-    //    Conservative: any OR in the predicate rejects scoping.
-    //  - update/insert column sets must not assign partition columns
-    //    (an assigned value could land outside the touched set, and the
-    //    commit would then replace that un-read live partition).
-    if (!predicatePinsPartitions(opts.mergePredicate, partCols)) return false
-    if ((opts.updateColumnSet.keySet ++ opts.insertColumnSet.keySet)
+    val pinned = MergeOps.equalityConjuncts(opts.mergePredicate).exists(eqs =>
+      partCols.forall(c => eqs.contains(Some(c.toLowerCase(java.util.Locale.ROOT)))))
+    if (!pinned || (opts.updateColumnSet.keySet ++ opts.insertColumnSet.keySet)
         .exists(partCols.contains)) return false
-    // distinct partition tuples present on the source — the touched set;
-    // bounded driver collect (cap + 1 detects overflow without draining)
-    val touched = source.select(partCols.map(col): _*)
-      .distinct().limit(cap + 1).collect()
-    if (touched.isEmpty || touched.length > cap ||
-        touched.exists(r => partCols.indices.exists(r.isNullAt))) return false
-    // Touched dir names are constructed from the VALUE TEXT; unescapable
-    // values (or a live dir with a different spelling of a touched value)
-    // force fallback — see PartitionedRewrite.
-    val touchedValues: Seq[Seq[String]] =
-      touched.map(r => partCols.indices.map(i => String.valueOf(r.get(i))).toSeq).toSeq
-    val touchedNames = PartitionedRewrite.touchedNames(partCols, touchedValues)
-      .getOrElse(return false)
-    val live = PartitionedRewrite.listPartitionDirs(fs, new Path(loc), partCols.size)
-    if (PartitionedRewrite.spellingCollision(live, touchedNames)) return false
-    // Read ONLY the touched partition dirs (basePath keeps the partition
-    // columns) — never Spark's O(all partitions) discovery of the table.
-    val existingTouched = touchedNames.filter(live.contains)
-    val targetSlice =
-      if (existingTouched.nonEmpty)
-        spark.read.format(mergeFmt).option("basePath", loc)
-          .load(existingTouched.map(n => s"${loc.stripSuffix("/")}/$n"): _*)
-      else
-        // all-new partitions: an empty slice with the live table's schema
-        spark.read.format(mergeFmt).option("basePath", loc)
-          .load(s"${loc.stripSuffix("/")}/${live.head}").limit(0)
-    val merged = MergeOps.mergeWithOptions(targetSlice, source, opts)
-    // merged values are source values cast to the slice's types, so their
-    // dir spellings match `touchedNames` (collision-checked above)
-    PartitionedRewrite.overwriteTouched(
-      spark, merged, loc, partCols, touchedNames, mergeFmt, spec.options)
-    true
-  }
-
-  /** True when `predicate` is a pure AND-conjunction containing an
-    * equality conjunct `current.c = new.c` (or `<=>`, either order) for
-    * EVERY partition column — the condition under which a key match can
-    * never live outside the source's own partitions. Any OR disqualifies
-    * (conservative). */
-  private[io] def predicatePinsPartitions(predicate: String, partCols: Seq[String]): Boolean = {
-    val p = predicate.toLowerCase(java.util.Locale.ROOT)
-    if (p.matches(".*\\bor\\b.*")) return false
-    val conjuncts = p.split("\\band\\b").map(_.trim.stripPrefix("(").stripSuffix(")").trim)
-    partCols.forall { c0 =>
-      val c = java.util.regex.Pattern.quote(c0.toLowerCase(java.util.Locale.ROOT))
-      conjuncts.exists { cj =>
-        cj.matches(s"current\\.$c\\s*(=|<=>)\\s*new\\.$c") ||
-          cj.matches(s"new\\.$c\\s*(=|<=>)\\s*current\\.$c")
-      }
+    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    PartitionedRewrite.resolveTouched(fs, loc, partCols, source) match {
+      case PartitionedRewrite.NothingTouched => true
+      case PartitionedRewrite.NotScopable => false
+      case touched: PartitionedRewrite.TouchedDirs =>
+        // merged values are source values cast to the slice's types, so
+        // their dir spellings match the touched names (collision-checked)
+        PartitionedRewrite.rewriteTouched(spark, loc, partCols, touched, mergeFmt, options)(
+          MergeOps.mergeWithOptions(_, source, opts))
+        true
     }
   }
 

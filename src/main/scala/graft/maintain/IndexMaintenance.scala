@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   * actual hash/code reads. Compaction rewrites the index into
   * ~`targetFileBytes` files (preserving the partition layout that makes
   * probes partition-pruned) and swaps it in crash-recoverably via
-  * [[graft.io.StagedSwap]] — same protocol as the Z-order rewrite.
+  * [[graft.io.PartitionedRewrite.rewriteAll]] — the same path as every
+  * other whole-location rewrite; `optimize` compacts tables with it too.
   *
   * Semantics: a pure LAYOUT rewrite — the row multiset is unchanged
   * (`distinctRows = false`), or collapsed to the distinct row SET when
@@ -53,68 +54,65 @@ object IndexMaintenance {
     (files, bytes)
   }
 
-  /** Distinct partition-value tuples, from the DIRECTORY layout (one
-    * `col=value` level per partition column) — no data scan. */
-  private def partitionDirCount(
-      spark: SparkSession, location: String, depth: Int): Long = {
-    val root = new Path(location)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var level = Seq(root)
-    (0 until depth).foreach { _ =>
-      level = level.flatMap(d => fs.listStatus(d).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-        .map(_.getPath))
-    }
-    level.size.toLong
+  /** What a compaction read (data files, bytes) and its output task
+    * count. `filesAfter` lists the location when it is first read: most
+    * callers never read it, and on the local file system a listing costs
+    * a process fork per file (Hadoop loads each file's permissions). */
+  final case class CompactionResult(filesBefore: Int, bytes: Long, outputTasks: Int)(
+      countFiles: () => Int) {
+    lazy val filesAfter: Int = countFiles()
   }
 
-  final case class CompactionResult(
-      filesBefore: Int, filesAfter: Int, bytes: Long, outputTasks: Int)
+  /** Compact the parquet location at `location` in place — the one
+    * compaction routine behind `optimize`/`optimize_dataset` and every
+    * index store. The partition layout is discovered from the
+    * directories and kept; the rewrite goes through
+    * [[graft.io.PartitionedRewrite.rewriteAll]], so an interrupted commit
+    * is settled before the location is read. Sizing: [[binPack]]. */
+  def compactIndex(
+      spark: SparkSession,
+      location: String,
+      distinctRows: Boolean = false,
+      targetFileBytes: Long = 128L << 20): CompactionResult = {
+    var result: CompactionResult = null
+    graft.io.PartitionedRewrite.rewriteAll(spark, location) { (df0, partCols) =>
+      // files and bytes from the listing the read already made
+      val files = df0.inputFiles.length
+      val bytes = df0.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+      val root = new Path(location)
+      val dirs = graft.io.PartitionedRewrite.listPartitionDirs(
+        root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, partCols.size).size
+      val (df, tasks) = binPack(if (distinctRows) df0.distinct() else df0,
+        partCols, dirs, bytes, targetFileBytes)
+      result = CompactionResult(files, bytes, tasks)(() => stats(spark, location)._1)
+      df
+    }
+    result
+  }
 
-  /** Compact the parquet index at `location` in place (staged swap).
-    *
-    * Layout reasoning, sized for the 100 TB deployment: unpartitioned
-    * indexes bin-pack to `ceil(bytes / targetFileBytes)` files.
-    * Partitioned indexes keep their `partitionBy` dirs (partition
-    * pruning is the whole point of the layout) and write
-    * `ceil(bytes / nDirs / targetFileBytes)` files per dir: rows
+  /** Layout reasoning for a compaction, sized for the 100 TB deployment:
+    * rows of `bytes` data bytes in an unpartitioned location bin-pack to
+    * `ceil(bytes / targetFileBytes)` files. Partitioned rows (`dirs`
+    * partition dirs of layout `partCols`) keep their dirs (partition
+    * pruning is the whole point of the layout) and get
+    * `ceil(bytes / dirs / targetFileBytes)` files per dir: rows
     * repartition on (partition cols + a row-hash salt bounded by that
     * per-dir file budget), so each output task holds exactly one
     * (dir, salt) slice and writes exactly one file — no dir ever
     * collapses to a single multi-hundred-GB object, and no task writes
-    * into more than one dir.
-    */
-  def compactIndex(
-      spark: SparkSession,
-      location: String,
-      partitionBy: Seq[String] = Nil,
-      distinctRows: Boolean = false,
-      targetFileBytes: Long = 128L << 20): CompactionResult = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    graft.io.StagedSwap.recover(conf, location)
-    val (filesBefore, bytes) = stats(spark, location)
-    val df0 = spark.read.parquet(location)
-    val df = if (distinctRows) df0.distinct() else df0
-    val stage = location.stripSuffix("/") + "__compact"
-    val tasks: Int =
-      if (partitionBy.isEmpty) {
-        val n = math.max(1L, math.min(1 << 20, (bytes + targetFileBytes - 1) / targetFileBytes)).toInt
-        df.repartition(n).write.mode("overwrite").parquet(stage)
-        n
-      } else {
-        val dirs = math.max(1L, partitionDirCount(spark, location, partitionBy.size))
-        val perDir = math.max(1L,
-          (bytes / dirs + targetFileBytes - 1) / targetFileBytes)
-        val n = math.min(1L << 20, dirs * perDir).toInt
-        val dataCols = df.columns.filterNot(partitionBy.contains)
-        val salt = pmod(hash(dataCols.map(col).toSeq: _*), lit(perDir))
-        df.repartition(n, partitionBy.map(col) :+ salt: _*)
-          .write.mode("overwrite").partitionBy(partitionBy: _*).parquet(stage)
-        n
-      }
-    graft.io.StagedSwap.commit(conf, location, stage)
-    val (filesAfter, _) = stats(spark, location)
-    CompactionResult(filesBefore, filesAfter, bytes, tasks)
+    * into more than one dir. Returns the frame to write and its task
+    * count. */
+  def binPack(df: DataFrame, partCols: Seq[String], dirs: Int, bytes: Long,
+      targetFileBytes: Long = 128L << 20): (DataFrame, Int) = {
+    val d = math.max(1, if (partCols.isEmpty) 1 else dirs)
+    val perDir = math.max(1L, (bytes / d + targetFileBytes - 1) / targetFileBytes)
+    val n = math.min(1L << 20, d * perDir).toInt
+    if (partCols.isEmpty) (df.repartition(n), n)
+    else {
+      val salt = pmod(hash(df.columns.filterNot(partCols.contains).map(col).toSeq: _*),
+        lit(perDir))
+      (df.repartition(n, partCols.map(col) :+ salt: _*), n)
+    }
   }
 
   /** Compact only past a file-count threshold — the cheap periodic-
@@ -125,11 +123,10 @@ object IndexMaintenance {
       spark: SparkSession,
       location: String,
       maxFiles: Int,
-      partitionBy: Seq[String] = Nil,
       distinctRows: Boolean = false,
       targetFileBytes: Long = 128L << 20): Option[CompactionResult] = {
     val (files, _) = stats(spark, location)
     if (files <= maxFiles) None
-    else Some(compactIndex(spark, location, partitionBy, distinctRows, targetFileBytes))
+    else Some(compactIndex(spark, location, distinctRows, targetFileBytes))
   }
 }

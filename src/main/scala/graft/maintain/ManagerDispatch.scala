@@ -27,7 +27,6 @@ object ManagerDispatch {
     // graft.maintain.IndexMaintenance.
     "compact_index" -> Seq(
       "path" -> ("str", true),
-      "partition_by" -> ("str", false), // comma-separated partition cols
       "distinct_rows" -> ("bool", false),
       "target_file_bytes" -> ("int", false),
       "max_files" -> ("int", false)), // set -> compact only past this count
@@ -280,15 +279,13 @@ object ManagerDispatch {
             A.str(op, "optimize_where").orElse(A.str(op, "where_clause")),
             A.str(op, "optimize_curve").getOrElse("zorder"))
           case "compact_index" =>
-            val pb = A.str(op, "partition_by").toSeq
-              .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
             val dr = A.bool(op, "distinct_rows")
             val tfb = A.num(op, "target_file_bytes").map(_.toLong).getOrElse(128L << 20)
             A.num(op, "max_files").map(_.toInt) match {
               case Some(mf) =>
-                IndexMaintenance.compactIfNeeded(spark, s("path"), mf, pb, dr, tfb)
+                IndexMaintenance.compactIfNeeded(spark, s("path"), mf, dr, tfb)
               case None =>
-                IndexMaintenance.compactIndex(spark, s("path"), pb, dr, tfb)
+                IndexMaintenance.compactIndex(spark, s("path"), dr, tfb)
             }
           case "show_tbl_properties" => tm.showTblProperties(s("table_or_view")).collect()
           case "get_tbl_pk" => tm.getTablePk(s("table_or_view"))

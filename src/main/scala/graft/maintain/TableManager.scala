@@ -1,6 +1,6 @@
 package graft.maintain
 
-import graft.algo.FileCompaction
+import graft.io.{PartitionedRewrite, StagedSwap}
 import graft.util.SqlSplitter
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -52,68 +52,45 @@ final class TableManager(spark: SparkSession) {
   /** DELETE FROM ... WHERE for parquet locations (no transaction log in
     * this build). Partitioned layouts are PARTITION-SCOPED: only the
     * partitions holding matching rows are rewritten (via
-    * [[graft.io.PartitionedRewrite]]); when the condition constrains the
-    * partition columns, even the touched-partition DISCOVERY scan is
+    * [[PartitionedRewrite.rewriteTouched]]); when the condition constrains
+    * the partition columns, even the touched-partition DISCOVERY scan is
     * partition-pruned — a retention delete on a date-partitioned 100 TB
     * table reads and writes only the expiring dates. Unpartitioned (or
-    * guard-rejected) layouts take the full filtered rewrite with a
-    * staged swap, which now preserves the partition layout it reads. */
+    * unscopable) layouts take the full filtered rewrite, which keeps the
+    * partition layout it reads. */
   def deleteWhere(location: String, condition: String): Unit = {
-    import graft.io.PartitionedRewrite
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(location).getFileSystem(conf)
-    // settle an interrupted commit before reading, as the merge writer does
-    graft.io.StagedSwap.recover(conf, location)
+    val root = new Path(location)
+    val fs = root.getFileSystem(conf)
+    StagedSwap.recover(conf, location)
     // a freshly created (never written) table has no data directory yet —
     // deleting from nothing is a no-op, as on an empty Delta table
-    if (!fs.exists(new Path(location))) return
-    val partCols = PartitionedRewrite.discoverLayout(fs, new Path(location))
-    if (partCols.nonEmpty && scopedDelete(location, condition, partCols)) return
-    val df = spark.read.parquet(location).where(s"NOT ($condition)")
-    val stage = location.stripSuffix("/") + "__delete"
-    val w = df.write.mode("overwrite")
-    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(stage)
-    graft.io.StagedSwap.commit(conf, location, stage)
+    if (!fs.exists(root)) return
+    val partCols = PartitionedRewrite.discoverLayout(fs, root)
+    val touched =
+      if (partCols.isEmpty) PartitionedRewrite.NotScopable
+      else PartitionedRewrite.resolveTouched(fs, location, partCols,
+        spark.read.parquet(location).where(condition))
+    touched match {
+      case PartitionedRewrite.NothingTouched => ()
+      case t: PartitionedRewrite.TouchedDirs =>
+        PartitionedRewrite.rewriteTouched(spark, location, partCols, t)(
+          _.where(s"NOT ($condition)"))
+      case PartitionedRewrite.NotScopable =>
+        PartitionedRewrite.rewriteAll(spark, location)((df, _) => df.where(s"NOT ($condition)"))
+    }
   }
 
-  /** Scoped delete: find the partitions holding matching rows (pruned
-    * scan when the condition allows), rewrite only those with the
-    * survivors. False -> caller falls back to the full rewrite. */
-  private def scopedDelete(
-      location: String, condition: String, partCols: Seq[String]): Boolean = {
-    import graft.io.PartitionedRewrite
-    val fs = new Path(location).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cap = 10000
-    val table = spark.read.parquet(location)
-    val touched = table.where(condition)
-      .select(partCols.map(org.apache.spark.sql.functions.col): _*)
-      .distinct().limit(cap + 1).collect()
-    if (touched.isEmpty) return true // nothing matches: delete is a no-op
-    if (touched.length > cap ||
-        touched.exists(r => partCols.indices.exists(r.isNullAt))) return false
-    val values = touched.map(r =>
-      partCols.indices.map(i => String.valueOf(r.get(i))).toSeq).toSeq
-    val names = PartitionedRewrite.touchedNames(partCols, values)
-      .getOrElse(return false)
-    val live = PartitionedRewrite.listPartitionDirs(fs, new Path(location), partCols.size)
-    if (PartitionedRewrite.spellingCollision(live, names)) return false
-    val existing = names.filter(live.contains)
-    if (existing.isEmpty) return true
-    val slice = spark.read.option("basePath", location)
-      .parquet(existing.map(n => s"${location.stripSuffix("/")}/$n"): _*)
-    PartitionedRewrite.overwriteTouched(spark, slice.where(s"NOT ($condition)"),
-      location, partCols, existing, "parquet", Map.empty)
-    true
-  }
-
-  /** OPTIMIZE analogue: compact a parquet location's small files; with
-    * `zorderCols` it additionally clusters the rewrite on the Morton curve
+  /** OPTIMIZE analogue: compact a parquet location's small files
+    * ([[IndexMaintenance.compactIndex]], which keeps the partition layout);
+    * with `zorderCols` it instead clusters the rewrite on the Morton curve
     * of those columns (reference `terminators/dataset_optimizer.py:115-143`
     * `optimize_zorder_col_list`) so min/max file stats prune on any of
-    * them. `where` scopes the rewrite to matching hive partitions
-    * (reference `optimize_where`) — like Delta's OPTIMIZE WHERE it must
-    * reference partition columns only, and each touched partition dir is
-    * rewritten independently (its own staged swap), so cost is O(touched
+    * them, writing `targetPartitions` files per partition dir (0 derives
+    * it from the file count). `where` scopes the rewrite to matching hive
+    * partitions (reference `optimize_where`) — like Delta's OPTIMIZE WHERE
+    * it must reference partition columns only, and only the touched
+    * partition dirs are read and rewritten, so cost is O(touched
     * partitions) and untouched data is never read. */
   def optimize(location: String, targetPartitions: Int = 0,
       zorderCols: Seq[String] = Nil, where: Option[String] = None,
@@ -124,15 +101,16 @@ final class TableManager(spark: SparkSession) {
       case None =>
         if (zorderCols.nonEmpty)
           ZOrder.rewrite(spark, location, zorderCols, targetPartitions, curve)
-        else FileCompaction.compact(spark, location, targetPartitions)
+        else IndexMaintenance.compactIndex(spark, location)
     }
 
   private def optimizeScoped(location: String, condition: String,
-      targetPartitions: Int, zorderCols: Seq[String],
-      curve: String = "zorder"): Unit = {
-    import graft.io.PartitionedRewrite
-    val fs = new Path(location).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partCols = PartitionedRewrite.discoverLayout(fs, new Path(location))
+      targetPartitions: Int, zorderCols: Seq[String], curve: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(location)
+    val fs = root.getFileSystem(conf)
+    StagedSwap.recover(conf, location)
+    val partCols = PartitionedRewrite.discoverLayout(fs, root)
     if (partCols.isEmpty)
       sys.error("optimize where requires a hive-partitioned location")
     val refs = spark.sessionState.sqlParser.parseExpression(condition)
@@ -143,24 +121,22 @@ final class TableManager(spark: SparkSession) {
         s"got ${extra.mkString(", ")} (Delta OPTIMIZE WHERE has the same contract)")
     if (zorderCols.exists(partCols.contains))
       sys.error("zorder columns must be data columns, not partition columns")
-    // Partition-only predicate: this distinct reads no data pages, just
-    // the pruned listing.
-    val cap = 10000
-    val touched = spark.read.parquet(location).where(condition)
-      .select(partCols.map(org.apache.spark.sql.functions.col): _*)
-      .distinct().limit(cap + 1).collect()
-    if (touched.length > cap)
-      sys.error(s"optimize where matched more than $cap partitions; widen the rewrite instead")
-    val values = touched.map(r =>
-      partCols.indices.map(i => String.valueOf(r.get(i))).toSeq).toSeq
-    val names = PartitionedRewrite.touchedNames(partCols, values).getOrElse(
-      sys.error("optimize where: partition values need escaping; run an unscoped optimize"))
-    val live = PartitionedRewrite.listPartitionDirs(fs, new Path(location), partCols.size)
-    names.filter(live.contains).foreach { name =>
-      val dir = s"${location.stripSuffix("/")}/$name"
-      if (zorderCols.nonEmpty)
-        ZOrder.rewrite(spark, dir, zorderCols, targetPartitions, curve)
-      else FileCompaction.compact(spark, dir, targetPartitions)
+    // Partition-only predicate: resolving the touched set reads no data
+    // pages, just the pruned listing.
+    PartitionedRewrite.resolveTouched(fs, location, partCols,
+        spark.read.parquet(location).where(condition)) match {
+      case PartitionedRewrite.NothingTouched => ()
+      case PartitionedRewrite.NotScopable =>
+        sys.error(s"optimize where: the matched partitions cannot be scoped (more than " +
+          s"${PartitionedRewrite.TouchedCap}, or null, escaped or differently spelled " +
+          "values); run an unscoped optimize")
+      case t: PartitionedRewrite.TouchedDirs =>
+        PartitionedRewrite.rewriteTouched(spark, location, partCols, t) { slice =>
+          if (zorderCols.nonEmpty)
+            ZOrder.cluster(slice, partCols, zorderCols, targetPartitions, curve)
+          else IndexMaintenance.binPack(slice, partCols, t.names.count(t.live),
+            slice.queryExecution.optimizedPlan.stats.sizeInBytes.toLong)._1
+        }
     }
   }
 

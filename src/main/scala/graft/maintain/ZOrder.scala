@@ -1,5 +1,6 @@
 package graft.maintain
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,7 +19,7 @@ import org.apache.spark.sql.types._
   * interleaved-bits curve key, `repartitionByRange` on it (Spark samples
   * the key distribution, so output files are evenly sized regardless of
   * skew), sort within partitions, write via the crash-recoverable
-  * [[graft.io.StagedSwap]] protocol.
+  * [[graft.io.PartitionedRewrite]] path every rewrite shares.
   *
   * Curve-key construction is pure column arithmetic (whole-stage codegen,
   * no UDFs):
@@ -160,32 +161,47 @@ object ZOrder {
   }
 
   /** Rewrite a parquet location clustered by the chosen space-filling
-    * curve of `zorderCols` (`curve` = "zorder" | "hilbert"; hilbert needs
-    * exactly 2 columns). One shuffle (range partition on the curve key),
-    * staged-swap commit; `targetPartitions` 0 derives the output file
-    * count from the current file count like compaction does. */
+    * curve of `zorderCols` — [[cluster]] through
+    * [[graft.io.PartitionedRewrite.rewriteAll]], so an interrupted commit
+    * is settled first and a partitioned location keeps its layout. */
   def rewrite(
       spark: SparkSession,
       location: String,
       zorderCols: Seq[String],
       targetPartitions: Int = 0,
-      curve: String = "zorder"): Unit = {
+      curve: String = "zorder"): Unit =
+    graft.io.PartitionedRewrite.rewriteAll(spark, location) { (df, partCols) =>
+      cluster(df, partCols, zorderCols, targetPartitions, curve)
+    }
+
+  /** `df` clustered by the chosen space-filling curve of `zorderCols`
+    * (`curve` = "zorder" | "hilbert"; hilbert needs exactly 2 columns)
+    * within each partition of layout `partCols`: one shuffle (range
+    * partition on the partition columns, then the curve key), sorted the
+    * same way, so the partitioned writer needs no sort of its own and
+    * keeps the curve order in every file. `filesPerDir` files per
+    * partition dir (per location when unpartitioned); 0 derives it from
+    * the current file count, one output file per 8 input files. */
+  def cluster(
+      df: DataFrame,
+      partCols: Seq[String],
+      zorderCols: Seq[String],
+      filesPerDir: Int,
+      curve: String): DataFrame = {
     require(zorderCols.nonEmpty, "zorder rewrite needs columns")
-    val df = spark.read.parquet(location)
-    val n = if (targetPartitions > 0) targetPartitions
-      else math.max(1, (df.inputFiles.length / 8.0).ceil.toInt)
+    val files = df.inputFiles
+    val dirs = math.max(1, files.map(f => new Path(f).getParent.toString).distinct.length)
+    val perDir = if (filesPerDir > 0) filesPerDir
+      else math.max(1, (files.length / dirs / 8.0).ceil.toInt)
     val z = curve match {
       case "zorder" => curveKey(df, zorderCols)
       case "hilbert" => hilbertKey(df, zorderCols)
       case other => sys.error(s"unknown curve '$other' (zorder | hilbert)")
     }
-    val stage = location.stripSuffix("/") + "__zorder"
+    val keys = partCols.map(col) :+ col("__zcurve")
     df.withColumn("__zcurve", z)
-      .repartitionByRange(n, col("__zcurve"))
-      .sortWithinPartitions(col("__zcurve"))
+      .repartitionByRange(perDir * dirs, keys: _*)
+      .sortWithinPartitions(keys: _*)
       .drop("__zcurve")
-      .write.mode("overwrite").parquet(stage)
-    graft.io.StagedSwap.commit(
-      spark.sparkContext.hadoopConfiguration, location, stage)
   }
 }

@@ -59,27 +59,34 @@ object MergeOps {
       equiKeys = equiKeysOf(opts.mergePredicate))
   }
 
-  /** When the merge predicate is PURELY a conjunction of same-column
-    * equalities (`current.k = new.k` / `<=>`, either order), the key
-    * list — the common CDC-upsert shape, which lets the multiple-match
-    * guard run on the source side instead of the joined set (see
-    * [[mergeWithCondition]]). Any OR, theta conjunct, or cross-column
-    * equality yields None (guard falls back to the general path). */
-  private[operators] def equiKeysOf(predicate: String): Option[Seq[String]] = {
+  /** The one parser of a merge predicate's conjuncts: for a pure
+    * AND-conjunction, one entry per conjunct — the column of a
+    * same-column equality (`current.c = new.c` / `<=>`, either order),
+    * None for any other conjunct — and None for a predicate with an OR.
+    * Column names are lower-cased. */
+  private[graft] def equalityConjuncts(predicate: String): Option[Seq[Option[String]]] = {
     val p = predicate.toLowerCase(java.util.Locale.ROOT)
     if (p.matches("(?s).*\\bor\\b.*")) return None
-    val conjuncts = p.split("\\band\\b").map(_.trim.stripPrefix("(").stripSuffix(")").trim)
     val ident = "([a-z_][a-z0-9_]*)"
     val fwd = s"current\\.$ident\\s*(?:=|<=>)\\s*new\\.$ident".r
     val rev = s"new\\.$ident\\s*(?:=|<=>)\\s*current\\.$ident".r
-    val keys = conjuncts.toSeq.map {
+    Some(p.split("\\band\\b").toSeq.map(_.trim.stripPrefix("(").stripSuffix(")").trim match {
       case fwd(a, b) if a == b => Some(a)
       case rev(a, b) if a == b => Some(a)
       case _ => None
-    }
-    if (keys.forall(_.isDefined) && keys.nonEmpty) Some(keys.flatten.distinct)
-    else None
+    }))
   }
+
+  /** When the merge predicate is PURELY a conjunction of same-column
+    * equalities, the key list — the common CDC-upsert shape, which lets
+    * the multiple-match guard run on the source side instead of the
+    * joined set (see [[mergeWithCondition]]). Any OR, theta conjunct, or
+    * cross-column equality yields None (guard falls back to the general
+    * path). */
+  private[operators] def equiKeysOf(predicate: String): Option[Seq[String]] =
+    equalityConjuncts(predicate).collect {
+      case keys if keys.forall(_.isDefined) => keys.flatten.distinct
+    }
 
   /** Delta schema auto-merge (`spark.databricks.delta.schema.autoMerge
     * .enabled`, the conf the reference's schema-evolution acons set —

@@ -117,8 +117,7 @@ object StreamingDedup {
         // `compactEvery` keeps the legacy cycles-keyed spelling.
         if (compactFiles > 0)
           graft.maintain.IndexMaintenance.compactIfNeeded(
-            batch.sparkSession, index.location, maxFiles = compactFiles,
-            partitionBy = Seq("band"))
+            batch.sparkSession, index.location, maxFiles = compactFiles)
         else if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
           index.compact(batch.sparkSession)
         ()

@@ -197,13 +197,7 @@ object StreamingFaces {
     val maxFiles = if (p.compactFiles > 0) p.compactFiles else p.compactEvery
     if (maxFiles > 0)
       graft.maintain.IndexMaintenance.compactIfNeeded(
-        spark, p.indexLoc, maxFiles = maxFiles,
-        partitionBy = p.format match {
-          case "minhash_dedup" => Seq("band")
-          case "ivfadc_ingest" => Seq("cell")
-          case _ => Nil
-        },
-        distinctRows = p.format == "chunk_dedup")
+        spark, p.indexLoc, maxFiles = maxFiles, distinctRows = p.format == "chunk_dedup")
     ()
   }
 

@@ -192,8 +192,8 @@ object IndexSoak {
     val pqJson = soak(spark, "ivfadc", pqLoc,
       c => { pq = pq.appendToPersisted(pqLoc, vecBatch(c), "vec_id", "embedding"); () },
       () => pq.search(probeVecs, "vec_id", "embedding", k = 5, pq.kmeansProbe(4)),
-      () => { pq = pq.compactPersisted(pqLoc); IndexMaintenance.CompactionResult(
-        0, IndexMaintenance.stats(spark, pqLoc)._1, 0L, 0) })
+      () => { pq = pq.compactPersisted(pqLoc); IndexMaintenance.CompactionResult(0, 0L, 0)(
+        () => IndexMaintenance.stats(spark, pqLoc)._1) })
 
     println(s"""{"metric":"index_soak","sf":"$sfDir",$chunkJson,$mhJson,$pqJson}""")
     spark.stop()

@@ -264,6 +264,23 @@ class DedupAndSimilaritySpec extends SparkSpec {
     assert(tight.contains((1L, 2L)) && !tight.contains((1L, 3L)))
   }
 
+  test("editDistancePairs rejects duplicate ids, naming the id column") {
+    val base = (1 to 30).map(i => s"tok$i").mkString(" ")
+    val docs = Seq(
+      (1L, base),
+      (2L, base.replace("tok7 ", "tok9 ")),
+      (2L, base.replace("tok8 ", "tok6 "))) // a second text under id 2
+      .toDF("doc_id", "text")
+    val err = intercept[Exception] {
+      DedupFunctions.editDistancePairs(docs, "doc_id", "text",
+        simhashMaxDistance = 8, maxEdits = 10).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("'doc_id' must be unique") && m.contains("id 2 ")),
+      msgs.mkString("\n"))
+  }
+
   test("containment finds an excerpt that jaccard misses") {
     val quote = "the quick brown fox jumps over the lazy dog tonight"
     val host = (1 to 15).map(i => s"filler$i word$i").mkString(" ") +

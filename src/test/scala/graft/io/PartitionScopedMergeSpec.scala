@@ -120,6 +120,57 @@ class PartitionScopedMergeSpec extends SparkSpec {
     assert(rows(torn) == expected, "a retried merge changed the recovered table")
   }
 
+  /** A clean merge into `<base>/done`, and the same merge into
+    * `<base>/torn` cut after its intent and one of its renames: day=10
+    * rewritten, day=20 (emptied by the merge) still live, day=40 (new)
+    * still staged. */
+  private def tornMerge(base: String): (String, String) = {
+    val (done, torn) = (s"$base/done", s"$base/torn")
+    initTarget(done)
+    initTarget(torn)
+    Writers.write(spark, mergeSpec(done).copy(mergeOpts = mergeSpec(done).mergeOpts
+        .map(_.copy(insertPredicate = Some("new.op <> 'D'")))),
+      Seq((1, "a2", 10, "U"), (3, "c", 20, "D"), (9, "z", 40, "U"))
+        .toDF("id", "name", "day", "op"))
+    val fs = new Path(torn).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stage = new Path(torn + "__stage_parts")
+    spark.read.parquet(done).where("day IN (10, 40)")
+      .write.partitionBy("day").parquet(stage.toString)
+    StagedSwap.writePartsIntent(fs, torn, stage, Seq("day=10", "day=40"), Seq("day=20"))
+    fs.delete(new Path(torn, "day=10"), true)
+    assert(fs.rename(new Path(stage, "day=10"), new Path(torn, "day=10")))
+    (done, torn)
+  }
+
+  private def sortedRows(loc: String) =
+    spark.read.parquet(loc).as[(Int, String, String, Int)].collect().sortBy(_._1).toSeq
+
+  test("optimize_dataset after an interrupted partition commit settles it before compacting") {
+    val (done, torn) = tornMerge(tmpDir("psm-crash-opt"))
+    graft.algo.Terminators.run(spark,
+      graft.spec.TerminatorSpec("optimize_dataset", Map("location" -> torn)))
+    assert(sortedRows(torn) == sortedRows(done))
+    assert(Files.exists(Paths.get(torn, "day=40")), "new partition lost by the compaction")
+    assert(!Files.exists(Paths.get(torn, "day=20")), "dropped partition brought back")
+  }
+
+  test("a Z-order optimize after an interrupted partition commit settles it before clustering") {
+    val (done, torn) = tornMerge(tmpDir("psm-crash-z"))
+    new graft.maintain.TableManager(spark).optimize(torn, zorderCols = Seq("id"))
+    assert(sortedRows(torn) == sortedRows(done))
+    assert(Files.exists(Paths.get(torn, "day=40")), "new partition lost by the Z-order")
+    assert(!Files.exists(Paths.get(torn, "day=20")), "dropped partition brought back")
+  }
+
+  test("a merge whose source touches no partition leaves every file in place") {
+    val loc = tmpDir("psm-none") + "/t"
+    initTarget(loc)
+    val before = Seq("day=10", "day=20", "day=30").map(r => r -> files(loc, r)).toMap
+    writeMerge(loc, Seq.empty[(Int, String, Int, String)].toDF("id", "name", "day", "op"))
+    before.foreach { case (r, fs) => assert(files(loc, r) == fs, s"$r was rewritten") }
+    assert(spark.read.parquet(loc).count() == 4)
+  }
+
   test("multi-column partitioning scopes on the tuple") {
     val loc = tmpDir("psm-multi") + "/t"
     Seq((1, 10, "x", "U"), (2, 10, "y", "U"), (3, 20, "x", "U"))

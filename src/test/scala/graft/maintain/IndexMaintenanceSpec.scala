@@ -160,8 +160,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // append a few times to create the small-files shape
     (1 to 3).foreach(_ => df.limit(100).write.mode("append")
       .partitionBy("cell").parquet(path))
-    val res = IndexMaintenance.compactIndex(spark, path,
-      partitionBy = Seq("cell"), targetFileBytes = 64 * 1024)
+    val res = IndexMaintenance.compactIndex(spark, path, targetFileBytes = 64 * 1024)
     val perDir = new java.io.File(path).listFiles().filter(_.isDirectory)
       .map(d => d.getName -> d.listFiles().count(f =>
         f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")))

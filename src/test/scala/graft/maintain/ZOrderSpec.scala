@@ -185,6 +185,21 @@ class ZOrderSpec extends SparkSpec {
     }
   }
 
+  test("an unscoped zorder optimize keeps a hive-partitioned layout and every row") {
+    import spark.implicits._
+    val loc = tmpDir("zorder-parts") + "/t"
+    (1 to 300).map(i => (i.toLong, (i * 7 % 50).toLong, i % 3)).toDF("x", "y", "day")
+      .repartition(6).write.partitionBy("day").mode("overwrite").parquet(loc)
+    val before = spark.read.parquet(loc).as[(Long, Long, Int)].collect().sorted.toSeq
+    new TableManager(spark).optimize(loc, zorderCols = Seq("x", "y"))
+    val root = new org.apache.hadoop.fs.Path(loc)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(graft.io.PartitionedRewrite.discoverLayout(fs, root) == Seq("day"))
+    assert(!fs.listStatus(root).exists(_.getPath.getName.endsWith(".parquet")),
+      "zorder wrote data files at the root")
+    assert(spark.read.parquet(loc).as[(Long, Long, Int)].collect().sorted.toSeq == before)
+  }
+
   test("zorder rewrite handles strings, timestamps and nulls") {
     import spark.implicits._
     val df = Seq(

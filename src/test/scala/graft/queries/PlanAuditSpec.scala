@@ -229,40 +229,25 @@ class PlanAuditSpec extends SparkSpec {
     // Round-18: fingerprintPartitions previously read only optimizer
     // stats, so a filter -> localCheckpoint -> dedup pipeline (the
     // realistic curation chain) silently kept the static plan. Pin the
-    // fallback: with a checkpointed input big enough to trigger sizing,
-    // the span window still consumes an explicit REPARTITION_BY_NUM
-    // exchange — sized from the checkpoint's materialized bytes. The
-    // kill switch must still pin the static plan on the same input.
+    // sizing: with a checkpointed input big enough to trigger it, eager
+    // or lazy, the span window still consumes an explicit
+    // REPARTITION_BY_NUM exchange — sized from the statistics the
+    // checkpoint carries over from its origin plan.
     val docs100 = spark.read.parquet(s"$sfDir/documents.parquet")
-    val chained = Seq.fill(100)(docs100).reduce(_.unionByName(_))
+    val filtered = Seq.fill(100)(docs100).reduce(_.unionByName(_))
       .where(length(col("text")) >= 0) // a pushed filter, as curation would add
-      .localCheckpoint(true)
-    withConf("spark.sql.shuffle.partitions" -> "1") {
-      def spanExchanges(df: org.apache.spark.sql.DataFrame) =
-        df.queryExecution.executedPlan.toString.linesIterator
+    Seq(true, false).foreach { eager =>
+      val chained = filtered.localCheckpoint(eager)
+      withConf("spark.sql.shuffle.partitions" -> "1") {
+        val sized = graft.functions.DedupFunctions
+          .removeRepeatedSpans(chained, "doc_id", "text", k = 8)
+          .queryExecution.executedPlan.toString.linesIterator
           .filter(_.contains("Exchange hashpartitioning(span_key")).toSeq
-      val sized = spanExchanges(graft.functions.DedupFunctions
-        .removeRepeatedSpans(chained, "doc_id", "text", k = 8))
-      assert(sized.size == 1 && sized.head.contains("REPARTITION_BY_NUM"),
-        s"checkpoint fallback did not size the window exchange:\n${sized.mkString("\n")}")
-      withConf("graft.window.adaptivePartitions" -> "false") {
-        val static = spanExchanges(graft.functions.DedupFunctions
-          .removeRepeatedSpans(chained, "doc_id", "text", k = 8))
-        assert(static.forall(!_.contains("REPARTITION_BY_NUM")),
-          s"kill switch did not pin the static plan:\n${static.mkString("\n")}")
+        assert(sized.size == 1 && sized.head.contains("REPARTITION_BY_NUM"),
+          s"checkpoint (eager = $eager) did not size the window exchange:\n" +
+            sized.mkString("\n"))
       }
-    }
-    chained.unpersist()
-  }
-
-  test("the adaptivePartitions kill switch parses junk values as enabled") {
-    // a misused kill switch ('off', '1', 'nope') must not crash operator
-    // construction — only case-insensitive 'false'/'0' disables
-    withConf("graft.window.adaptivePartitions" -> "nope") {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      // must not throw at build time
-      graft.functions.DedupFunctions
-        .removeRepeatedSpans(docs, "doc_id", "text", k = 8).queryExecution.executedPlan
+      chained.unpersist()
     }
   }
 }
