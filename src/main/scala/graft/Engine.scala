@@ -134,69 +134,43 @@ object Engine {
   def manageFiles(spark: SparkSession): maintain.FileManager =
     new maintain.FileManager(spark)
 
-  /** `execute_sensor`: check one upstream; true when new data acquired. */
+  /** `execute_sensor`: check one upstream; true when this call acquired
+    * new data ([[algo.SensorControl.checkUpstream]]). */
   def executeSensor(
       spark: SparkSession, controlLocation: String, sensorId: String,
       upstream: InputSpec, preprocessQuery: Option[String] = None,
       assets: Seq[String] = Seq.empty,
       failOnEmptyResult: Boolean = false): Boolean =
-    new algo.Sensor(spark, controlLocation)
-      .checkUpstream(sensorId, upstream, preprocessQuery, assets, failOnEmptyResult)
+    algo.SensorControl.checkUpstream(spark, controlLocation, sensorId, upstream,
+      preprocessQuery, assets, failOnEmptyResult)
 
   /** `update_sensor_status`: mark a sensor's data consumed. */
   def updateSensorStatus(
       spark: SparkSession, controlLocation: String, sensorId: String): Unit =
-    new algo.Sensor(spark, controlLocation).markProcessed(sensorId)
+    algo.SensorControl.updateSensorStatusById(spark, sensorId, controlLocation)
 
   /** `generate_sensor_query`: preprocess query for a sensor config
-    * (reference `core/sensor_manager.py:232-328`). With a `filterExp`,
-    * builds the counting watermark query over `sensor_new_data` (or
-    * `upstreamTableName`), substituting `?upstream_key` /
-    * `?upstream_value`; without one, the sensor-on-sensor query over the
-    * upstream sensor table's CDF-style feed. */
+    * ([[algo.SensorControl.generateSensorQuery]] without a control
+    * table). */
   def generateSensorQuery(
       sensorId: String,
       filterExp: Option[String] = None,
       upstreamKey: Option[String] = None,
       upstreamValue: Option[String] = None,
       upstreamTableName: Option[String] = None): String =
-    filterExp match {
-      case Some(exp) =>
-        val source = upstreamTableName.getOrElse("sensor_new_data")
-        val (select, resolved) = upstreamKey match {
-          case Some(k) =>
-            val v = upstreamValue.getOrElse("-2147483647")
-            (s"SELECT COUNT(1) as count, '$k' as UPSTREAM_KEY, " +
-              s"max($k) as UPSTREAM_VALUE",
-              exp.replace("?upstream_key", k).replace("?upstream_value", v))
-          case None => ("SELECT COUNT(1) as count", exp)
-        }
-        s"$select FROM $source WHERE $resolved HAVING COUNT(1) > 0"
-      case None =>
-        "SELECT * FROM sensor_new_data WHERE" +
-          " _change_type in ('insert', 'update_postimage')" +
-          s" and sensor_id = '$sensorId'" +
-          s" and status = '${algo.Sensor.Processed}'"
-    }
+    algo.SensorControl.generateSensorQuery(SparkSession.active, sensorId, filterExp,
+      None, upstreamKey, upstreamValue, upstreamTableName)
 
   /** `generate_sensor_sap_logchain_query`: the CTE prelude a sensor
     * prepends to its JDBC query to watch an SAP BW process-chain status
-    * table (reference `engine.py:409-437`,
-    * `core/sensor_manager.py:365-407` — reproduced template-exactly,
-    * including the reference's defaults). */
+    * table ([[algo.SensorControl.generateSensorSapLogchainQuery]]). */
   def generateSensorSapLogchainQuery(
       chainId: String,
       dbtable: String = "SAPPHA.RSPCLOGCHAIN",
       status: String = "G",
-      engineTableName: String = "sensor_new_data"): String = {
-    require(chainId != null && chainId.nonEmpty,
-      "To query on log chain SAP table the chain id should be defined!")
-    val selectExp =
-      "SELECT CHAIN_ID, CONCAT(DATUM, ZEIT) AS LOAD_DATE, ANALYZED_STATUS"
-    val filterExp =
-      s"UPPER(CHAIN_ID) = UPPER('$chainId') AND UPPER(ANALYZED_STATUS) = UPPER('$status')"
-    s"WITH $engineTableName AS ($selectExp FROM $dbtable WHERE $filterExp)"
-  }
+      engineTableName: String = "sensor_new_data"): String =
+    algo.SensorControl.generateSensorSapLogchainQuery(chainId, dbtable, status,
+      engineTableName)
 
   /** `send_notification` (engine.py): email specs go through the full
     * EmailNotifier create+send choreography — the facade does NOT apply
@@ -238,17 +212,17 @@ object Engine {
     algo.Heartbeat.controlTableDataFeed(spark, controlLocation, feed)
 
   /** `update_heartbeat_sensor_status`: completion callback for a
-    * triggered job. Accepts the reference's `db.table` addressing (routed
-    * through [[algo.HeartbeatControl]]) or this build's storage-location
-    * addressing (routed through [[algo.Heartbeat]]). */
+    * triggered job: a storage location ([[graft.io.TableRef.isLocation]])
+    * routes through [[algo.Heartbeat]], a `db.table` name through
+    * [[algo.HeartbeatControl]]. */
   def updateHeartbeatSensorStatus(
       spark: SparkSession, controlLocation: String,
       sensorControlLocation: String, jobId: String): Unit =
-    if (spark.catalog.tableExists(controlLocation))
+    if (graft.io.TableRef.isLocation(controlLocation))
+      algo.Heartbeat.completeJob(spark, controlLocation, sensorControlLocation, jobId)
+    else
       algo.HeartbeatControl.updateCompletionStatus(
         spark, controlLocation, sensorControlLocation, jobId)
-    else
-      algo.Heartbeat.completeJob(spark, controlLocation, sensorControlLocation, jobId)
 
   /** `execute_sensor_heartbeat` over the reference's ACON shape
     * (heartbeat + sensor control addressed as `db.table`). */

@@ -143,8 +143,8 @@ final class DataLoader(
     if (dq.dqType != "prisma") dq
     else if (dq.rulesTable.isDefined) {
       val src = dq.rulesTable.get
-      val rulesDf =
-        if (src.contains("/")) spark.read.parquet(src) else spark.table(src)
+      val rulesDf = graft.io.TableRef.read(spark, src)
+        .getOrElse(sys.error(s"PRISMA rules_table $src does not exist"))
       dq.copy(dqFunctions = DQEngine.rulesFromTable(spark, rulesDf))
     } else graft.dq.Prisma.resolve(spark, dq, "in_motion")
 

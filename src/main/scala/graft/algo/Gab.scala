@@ -297,7 +297,9 @@ object Gab {
 
   /** Execute a use case into a parquet insights location, replacing that
     * use case's rows (the reference's DELETE+INSERT —
-    * `algorithms/gab.py:485-532`).
+    * `algorithms/gab.py:485-532`) through
+    * [[graft.io.PartitionedRewrite.rewriteAll]], so an interrupted commit
+    * is settled before the other use cases' rows are read.
     *
     * @param reconWindow when set, only the last N cadence periods are
     *        recomputed and replaced (the reference's reconciliation
@@ -306,35 +308,27 @@ object Gab {
     */
   def execute(spark: SparkSession, source: DataFrame, uc: UseCase,
       insightsLocation: String, reconWindow: Option[Int] = None): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(insightsLocation)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(insightsLocation))
-    val (insights, keepOld): (DataFrame, DataFrame => DataFrame) = reconWindow match {
-      case Some(n) if exists =>
-        // per-cadence cutoffs; source pruned to the widest window
-        val cutoffs = uc.cadences.map(c => c -> reconWindowStart(source, uc, c, n)).toMap
-        val minCutoff = cutoffs.values.min(Ordering.by((d: java.sql.Date) => d.getTime))
-        val pruned = source.where(col(uc.dateCol) >= lit(minCutoff))
-        val rebuilt = buildInsights(pruned, uc)
-          .where(uc.cadences.map(c =>
-            col("cadence") === c.toUpperCase && col("from_date") >= lit(cutoffs(c)))
-            .reduce(_ || _))
-        (rebuilt, old => old.where(col("use_case") =!= uc.name ||
-          uc.cadences.map(c =>
-            col("cadence") === c.toUpperCase && col("from_date") < lit(cutoffs(c)))
-            .reduce(_ || _)))
-      case _ =>
-        (buildInsights(source, uc), old => old.where(col("use_case") =!= uc.name))
+    graft.io.PartitionedRewrite.rewriteAll(spark, insightsLocation) { (existing, _) =>
+      val (insights, keepOld): (DataFrame, DataFrame => DataFrame) = reconWindow match {
+        case Some(n) if existing.isDefined =>
+          // per-cadence cutoffs; source pruned to the widest window
+          val cutoffs = uc.cadences.map(c => c -> reconWindowStart(source, uc, c, n)).toMap
+          val minCutoff = cutoffs.values.min(Ordering.by((d: java.sql.Date) => d.getTime))
+          val pruned = source.where(col(uc.dateCol) >= lit(minCutoff))
+          val rebuilt = buildInsights(pruned, uc)
+            .where(uc.cadences.map(c =>
+              col("cadence") === c.toUpperCase && col("from_date") >= lit(cutoffs(c)))
+              .reduce(_ || _))
+          (rebuilt, old => old.where(col("use_case") =!= uc.name ||
+            uc.cadences.map(c =>
+              col("cadence") === c.toUpperCase && col("from_date") < lit(cutoffs(c)))
+              .reduce(_ || _)))
+        case _ =>
+          (buildInsights(source, uc), old => old.where(col("use_case") =!= uc.name))
+      }
+      existing.map(keepOld(_).unionByName(insights, allowMissingColumns = true))
+        .getOrElse(insights)
     }
-    val existing =
-      if (exists) Some(keepOld(spark.read.parquet(insightsLocation)))
-      else None
-    val unioned = existing.map(_.unionByName(insights, allowMissingColumns = true))
-      .getOrElse(insights)
-    val stage = insightsLocation.stripSuffix("/") + "__stage"
-    unioned.write.mode("overwrite").parquet(stage)
-    graft.io.StagedSwap.commit(
-      spark.sparkContext.hadoopConfiguration, insightsLocation, stage)
     spark.read.parquet(insightsLocation)
   }
 

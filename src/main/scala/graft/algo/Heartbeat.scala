@@ -90,7 +90,6 @@ object Heartbeat {
       controlLocation: String,
       sources: Seq[Source],
       jobTrigger: JobTrigger): Seq[Result] = {
-    val sensor = new Sensor(spark, controlLocation)
     sources.filter(_.enabled).map { src =>
       val spec = InputSpec(
         specId = src.sensorId,
@@ -99,7 +98,7 @@ object Heartbeat {
         location = Some(src.location),
         schema = src.schema,
         options = src.options)
-      val acquired = sensor.checkUpstream(src.sensorId, spec)
+      val acquired = SensorControl.checkUpstream(spark, controlLocation, src.sensorId, spec)
       val triggered =
         if (acquired && src.jobId.nonEmpty) {
           jobTrigger.trigger(src.jobId, src.sensorId)
@@ -159,8 +158,8 @@ object Heartbeat {
     "job_start_timestamp" -> lit(null).cast("timestamp"),
     "job_end_timestamp" -> lit(null).cast("timestamp"))
 
-  /** Sensor-table id for a control row (reference sanitization:
-    * `[ :.]` -> `_`, suffixed with the trigger job). */
+  /** Sensor-table id (or asset) for a control row — the reference's
+    * `generate_unique_column_values`: `[ :.]` -> `_`, + `_<trigger job>`. */
   def sensorTableId(sensorId: String, triggerJobId: String): String =
     sensorId.replaceAll("[ :.]", "_") + "_" + triggerJobId
 
@@ -203,7 +202,6 @@ object Heartbeat {
         (col("status").isNull || col("status") === Completed))
       .select("sensor_id", "trigger_job_id", "upstream_key", "preprocess_query")
       .collect().toSeq
-    val sensor = new Sensor(spark, sensorControlLocation)
     val hits = active.flatMap { r =>
       val (sid, job) = (r.getString(0), r.getString(1))
       val spec = InputSpec(
@@ -213,7 +211,7 @@ object Heartbeat {
       // an upstream that does not exist yet is simply "no data" for a
       // heartbeat sweep — the next sweep retries it
       val acquired = scala.util.Try(
-        sensor.checkUpstream(sensorTableId(sid, job), spec,
+        SensorControl.checkUpstream(spark, sensorControlLocation, sensorTableId(sid, job), spec,
           preprocessQuery = Option(r.getString(3)).filter(_.nonEmpty)))
         .getOrElse(false)
       if (acquired) Some(sid -> job) else None
@@ -292,8 +290,8 @@ object Heartbeat {
     val control = readControl(spark, controlLocation)
     val rows = control.where(col("trigger_job_id") === jobId)
       .select("sensor_id").collect().map(_.getString(0)).toSeq
-    val sensor = new Sensor(spark, sensorControlLocation)
-    rows.foreach(sid => sensor.markProcessed(sensorTableId(sid, jobId)))
+    rows.foreach(sid =>
+      SensorControl.updateSensorStatusById(spark, sensorTableId(sid, jobId), sensorControlLocation))
     val hit = col("trigger_job_id") === jobId
     writeControl(control
       .withColumn("status", when(hit, Completed).otherwise(col("status")))

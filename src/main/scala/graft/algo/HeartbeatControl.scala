@@ -1,5 +1,6 @@
 package graft.algo
 
+import graft.io.TableRef
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,15 +28,7 @@ import org.apache.spark.sql.functions._
   */
 object HeartbeatControl {
 
-  val NewEventAvailable = "NEW_EVENT_AVAILABLE"
-  val InProgress = "IN_PROGRESS"
-  val Completed = "COMPLETED"
-
-  /** Heartbeat control-table state columns (everything else in the feed
-    * is definition). */
-  val StateColumns: Seq[String] = Seq(
-    "latest_event_fetched_timestamp", "status", "status_change_timestamp",
-    "job_start_timestamp", "job_end_timestamp")
+  import Heartbeat.{Completed, InProgress, NewEventAvailable, StateColumns, sensorTableId}
 
   /** `HeartbeatConfigSpec` (reference `core/definitions.py`). */
   final case class Spec(
@@ -81,11 +74,6 @@ object HeartbeatControl {
       domain = A.str(m, "domain"))
   }
 
-  /** `generate_unique_column_values`: `[ :.]` -> `_`, suffixed with the
-    * partner column (sensor ids are unique per trigger job). */
-  def uniqueColumnValue(mainCol: String, colToAppend: String): String =
-    mainCol.replaceAll("[ :.]", "_") + "_" + colToAppend
-
   // -------------------------------------------------------------------
   // Data feed (`heartbeat_sensor_control_table_data_feed`)
   // -------------------------------------------------------------------
@@ -105,7 +93,7 @@ object HeartbeatControl {
     val merged = feed.join(state, Seq("sensor_id", "trigger_job_id"), "left")
     val aligned = merged.select(target.schema.fields.map(f =>
       col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-    SensorControl.overwriteTable(spark, controlTable, aligned)
+    TableRef.rewrite(spark, controlTable)(_ => aligned.coalesce(1))
   }
 
   // -------------------------------------------------------------------
@@ -146,8 +134,8 @@ object HeartbeatControl {
         new java.text.SimpleDateFormat("yyyyMMddHHmmss").format(ts)
       }).getOrElse("19000101000000")
     val base: Map[String, Any] = Map(
-      "sensor_id" -> uniqueColumnValue(sensorId, triggerJobId),
-      "assets" -> Seq(uniqueColumnValue(
+      "sensor_id" -> sensorTableId(sensorId, triggerJobId),
+      "assets" -> Seq(sensorTableId(
         s("asset_description").getOrElse(""), triggerJobId)),
       "control_db_table_name" -> spec.lakehouseEngineSensorDbTable,
       "input_spec" -> (Map(
@@ -351,14 +339,9 @@ object HeartbeatControl {
       .withColumn("status_change_timestamp", lit(ts).cast("timestamp"))
       .withColumn("job_end_timestamp", lit(ts).cast("timestamp"))
     // sensor PROCESSED updates first, as in the reference
-    val sensorIds = jobRows.withColumn("sensor_table_sensor_id",
-        concat_ws("_",
-          regexp_replace(col("sensor_id"), "[ :\\.]", "_"),
-          col("trigger_job_id")))
-      .select("sensor_table_sensor_id").collect().map(_.getString(0))
-    sensorIds.foreach { sid =>
-      SensorControl.updateSensorStatus(spark,
-        SensorControl.Spec(sid, Seq.empty, sensorTable, None, None, None),
+    jobRows.select("sensor_id", "trigger_job_id").collect().foreach { r =>
+      SensorControl.updateSensorStatus(spark, SensorControl.Spec(
+        sensorTableId(r.getString(0), r.getString(1)), Seq.empty, sensorTable, None, None, None),
         SensorControl.Processed, statusChangeTimestamp = Some(ts))
     }
     mergeByKeys(spark, controlTable, jobRows, extraTargetCond = lit(true))
@@ -384,7 +367,6 @@ object HeartbeatControl {
     val kept = target.filter(not(coalesce(isHit, lit(false))))
     val aligned = updated.select(target.schema.fields.map(f =>
       col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-    SensorControl.overwriteTable(spark, controlTable,
-      kept.unionByName(aligned))
+    TableRef.rewrite(spark, controlTable)(_ => kept.unionByName(aligned).coalesce(1))
   }
 }

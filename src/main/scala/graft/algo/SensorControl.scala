@@ -1,23 +1,27 @@
 package graft.algo
 
-import graft.io.Readers
+import graft.io.{Readers, TableRef}
 import graft.spec.InputSpec
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Verbatim port of the reference sensor contract: control-table manager,
-  * upstream query generators and the sensor algorithm run loop.
+/** The sensor engine: a port of the reference sensor contract —
+  * control-table manager, upstream query generators and the sensor
+  * algorithm run loop (`core/sensor_manager.py:24-407`,
+  * `algorithms/sensor.py:25-167`, `engine.py:326-406` (facades),
+  * `core/definitions.py:1083-1169` (SensorSpec / SENSOR_SCHEMA / update
+  * set / allowed formats)).
   *
-  * This complements [[Sensor]] (the location-based capability engine) with
-  * the reference's exact choreography over a `db.table` control table:
-  * `core/sensor_manager.py:24-407`, `algorithms/sensor.py:25-167`,
-  * `engine.py:326-406` (facades), `core/definitions.py:1083-1169`
-  * (SensorSpec / SENSOR_SCHEMA / update set / allowed formats). The
-  * control table MERGE runs as a staged parquet rewrite (no Delta jars in
-  * the build); the row-level semantics match the reference's
-  * whenMatchedUpdate(set)/whenNotMatchedInsertAll clauses.
+  * The control table is a catalog table or view, or a storage location
+  * ([[graft.io.TableRef]]); a location with no table yet starts empty
+  * with [[SensorSchema]]. Reads settle an interrupted commit first, and
+  * the MERGE runs as a staged rewrite ([[graft.io.TableRef.rewrite]]; no
+  * Delta jars in the build) with the reference's
+  * whenMatchedUpdate(set)/whenNotMatchedInsertAll row semantics. The ACON
+  * path ([[executeSensor]]) and [[checkUpstream]] (behind
+  * `Engine.executeSensor` and [[Heartbeat]]) share one engine.
   *
   * Scale note: the control table is config-sized (one row per sensor), so
   * the full-table rewrite the merge performs is bounded; upstream reads
@@ -84,7 +88,6 @@ object SensorControl {
   // Control table manager (core/sensor_manager.py:24-231)
   // ------------------------------------------------------------------
 
-  /** `read_sensor_table_data`: by sensor_id, or by exact asset array. */
   /** `_get_sensor_update_set` (sensor_manager.py:169-187): the MERGE
     * update-set mapping — the base columns always, plus each optional
     * field whose value is Python-truthy (non-empty list / non-empty
@@ -104,9 +107,15 @@ object SensorControl {
       extras.collect { case (c, true) => s"sensors.$c" -> s"updates.$c" }).toMap
   }
 
+  private def emptyControl(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], SensorSchema)
+
+  /** `read_sensor_table_data`: by sensor_id, or by exact asset array, read
+    * after settling an interrupted commit of the control table (a location
+    * with no table yet holds no rows). */
   def readSensorTableData(spark: SparkSession, controlDbTableName: String,
       sensorId: Option[String] = None, assets: Seq[String] = Seq.empty): Option[Row] = {
-    var df = spark.table(controlDbTableName)
+    var df = TableRef.read(spark, controlDbTableName).getOrElse(emptyControl(spark))
     if (sensorId.isDefined) df = df.where(col("sensor_id") === sensorId.get)
     else if (assets.nonEmpty) df = df.where(col("assets") === array(assets.map(lit): _*))
     else throw new IllegalArgumentException(
@@ -114,10 +123,15 @@ object SensorControl {
     df.take(1).headOption
   }
 
+  /** A sensor's status in the control table; None when not registered. */
+  def sensorStatus(spark: SparkSession, sensorId: String,
+      controlDbTableName: String): Option[String] =
+    readSensorTableData(spark, controlDbTableName, Some(sensorId))
+      .map(r => r.getString(r.fieldIndex("status")))
+
   def checkIfSensorHasAcquiredData(spark: SparkSession, sensorId: String,
       controlDbTableName: String): Boolean =
-    readSensorTableData(spark, controlDbTableName, Some(sensorId))
-      .exists(r => r.getString(r.fieldIndex("status")) == Acquired)
+    sensorStatus(spark, sensorId, controlDbTableName).contains(Acquired)
 
   /** `update_sensor_status` (sensor_manager.py:54-127): MERGE one update
     * row into the control table — matched rows refresh the update set
@@ -130,14 +144,10 @@ object SensorControl {
       statusChangeTimestamp: Option[java.sql.Timestamp] = None): Unit = {
     val now = statusChangeTimestamp.getOrElse(
       new java.sql.Timestamp(System.currentTimeMillis()))
-    val table = spec.controlDbTableName
-    val ctrl = spark.table(table)
-    val tgtCols = ctrl.columns.toSeq
-
     val newValues: Map[String, Column] = Map(
       "sensor_id" -> lit(spec.sensorId),
       "assets" -> (if (spec.assets.nonEmpty) array(spec.assets.map(lit): _*)
-        else lit(null).cast(ArrayType(StringType))),
+        else lit(null).cast(SensorSchema("assets").dataType)),
       "status" -> lit(status),
       "status_change_timestamp" -> lit(now),
       "checkpoint_location" -> lit(spec.checkpointLocation.orNull),
@@ -148,69 +158,58 @@ object SensorControl {
       spec.checkpointLocation, upstreamKey, upstreamValue)
       .keySet.map(_.stripPrefix("sensors."))
 
-    val matchedExists = ctrl.where(col("sensor_id") === spec.sensorId).take(1).nonEmpty
-    val merged =
-      if (matchedExists)
-        ctrl.select(tgtCols.map { c =>
-          if (updateSet.contains(c))
-            when(col("sensor_id") === spec.sensorId, newValues(c).cast(ctrl.schema(c).dataType))
-              .otherwise(col(c)).as(c)
-          else col(c)
-        }: _*)
-      else {
-        // whenNotMatchedInsertAll: target columns populated by name
-        val insert = spark.range(1).select(tgtCols.map(c =>
-          newValues(c).cast(ctrl.schema(c).dataType).as(c)): _*)
-        ctrl.unionByName(insert)
-      }
-
-    overwriteTable(spark, table, merged)
-  }
-
-  /** Full-table staged-swap rewrite of a (config-sized) control table —
-    * the MERGE materialization for catalogs without a transactional
-    * format. */
-  private[algo] def overwriteTable(spark: SparkSession, table: String,
-      df: DataFrame): Unit = {
-    val location = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(
-        table.split("\\.").last, table.split("\\.").dropRight(1).lastOption))
-      .location.toString
-    val stage = location.stripSuffix("/") + "__stage"
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    graft.io.StagedSwap.commit(spark.sparkContext.hadoopConfiguration, location, stage)
-    spark.catalog.refreshTable(table)
+    TableRef.rewrite(spark, spec.controlDbTableName) { current =>
+      val ctrl = current.getOrElse(emptyControl(spark))
+      val tgtCols = ctrl.columns.toSeq
+      val matchedExists = ctrl.where(col("sensor_id") === spec.sensorId).take(1).nonEmpty
+      val merged =
+        if (matchedExists)
+          ctrl.select(tgtCols.map { c =>
+            if (updateSet.contains(c))
+              when(col("sensor_id") === spec.sensorId, newValues(c).cast(ctrl.schema(c).dataType))
+                .otherwise(col(c)).as(c)
+            else col(c)
+          }: _*)
+        else {
+          // whenNotMatchedInsertAll: target columns populated by name
+          val insert = spark.range(1).select(tgtCols.map(c =>
+            newValues(c).cast(ctrl.schema(c).dataType).as(c)): _*)
+          ctrl.unionByName(insert)
+        }
+      merged.coalesce(1)
+    }
   }
 
   // ------------------------------------------------------------------
   // Upstream query generators (core/sensor_manager.py:233-407)
   // ------------------------------------------------------------------
 
-  /** `generate_filter_exp_query`: COUNT-based probe with
-    * `?upstream_key`/`?upstream_value` substitution from the control
-    * table's stored watermark. */
-  def generateFilterExpQuery(spark: SparkSession, sensorId: String,
+  /** `generate_filter_exp_query`: COUNT-based probe. With an upstream
+    * key, `?upstream_key`/`?upstream_value` are substituted — the value
+    * stored in the control table (when one is named) wins over
+    * `upstreamValue`; a control table without an upstream key raises.
+    * `spark` is only used to read the control table. */
+  def generateFilterExpQuery(spark: => SparkSession, sensorId: String,
       filterExp: String, controlDbTableName: Option[String] = None,
       upstreamKey: Option[String] = None, upstreamValue: Option[String] = None,
       upstreamTableName: Option[String] = None): String = {
     val sourceTable = upstreamTableName.getOrElse("sensor_new_data")
-    var selectExp = "SELECT COUNT(1) as count"
-    var exp = filterExp
-    controlDbTableName.foreach { ctrlTable =>
-      val triggerName = upstreamKey.getOrElse(throw new IllegalArgumentException(
-        "If control_db_table_name is defined, upstream_key should also be defined!"))
-      var triggerValue = upstreamValue.getOrElse("-2147483647")
-      readSensorTableData(spark, ctrlTable, Some(sensorId)).foreach { row =>
-        val idx = row.fieldIndex("upstream_value")
-        if (!row.isNullAt(idx) && row.getString(idx).nonEmpty)
-          triggerValue = row.getString(idx)
-      }
-      exp = exp.replace("?upstream_key", triggerName)
-        .replace("?upstream_value", triggerValue)
-      selectExp = s"SELECT COUNT(1) as count, '$triggerName' as UPSTREAM_KEY, " +
-        s"max($triggerName) as UPSTREAM_VALUE"
+    if (controlDbTableName.isDefined && upstreamKey.isEmpty)
+      throw new IllegalArgumentException(
+        "If control_db_table_name is defined, upstream_key should also be defined!")
+    upstreamKey match {
+      case None =>
+        s"SELECT COUNT(1) as count FROM $sourceTable WHERE $filterExp HAVING COUNT(1) > 0"
+      case Some(key) =>
+        val stored = controlDbTableName
+          .flatMap(readSensorTableData(spark, _, Some(sensorId)))
+          .filter(_.schema.fieldNames.contains("upstream_value"))
+          .flatMap(r => Option(r.getAs[String]("upstream_value"))).filter(_.nonEmpty)
+        val value = stored.orElse(upstreamValue).getOrElse("-2147483647")
+        val exp = filterExp.replace("?upstream_key", key).replace("?upstream_value", value)
+        s"SELECT COUNT(1) as count, '$key' as UPSTREAM_KEY, max($key) as UPSTREAM_VALUE " +
+          s"FROM $sourceTable WHERE $exp HAVING COUNT(1) > 0"
     }
-    s"$selectExp FROM $sourceTable WHERE $exp HAVING COUNT(1) > 0"
   }
 
   /** `generate_sensor_table_preprocess_query`: the sensor-on-sensor CDF
@@ -222,7 +221,7 @@ object SensorControl {
       s" and status = '$Processed'"
 
   /** `engine.generate_sensor_query` dispatch (engine.py:360-406). */
-  def generateSensorQuery(spark: SparkSession, sensorId: String,
+  def generateSensorQuery(spark: => SparkSession, sensorId: String,
       filterExp: Option[String] = None, controlDbTableName: Option[String] = None,
       upstreamKey: Option[String] = None, upstreamValue: Option[String] = None,
       upstreamTableName: Option[String] = None): String =
@@ -252,16 +251,47 @@ object SensorControl {
   final case class SensorAlreadyExistsException(msg: String) extends RuntimeException(msg)
   final case class NoNewDataException(msg: String) extends RuntimeException(msg)
 
+  private def noNewData(sensorId: String) =
+    NoNewDataException(s"No data was acquired by $sensorId sensor.")
+
+  /** `execute_sensor` over a sensor ACON: returns whether the sensor's
+    * status is ACQUIRED_NEW_DATA after the run (the reference's answer). */
   def executeSensor(spark: SparkSession, spec: Spec): Boolean = {
     validateSpec(spec)
+    acquire(spark, spec)
+    val hasNewData = checkIfSensorHasAcquiredData(spark, spec.sensorId,
+      spec.controlDbTableName)
+    if (spec.failOnEmptyResult && !hasNewData) throw noNewData(spec.sensorId)
+    hasNewData
+  }
+
+  /** `execute_sensor` without an ACON (`Engine.executeSensor`, the
+    * location-addressed [[Heartbeat]]): [[executeSensor]] minus the ACON
+    * data-format allowlist. A streaming upstream checkpoints at
+    * `<control location>__ckpt/<sensorId>`. Returns whether THIS call
+    * acquired new data; with `failOnEmptyResult` an empty upstream
+    * raises [[NoNewDataException]] instead. */
+  def checkUpstream(spark: SparkSession, control: String, sensorId: String,
+      upstream: InputSpec, preprocessQuery: Option[String] = None,
+      assets: Seq[String] = Seq.empty, failOnEmptyResult: Boolean = false): Boolean = {
+    val checkpoint = TableRef.location(spark, control)
+      .map(loc => s"${loc.stripSuffix("/")}__ckpt/$sensorId")
+    val acquired = acquire(spark,
+      Spec(sensorId, assets, control, Some(upstream), preprocessQuery, checkpoint))
+    if (failOnEmptyResult && !acquired) throw noNewData(sensorId)
+    acquired
+  }
+
+  /** Check registration, read the upstream (reader factory + optional
+    * preprocess over the `sensor_new_data` view — streaming-safe: the SQL
+    * applies as a streaming transformation) and flip the sensor to
+    * ACQUIRED_NEW_DATA when it has rows. Returns whether it had rows. */
+  private def acquire(spark: SparkSession, spec: Spec): Boolean = {
     if (sensorAlreadyExists(spark, spec))
       throw SensorAlreadyExistsException(
         "There's already a sensor registered with same id or assets!")
 
     val input = spec.inputSpec.getOrElse(sys.error("sensor needs input_spec"))
-    // read_new_data: reader factory + optional preprocess over the
-    // `sensor_new_data` view (streaming-safe: the SQL applies as a
-    // streaming transformation)
     var newData = Readers.read(spark, input)
     spec.preprocessQuery.foreach { q =>
       newData.createOrReplaceTempView("sensor_new_data")
@@ -269,50 +299,47 @@ object SensorControl {
     }
 
     if (input.readType == "streaming") {
+      val found = new java.util.concurrent.atomic.AtomicBoolean(false)
       newData.writeStream
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", spec.checkpointLocation.getOrElse(
           sys.error("streaming sensor needs base_checkpoint_location")))
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          runBatchSensor(spark, spec, batch)
+          if (runBatchSensor(spark, spec, batch)) found.set(true)
         }.start().awaitTermination()
+      found.get()
     } else {
       runBatchSensor(spark, spec, newData)
     }
-
-    val hasNewData = checkIfSensorHasAcquiredData(spark, spec.sensorId,
-      spec.controlDbTableName)
-    if (spec.failOnEmptyResult && !hasNewData)
-      throw NoNewDataException(s"No data was acquired by ${spec.sensorId} sensor.")
-    hasNewData
   }
 
   /** `_check_if_sensor_already_exists`: same id with different assets, or
-    * same assets under a different id. */
+    * same assets under a different id (a sensor without assets has no
+    * asset set to collide on). */
   private[algo] def sensorAlreadyExists(spark: SparkSession, spec: Spec): Boolean = {
     val byId = readSensorTableData(spark, spec.controlDbTableName, Some(spec.sensorId))
     byId match {
       case Some(row) if Option(row.getSeq[String](row.fieldIndex("assets")))
           .getOrElse(Seq.empty) != spec.assets => true
       case _ =>
-        readSensorTableData(spark, spec.controlDbTableName, assets = spec.assets)
-          .exists(r => r.getString(r.fieldIndex("sensor_id")) != spec.sensorId)
+        spec.assets.nonEmpty &&
+          readSensorTableData(spark, spec.controlDbTableName, assets = spec.assets)
+            .exists(r => r.getString(r.fieldIndex("sensor_id")) != spec.sensorId)
     }
   }
 
-  private def runBatchSensor(spark: SparkSession, spec: Spec, df: DataFrame): Unit = {
+  /** Flip the sensor to ACQUIRED_NEW_DATA, with the watermark columns
+    * (`UPSTREAM_KEY`/`UPSTREAM_VALUE`) when present, if `df` has a row. */
+  private def runBatchSensor(spark: SparkSession, spec: Spec, df: DataFrame): Boolean = {
     val first = df.take(1).headOption
     first.foreach { row =>
-      val key =
-        if (df.columns.contains("UPSTREAM_KEY"))
-          Option(row.get(row.fieldIndex("UPSTREAM_KEY"))).map(String.valueOf(_))
+      def watermark(c: String): Option[String] =
+        if (df.columns.contains(c)) Option(row.get(row.fieldIndex(c))).map(String.valueOf(_))
         else None
-      val value =
-        if (df.columns.contains("UPSTREAM_VALUE"))
-          Option(row.get(row.fieldIndex("UPSTREAM_VALUE"))).map(String.valueOf(_))
-        else None
-      updateSensorStatus(spark, spec, Acquired, key, value)
+      updateSensorStatus(spark, spec, Acquired,
+        watermark("UPSTREAM_KEY"), watermark("UPSTREAM_VALUE"))
     }
+    first.isDefined
   }
 
   /** `_validate_sensor_spec` (sensor.py:147-164): read-type/data-format

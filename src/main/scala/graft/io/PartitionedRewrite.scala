@@ -3,6 +3,7 @@ package graft.io
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** The one staged-rewrite path for parquet locations — merge,
   * delete-where, optimize (compaction and Z-order) and index compaction
@@ -10,7 +11,8 @@ import org.apache.spark.sql.functions.col
   *
   *   - [[rewriteAll]]: the whole location is read, transformed, written
   *     to a stage dir with its partition layout and swapped in by
-  *     [[StagedSwap.commit]];
+  *     [[StagedSwap.commit]] (control tables and GAB insights commit this
+  *     way too, through [[TableRef.rewrite]] and `Gab.execute`);
   *   - [[resolveTouched]] + [[rewriteTouched]]: only the partitions an
   *     operation touches are read and rewritten, via one stage write + a
   *     rename of each staged partition dir into place, leaving every other
@@ -96,21 +98,25 @@ private[graft] object PartitionedRewrite {
   }
 
   /** Rewrite all of `loc`: settle an interrupted commit, read the
-    * location, write `transform` of its rows to `<loc>__stage` with the
-    * `declared` layout (the discovered one when none is declared) and
-    * swap the stage in with [[StagedSwap.commit]]. `transform` also gets
-    * the layout its output is written with. */
+    * location (with `schema` when given), write `transform` of its rows to
+    * `<loc>__stage` with the `declared` layout (the discovered one when
+    * none is declared) and swap the stage in with [[StagedSwap.commit]].
+    * `transform` gets None when no table is at `loc` after settling (no
+    * rows yet), and the layout its output is written with. */
   def rewriteAll(spark: SparkSession, loc: String, fmt: String = "parquet",
-      options: Map[String, String] = Map.empty, declared: Seq[String] = Nil)(
-      transform: (DataFrame, Seq[String]) => DataFrame): Unit = {
+      options: Map[String, String] = Map.empty, declared: Seq[String] = Nil,
+      schema: Option[StructType] = None)(
+      transform: (Option[DataFrame], Seq[String]) => DataFrame): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     StagedSwap.recover(conf, loc)
     val root = new Path(loc)
-    val layout =
-      if (declared.nonEmpty) declared else discoverLayout(root.getFileSystem(conf), root)
+    val fs = root.getFileSystem(conf)
+    val layout = if (declared.nonEmpty) declared else discoverLayout(fs, root)
+    val reader = spark.read.format(fmt)
+    val current =
+      if (fs.exists(root)) Some(schema.fold(reader)(s => reader.schema(s)).load(loc)) else None
     val stage = loc.stripSuffix("/") + "__stage"
-    val w = transform(spark.read.format(fmt).load(loc), layout)
-      .write.format(fmt).options(options).mode("overwrite")
+    val w = transform(current, layout).write.format(fmt).options(options).mode("overwrite")
     (if (layout.nonEmpty) w.partitionBy(layout: _*) else w).save(stage)
     StagedSwap.commit(conf, loc, stage)
   }

@@ -414,7 +414,8 @@ object Writers {
           partitionScopedMerge(spark, source, opts, mergeFmt, spec.options, loc, discovered))
         return
       PartitionedRewrite.rewriteAll(spark, loc, mergeFmt, spec.options, spec.partitions) {
-        (target, _) =>
+        (current, _) =>
+          val target = current.get // settled above, and the target exists
           val (t2, s2, opts2) =
             if (autoMerge) MergeOps.evolveForAutoMerge(target, source, opts)
             else (target, source, opts)

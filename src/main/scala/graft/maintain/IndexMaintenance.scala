@@ -75,7 +75,8 @@ object IndexMaintenance {
       distinctRows: Boolean = false,
       targetFileBytes: Long = 128L << 20): CompactionResult = {
     var result: CompactionResult = null
-    graft.io.PartitionedRewrite.rewriteAll(spark, location) { (df0, partCols) =>
+    graft.io.PartitionedRewrite.rewriteAll(spark, location) { (current, partCols) =>
+      val df0 = current.getOrElse(sys.error(s"compaction: no table at $location"))
       // files and bytes from the listing the read already made
       val files = df0.inputFiles.length
       val bytes = df0.queryExecution.optimizedPlan.stats.sizeInBytes.toLong

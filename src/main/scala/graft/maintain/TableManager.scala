@@ -77,7 +77,8 @@ final class TableManager(spark: SparkSession) {
         PartitionedRewrite.rewriteTouched(spark, location, partCols, t)(
           _.where(s"NOT ($condition)"))
       case PartitionedRewrite.NotScopable =>
-        PartitionedRewrite.rewriteAll(spark, location)((df, _) => df.where(s"NOT ($condition)"))
+        PartitionedRewrite.rewriteAll(spark, location)((df, _) =>
+          df.get.where(s"NOT ($condition)")) // the table exists (checked above)
     }
   }
 

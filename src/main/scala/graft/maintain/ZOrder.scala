@@ -171,7 +171,8 @@ object ZOrder {
       targetPartitions: Int = 0,
       curve: String = "zorder"): Unit =
     graft.io.PartitionedRewrite.rewriteAll(spark, location) { (df, partCols) =>
-      cluster(df, partCols, zorderCols, targetPartitions, curve)
+      cluster(df.getOrElse(sys.error(s"z-order: no table at $location")), partCols,
+        zorderCols, targetPartitions, curve)
     }
 
   /** `df` clustered by the chosen space-filling curve of `zorderCols`

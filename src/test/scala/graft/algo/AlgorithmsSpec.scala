@@ -26,17 +26,16 @@ class AlgorithmsSpec extends SparkSpec {
     val ctl = tmpDir("sensor") + "/control"
     val dataDir = tmpDir("sensor-data")
     Seq((1, "x")).toDF("id", "v").write.mode("overwrite").parquet(s"$dataDir/up")
-    val sensor = new Sensor(spark, ctl)
     val spec = InputSpec(specId = "up", dataFormat = Some("parquet"),
       location = Some(s"$dataDir/up"))
-    assert(sensor.checkUpstream("s1", spec))
-    assert(sensor.status("s1").contains(Sensor.Acquired))
-    sensor.markProcessed("s1")
-    assert(sensor.status("s1").contains(Sensor.Processed))
+    assert(SensorControl.checkUpstream(spark, ctl, "s1", spec))
+    assert(SensorControl.sensorStatus(spark, "s1", ctl).contains(SensorControl.Acquired))
+    SensorControl.updateSensorStatusById(spark, "s1", ctl)
+    assert(SensorControl.sensorStatus(spark, "s1", ctl).contains(SensorControl.Processed))
     // preprocess query that matches nothing -> no new data
-    assert(!sensor.checkUpstream("s2", spec,
+    assert(!SensorControl.checkUpstream(spark, ctl, "s2", spec,
       preprocessQuery = Some("SELECT * FROM sensor_new_data WHERE id > 100")))
-    assert(sensor.status("s2").isEmpty)
+    assert(SensorControl.sensorStatus(spark, "s2", ctl).isEmpty)
   }
 
   test("sensor registration contract: duplicate id/assets raise; fail_on_empty_result; assets survive status changes") {
@@ -45,34 +44,38 @@ class AlgorithmsSpec extends SparkSpec {
     val ctl = tmpDir("sensor-reg") + "/control"
     val dataDir = tmpDir("sensor-reg-data")
     Seq((1, "x")).toDF("id", "v").write.mode("overwrite").parquet(s"$dataDir/up")
-    val sensor = new Sensor(spark, ctl)
     val spec = InputSpec(specId = "up", dataFormat = Some("parquet"),
       location = Some(s"$dataDir/up"))
-    assert(sensor.checkUpstream("sensor_id_1", spec, assets = Seq("dummy_asset_1")))
+    assert(SensorControl.checkUpstream(spark, ctl, "sensor_id_1", spec,
+      assets = Seq("dummy_asset_1")))
 
     // Same asset under a different sensor id.
-    val byAssets = intercept[Sensor.SensorAlreadyExistsException] {
-      sensor.checkUpstream("sensor_id_2", spec, assets = Seq("dummy_asset_1"))
+    val byAssets = intercept[SensorControl.SensorAlreadyExistsException] {
+      SensorControl.checkUpstream(spark, ctl, "sensor_id_2", spec,
+      assets = Seq("dummy_asset_1"))
     }
     assert(byAssets.getMessage ==
       "There's already a sensor registered with same id or assets!")
     // Same sensor id with different assets.
-    intercept[Sensor.SensorAlreadyExistsException] {
-      sensor.checkUpstream("sensor_id_1", spec, assets = Seq("dummy_asset_2"))
+    intercept[SensorControl.SensorAlreadyExistsException] {
+      SensorControl.checkUpstream(spark, ctl, "sensor_id_1", spec,
+      assets = Seq("dummy_asset_2"))
     }
     // Re-running the SAME registration is fine (the sensor's normal loop).
-    assert(sensor.checkUpstream("sensor_id_1", spec, assets = Seq("dummy_asset_1")))
+    assert(SensorControl.checkUpstream(spark, ctl, "sensor_id_1", spec,
+      assets = Seq("dummy_asset_1")))
 
     // Status change must not erase the assets registration.
-    sensor.markProcessed("sensor_id_1")
-    assert(sensor.status("sensor_id_1").contains(Sensor.Processed))
-    intercept[Sensor.SensorAlreadyExistsException] {
-      sensor.checkUpstream("sensor_id_3", spec, assets = Seq("dummy_asset_1"))
+    SensorControl.updateSensorStatusById(spark, "sensor_id_1", ctl)
+    assert(SensorControl.sensorStatus(spark, "sensor_id_1", ctl).contains(SensorControl.Processed))
+    intercept[SensorControl.SensorAlreadyExistsException] {
+      SensorControl.checkUpstream(spark, ctl, "sensor_id_3", spec,
+      assets = Seq("dummy_asset_1"))
     }
 
     // fail_on_empty_result: an empty upstream raises instead of false.
-    intercept[Sensor.NoNewDataException] {
-      sensor.checkUpstream("sensor_id_4", spec,
+    intercept[SensorControl.NoNewDataException] {
+      SensorControl.checkUpstream(spark, ctl, "sensor_id_4", spec,
         preprocessQuery = Some("SELECT * FROM sensor_new_data WHERE id > 100"),
         failOnEmptyResult = true)
     }
@@ -89,22 +92,21 @@ class AlgorithmsSpec extends SparkSpec {
     Seq((1, "a")).toDF("id", "v").write.format("jdbc").options(opts).save()
 
     val ctl = tmpDir("sensor-jdbc-ctl") + "/control"
-    val sensor = new Sensor(spark, ctl)
     val spec = InputSpec(specId = "up", dataFormat = Some("jdbc"), options = opts)
-    assert(sensor.checkUpstream("j1", spec,
+    assert(SensorControl.checkUpstream(spark, ctl, "j1", spec,
       preprocessQuery = Some("SELECT * FROM sensor_new_data WHERE id > 0")))
-    assert(sensor.status("j1").contains(Sensor.Acquired))
-    sensor.markProcessed("j1")
+    assert(SensorControl.sensorStatus(spark, "j1", ctl).contains(SensorControl.Acquired))
+    SensorControl.updateSensorStatusById(spark, "j1", ctl)
     // Watermarked query sees nothing new after processing id <= 1...
-    assert(!sensor.checkUpstream("j1", spec,
+    assert(!SensorControl.checkUpstream(spark, ctl, "j1", spec,
       preprocessQuery = Some("SELECT * FROM sensor_new_data WHERE id > 1")))
-    assert(sensor.status("j1").contains(Sensor.Processed))
+    assert(SensorControl.sensorStatus(spark, "j1", ctl).contains(SensorControl.Processed))
     // ...until new rows land in the JDBC table.
     Seq((2, "b")).toDF("id", "v").write.format("jdbc").options(opts)
       .mode("append").save()
-    assert(sensor.checkUpstream("j1", spec,
+    assert(SensorControl.checkUpstream(spark, ctl, "j1", spec,
       preprocessQuery = Some("SELECT * FROM sensor_new_data WHERE id > 1")))
-    assert(sensor.status("j1").contains(Sensor.Acquired))
+    assert(SensorControl.sensorStatus(spark, "j1", ctl).contains(SensorControl.Acquired))
   }
 
   test("dq validator over a file input") {
@@ -427,9 +429,8 @@ class AlgorithmsSpec extends SparkSpec {
     val done = Heartbeat.readControl(spark, ctl)
     assert(done.where("trigger_job_id = 'job-B' AND status = 'COMPLETED' " +
       "AND job_end_timestamp IS NOT NULL").count() == 1)
-    val sensor = new Sensor(spark, sctl)
-    assert(sensor.status(Heartbeat.sensorTableId("sb1", "job-B"))
-      .contains(Sensor.Processed))
+    assert(SensorControl.sensorStatus(spark, Heartbeat.sensorTableId("sb1", "job-B"), sctl)
+      .contains(SensorControl.Processed))
     // a COMPLETED row is active again; a plain batch sensor with no
     // preprocess query re-fires on any non-empty upstream (incremental
     // detection is the preprocess query's job, as in the reference)
@@ -497,23 +498,22 @@ class AlgorithmsSpec extends SparkSpec {
     val r2 = Heartbeat.run(spark, ctl, Seq(src), trig)
     assert(r2 == Seq(Heartbeat.Result("lnd1", acquiredNewData = true, Some("job-lnd"))))
     assert(triggered.toSeq == Seq("job-lnd" -> "lnd1"))
-    val sensor = new Sensor(spark, ctl)
-    assert(sensor.status("lnd1").contains(Sensor.Acquired))
+    assert(SensorControl.sensorStatus(spark, "lnd1", ctl).contains(SensorControl.Acquired))
 
     // downstream consumed; sweep 3 sees the SAME file — checkpointed
     // stream yields nothing new, job must NOT re-fire
-    sensor.markProcessed("lnd1")
+    SensorControl.updateSensorStatusById(spark, "lnd1", ctl)
     val r3 = Heartbeat.run(spark, ctl, Seq(src), trig)
     assert(r3 == Seq(Heartbeat.Result("lnd1", acquiredNewData = false, None)))
     assert(triggered.size == 1)
-    assert(sensor.status("lnd1").contains(Sensor.Processed))
+    assert(SensorControl.sensorStatus(spark, "lnd1", ctl).contains(SensorControl.Processed))
 
     // a second file lands → sweep 4 re-acquires and re-fires
     Files.writeString(Paths.get(s"$up/batch2.csv"), "3,c\n")
     val r4 = Heartbeat.run(spark, ctl, Seq(src), trig)
     assert(r4 == Seq(Heartbeat.Result("lnd1", acquiredNewData = true, Some("job-lnd"))))
     assert(triggered.toSeq == Seq("job-lnd" -> "lnd1", "job-lnd" -> "lnd1"))
-    assert(sensor.status("lnd1").contains(Sensor.Acquired))
+    assert(SensorControl.sensorStatus(spark, "lnd1", ctl).contains(SensorControl.Acquired))
   }
 
   test("reconciliator thresholds: green within, raises on red") {

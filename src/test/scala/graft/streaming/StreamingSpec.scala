@@ -162,20 +162,20 @@ class StreamingSpec extends SparkSpec {
     val dataDir = tmpDir("st-sensor")
     val ctl = tmpDir("st-sensor-ctl") + "/control"
     writeEvents(s"$dataDir/up", "2024-01-01 10:00:00,u1,1.0\n")
-    val sensor = new graft.algo.Sensor(spark, ctl)
     val spec = graft.spec.InputSpec(
       specId = "up", readType = "streaming", dataFormat = Some("csv"),
       location = Some(s"$dataDir/up"),
       schema = Some("ts TIMESTAMP, user STRING, value DOUBLE"),
       options = Map("header" -> "true"))
-    assert(sensor.checkUpstream("s-stream", spec))
-    assert(sensor.status("s-stream").contains(graft.algo.Sensor.Acquired))
+    assert(graft.algo.SensorControl.checkUpstream(spark, ctl, "s-stream", spec))
+    assert(graft.algo.SensorControl.sensorStatus(spark, "s-stream", ctl)
+      .contains(graft.algo.SensorControl.Acquired))
     // a sensor over an empty directory acquires nothing
     val emptyDir = s"$dataDir/empty"
     Files.createDirectories(Paths.get(emptyDir))
-    assert(!sensor.checkUpstream("s-empty",
+    assert(!graft.algo.SensorControl.checkUpstream(spark, ctl, "s-empty",
       spec.copy(specId = "up-empty", location = Some(emptyDir))))
-    assert(sensor.status("s-empty").isEmpty)
+    assert(graft.algo.SensorControl.sensorStatus(spark, "s-empty", ctl).isEmpty)
   }
 
   test("streaming weighted reservoir equals the batch weightedSample at every prefix") {
@@ -325,9 +325,10 @@ class StreamingSpec extends SparkSpec {
         .as[String].collect().toSeq == Seq("""{"id":2}"""))
       assert(sink.where("success = true").count() >= 1)
       // the landing zone is sensable downstream
-      val sensor = new graft.algo.Sensor(spark, tmpDir("ks-ctl") + "/control")
-      assert(sensor.checkUpstream("ks", graft.spec.InputSpec(
-        specId = "landing", dataFormat = Some("parquet"), location = Some(out))))
+      val sensorCtl = tmpDir("ks-ctl") + "/control"
+      assert(graft.algo.SensorControl.checkUpstream(spark, sensorCtl, "ks",
+        graft.spec.InputSpec(specId = "landing", dataFormat = Some("parquet"),
+          location = Some(out))))
     } finally {
       q.stop()
       runner.join(30000)
