@@ -53,6 +53,8 @@ class ReferenceEngineUsageSpec extends SparkSpec with ReferenceHarness {
 
   test("engine usage: load_data with a simple acon records verbatim") { usage {
     val scenario = "load_simple_acon"
+    assume(new java.io.File(s"$res/$scenario/data").isDirectory,
+      s"missing $res/$scenario/data")
     val tmp = tmpDir("ref-usage")
     val in = s"$tmp/in/feature/engine_usage_stats/$scenario/data/"
     Files.createDirectories(Paths.get(in))
@@ -78,6 +80,8 @@ class ReferenceEngineUsageSpec extends SparkSpec with ReferenceHarness {
   test("engine usage: load_data with custom transformer + df records verbatim") {
     usage {
       val scenario = "load_custom_transf_and_df"
+      assume(new java.io.File(s"$res/$scenario/data").isDirectory,
+        s"missing $res/$scenario/data")
       val tmp = tmpDir("ref-usage")
       val in = s"$tmp/in/feature/engine_usage_stats/$scenario/data/"
       Files.createDirectories(Paths.get(in))
@@ -111,6 +115,8 @@ class ReferenceEngineUsageSpec extends SparkSpec with ReferenceHarness {
 
   test("engine usage: manage_table records verbatim") { usage {
     val scenario = "table_manager"
+    assume(new java.io.File(s"$res/$scenario/data").isDirectory,
+      s"missing $res/$scenario/data")
     graft.Engine.manageTable(spark,
       """{"function": "execute_sql", "sql": "select 1",
         |"exec_env": {"dp_name": "table_manager"}}""".stripMargin,
@@ -120,6 +126,8 @@ class ReferenceEngineUsageSpec extends SparkSpec with ReferenceHarness {
 
   test("engine usage: execute_dq_validation records verbatim") { usage {
     val scenario = "dq_validator"
+    assume(new java.io.File(s"$res/$scenario/data").isDirectory,
+      s"missing $res/$scenario/data")
     ensureTestDb()
     val tmp = tmpDir("ref-usage")
     val in = s"$tmp/in/feature/engine_usage_stats/$scenario/data/"

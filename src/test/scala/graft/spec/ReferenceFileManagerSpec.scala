@@ -43,6 +43,7 @@ class ReferenceFileManagerSpec extends SparkSpec {
   // ---- test_file_manager_s3.py::test_file_manager_s3 -------------------
 
   test("s3 copy + delete scenarios run verbatim (2000-object pagination)") {
+    assume(new java.io.File(s3Res).isDirectory, s"missing $s3Res")
     val fake = new FakeS3().start()
     try {
       fake.createBucket("test_bucket")
@@ -93,6 +94,7 @@ class ReferenceFileManagerSpec extends SparkSpec {
 
   for (storageClass <- Seq("GLACIER", "GLACIER_IR", "DEEP_ARCHIVE"))
     test(s"s3 restore request + status scenario runs verbatim ($storageClass)") {
+      assume(new java.io.File(s3Res).isDirectory, s"missing $s3Res")
       val fake = new FakeS3().start()
       try {
         fake.createBucket("test_bucket")
@@ -122,6 +124,7 @@ class ReferenceFileManagerSpec extends SparkSpec {
 
   for (storageClass <- Seq("GLACIER", "GLACIER_IR", "DEEP_ARCHIVE"))
     test(s"s3 restore-to-destination-and-wait scenario runs verbatim ($storageClass)") {
+      assume(new java.io.File(s3Res).isDirectory, s"missing $s3Res")
       val fake = new FakeS3().start()
       try {
         fake.createBucket("test_bucket")
@@ -180,6 +183,7 @@ class ReferenceFileManagerSpec extends SparkSpec {
   // ---- test_file_manager_dbfs.py::test_file_manager_dbfs ---------------
 
   test("dbfs copy + delete + move scenarios run verbatim") {
+    assume(new java.io.File(dbfsRes).isDirectory, s"missing $dbfsRes")
     val root = tmpDir("fm-dbfs") + "/dbfs"
     Files.createDirectories(Paths.get(root))
     Files.writeString(Paths.get(s"$root/test_single_file.json"), "")

@@ -153,7 +153,9 @@ class ReferenceGabSpec extends SparkSpec with ReferenceHarness {
 
   // ---- scenario driver (test_gab.py:266-409) -------------------------
 
-  private def runScenario(useCaseStages: String, name: String): GabChoreography.RunLog =
+  private def runScenario(useCaseStages: String, name: String): GabChoreography.RunLog = {
+    // before `setup`, which reads the fixtures
+    assume(new java.io.File(gabRes).isDirectory, s"missing $gabRes")
     gabConf {
       setup
       val acon = Files.readString(Paths.get(
@@ -162,6 +164,7 @@ class ReferenceGabSpec extends SparkSpec with ReferenceHarness {
       GabChoreography.execute(spark,
         GabChoreography.specFromAcon(acon, LocalDateTime.of(2026, 1, 1, 0, 0)))
     }
+  }
 
   private def assertGoldAssets(assets: Seq[String], schemaName: String): Unit =
     gabConf {

@@ -79,6 +79,7 @@ class ReferenceHeartbeatSpec extends SparkSpec with ReferenceHarness {
 
   for (sc <- scenarios)
     test(s"heartbeat scenario ${sc.name} runs verbatim") { heartbeatConf {
+      assume(new java.io.File(res).isDirectory, s"missing $res")
       val heartbeatTable = "test_db.heartbeat_sensor_control_table"
       val sensorTable = "test_db.sensor_table"
       createTable(sc.name, "heartbeat_sensor_control_table")

@@ -74,6 +74,7 @@ class ReferenceHeartbeatUnitSpec extends SparkSpec with ReferenceHarness {
 
   for (sc <- anchorScenarios)
     test(s"heartbeat anchor job: ${sc.name}") { unitConf {
+      assume(new java.io.File(unitRes).isDirectory, s"missing $unitRes")
       createTable("heartbeat_anchor_job", "heartbeat_sensor_control_table")
       try {
         spark.sql("INSERT INTO test_db.heartbeat_sensor_control_table " +
@@ -121,6 +122,7 @@ class ReferenceHeartbeatUnitSpec extends SparkSpec with ReferenceHarness {
     }
 
   test("heartbeat acon creation: delta_table") { unitConf {
+    assume(new java.io.File(unitRes).isDirectory, s"missing $unitRes")
     createTable("heartbeat_acon_creation", "heartbeat_sensor_control_table")
     try {
       spark.sql("""INSERT INTO test_db.heartbeat_sensor_control_table VALUES
@@ -141,6 +143,7 @@ class ReferenceHeartbeatUnitSpec extends SparkSpec with ReferenceHarness {
   }}
 
   test("heartbeat acon creation: kafka") { unitConf {
+    assume(new java.io.File(unitRes).isDirectory, s"missing $unitRes")
     createTable("heartbeat_acon_creation", "heartbeat_sensor_control_table")
     try {
       spark.sql("""INSERT INTO test_db.heartbeat_sensor_control_table VALUES
@@ -176,6 +179,7 @@ class ReferenceHeartbeatUnitSpec extends SparkSpec with ReferenceHarness {
   }}
 
   test("heartbeat acon creation: sap_b4") { unitConf {
+    assume(new java.io.File(unitRes).isDirectory, s"missing $unitRes")
     createTable("heartbeat_acon_creation", "heartbeat_sensor_control_table")
     createTable("heartbeat_acon_creation", "sensor_table")
     try {

@@ -31,6 +31,8 @@ class ReferenceJdbcReaderSpec extends SparkSpec with ReferenceHarness {
 
   for (scenario <- Seq("jdbc_function", "jdbc_format"))
     test(s"$scenario / correct_arguments runs verbatim") {
+      assume(new java.io.File(s"$res/$scenario/correct_arguments").isDirectory,
+        s"missing $res/$scenario/correct_arguments")
       ensureTestDb()
       val tmp = tmpDir("jdbc-reader")
       val in = s"$tmp/in/feature/jdbc_reader/$scenario/correct_arguments"
@@ -47,6 +49,8 @@ class ReferenceJdbcReaderSpec extends SparkSpec with ReferenceHarness {
     }
 
   test("jdbc_function / wrong_arguments surfaces the unexpected-kwarg error") {
+    assume(new java.io.File(s"$res/jdbc_function/wrong_arguments").isDirectory,
+      s"missing $res/jdbc_function/wrong_arguments")
     val tmp = tmpDir("jdbc-reader")
     val err = intercept[WrongArgumentsException] {
       graft.algo.DataLoader.loadData(spark,
@@ -57,6 +61,8 @@ class ReferenceJdbcReaderSpec extends SparkSpec with ReferenceHarness {
   }
 
   test("jdbc_format / wrong_arguments surfaces Spark's required-option error") {
+    assume(new java.io.File(s"$res/jdbc_format/wrong_arguments").isDirectory,
+      s"missing $res/jdbc_format/wrong_arguments")
     val tmp = tmpDir("jdbc-reader")
     val err = intercept[Exception] {
       graft.algo.DataLoader.loadData(spark,
@@ -68,6 +74,8 @@ class ReferenceJdbcReaderSpec extends SparkSpec with ReferenceHarness {
   }
 
   test("jdbc_format / predicates raises: predicates need jdbc_args") {
+    assume(new java.io.File(s"$res/jdbc_format/predicates").isDirectory,
+      s"missing $res/jdbc_format/predicates")
     val tmp = tmpDir("jdbc-reader")
     val err = intercept[WrongArgumentsException] {
       graft.algo.DataLoader.loadData(spark,

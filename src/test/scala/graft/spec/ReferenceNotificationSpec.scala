@@ -16,7 +16,13 @@ import java.util.concurrent.{CopyOnWriteArrayList, CountDownLatch}
   * driver's own regexes, plus the error contracts. */
 class ReferenceNotificationSpec extends SparkSpec {
 
-  private val attachmentsPath = "/root/reference/tests/resources/feature/notification/"
+  /** Stand-ins for the reference's attachments, vendored with its file
+    * names (FIXTURES.md §9). */
+  private val attachmentsPath = {
+    val url = getClass.getResource("/notification/")
+    assert(url != null, "missing fixture notification/")
+    new java.io.File(url.toURI).getPath + "/"
+  }
 
   // ---- debug SMTP server (tests/utils/smtp_server.py) -----------------
 

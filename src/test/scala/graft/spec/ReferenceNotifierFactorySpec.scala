@@ -12,7 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * from terminate specs through a real SMTP exchange). */
 class ReferenceNotifierFactorySpec extends AnyFunSuite {
 
-  private val attachmentsPath = "/root/reference/tests/resources/feature/notification/"
+  /** Stand-ins for the reference's attachments, vendored with its file
+    * names (FIXTURES.md §9). */
+  private val attachmentsPath = {
+    val url = getClass.getResource("/notification/")
+    assert(url != null, "missing fixture notification/")
+    new java.io.File(url.toURI).getPath + "/"
+  }
 
   private def emailArgs(extra: (String, Any)*): Map[String, Any] =
     Map[String, Any](

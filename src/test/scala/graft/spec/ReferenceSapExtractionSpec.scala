@@ -234,6 +234,7 @@ class ReferenceSapExtractionSpec extends SparkSpec with ReferenceHarness {
       val testName = if (adso == "AQ") "extract_aq_dso" else "extract_cl_dso"
       val changelog = if (adso == "AQ") "dummy_table" else "dummy_table_cl"
       val res = s"$b4Res/$testName"
+      assume(new java.io.File(res).isDirectory, s"missing $res")
       val tmp = tmpDir("sap-b4")
       val dbUrl = s"jdbc:derby:$tmp/tests.db;create=true"
       val outLoc = s"$tmp/out/data"
@@ -348,6 +349,7 @@ class ReferenceSapExtractionSpec extends SparkSpec with ReferenceHarness {
       val requestColName = if (wodso) "request" else "actrequest"
       val changelog = if (wodso) "dummy_table" else "dummy_table_cl"
       val res = s"$bwRes/$testName"
+      assume(new java.io.File(res).isDirectory, s"missing $res")
       val tmp = tmpDir("sap-bw")
       val dbUrl = s"jdbc:derby:$tmp/tests.db;create=true"
       val outLoc = s"$tmp/out/data"
@@ -392,6 +394,7 @@ class ReferenceSapExtractionSpec extends SparkSpec with ReferenceHarness {
   for (logsys <- Seq(Some("DHACLNT003"), None))
     test(s"sap_bw changelog table derivation (logsys=${logsys.getOrElse("auto")})") {
       val res = s"$bwRes/derive_changelog_table_name"
+      assume(new java.io.File(res).isDirectory, s"missing $res")
       val tmp = tmpDir("sap-bw-derive")
       val dbUrl = s"jdbc:derby:$tmp/tests.db;create=true"
       val odsobject = if (logsys.isDefined) "testtable" else "test_table"
