@@ -18,7 +18,9 @@ import scala.collection.mutable
   *     DQ spec attached to a streaming pipeline — is moved into the
   *     output's per-micro-batch (foreachBatch) plan, preserving order;
   *     `force_streaming` opts out
-  *   - DQ specs run between transform and write for batch inputs
+  *   - DQ specs run between transform and write for batch inputs; a
+  *     batch DQ spec's validated frame is evaluated once, so the rows it
+  *     counts are the rows its outputs write
   *   - terminators run after all writes
   */
 final class DataLoader(
@@ -122,16 +124,20 @@ final class DataLoader(
     * result sink and the processed keys, raise a failed run, and return
     * the validated (optionally tagged) frame. The failed run's results
     * land in the sink BEFORE the policy raises (reference dq_factory.py
-    * _process_chunk order). */
+    * _process_chunk order). The validated frame is evaluated once, in
+    * the pass that counts it ([[DQEngine.stageOutcome]], job description
+    * `dq:<spec_id>`); the sink, the processed keys, the tagging and every
+    * output read that evaluation, so the rows the run counts are the rows
+    * it writes. */
   private def runDq(df: DataFrame, dq: DQSpec): DataFrame = {
-    val (result, failure) = DQEngine.runOutcome(spark, df, dq)
+    val (staged, result, failure) = DQEngine.stageOutcome(spark, df, dq)
     dq.resultSink.foreach { sink =>
-      val sdf = DQEngine.resultSinkOutput(spark, df, dq, result)
+      val sdf = DQEngine.resultSinkOutput(spark, staged, dq, result)
       Writers.writeBatch(spark, DQEngine.resultSinkSpec(dq, sink), sdf)
     }
-    graft.dq.Prisma.writeProcessedKeys(spark, dq, df, result.runName)
+    graft.dq.Prisma.writeProcessedKeys(spark, dq, staged, result.runName)
     failure.foreach(throw _)
-    if (dq.tagSourceData) DQEngine.tagSource(df, dq, result) else df
+    if (dq.tagSourceData) DQEngine.tagSource(staged, dq, result) else staged
   }
 
   /** PRISMA resolution at the load execution point

@@ -74,6 +74,12 @@ object HeartbeatControl {
       domain = A.str(m, "domain"))
   }
 
+  /** The control table's rows, read through [[TableRef.read]], which
+    * settles an interrupted commit of the table first. */
+  private def controlRows(spark: SparkSession, controlTable: String): DataFrame =
+    TableRef.read(spark, controlTable).getOrElse(
+      sys.error(s"heartbeat control table $controlTable holds no table"))
+
   // -------------------------------------------------------------------
   // Data feed (`heartbeat_sensor_control_table_data_feed`)
   // -------------------------------------------------------------------
@@ -87,7 +93,7 @@ object HeartbeatControl {
       controlTable: String): Unit = {
     val feed = spark.read.format("csv").option("header", "true").load(feedPath)
       .withColumn("job_state", upper(col("job_state")))
-    val target = spark.table(controlTable)
+    val target = controlRows(spark, controlTable)
     val state = target.select(
       ("sensor_id" +: "trigger_job_id" +: StateColumns).map(col): _*)
     val merged = feed.join(state, Seq("sensor_id", "trigger_job_id"), "left")
@@ -104,7 +110,7 @@ object HeartbeatControl {
     * status null or COMPLETED. */
   def activeHeartbeatJobs(spark: SparkSession, controlTable: String,
       sensorSource: String): DataFrame =
-    spark.table(controlTable)
+    controlRows(spark, controlTable)
       .filter(lower(col("sensor_source")) === sensorSource.toLowerCase)
       .filter("job_state == 'UNPAUSED' and (status is null OR status == 'COMPLETED')")
 
@@ -253,7 +259,7 @@ object HeartbeatControl {
     val newJobs = scopedControl
       .filter(s"status == '$NewEventAvailable'")
       .select("trigger_job_id").distinct()
-    val fullData = spark.table(controlTable)
+    val fullData = controlRows(spark, controlTable)
       .select(col("trigger_job_id"), col("status"),
         upper(col("dependency_flag")).as("dependency_flag"))
       .distinct()
@@ -294,11 +300,11 @@ object HeartbeatControl {
       now: Option[java.sql.Timestamp] = None): Seq[String] = {
     val nowCol = now.map(lit(_).cast("timestamp")).getOrElse(current_timestamp())
     val controlTable = spec.heartbeatSensorDbTable
-    val scoped = spark.table(controlTable).filter(
+    val scoped = controlRows(spark, controlTable).filter(
       lower(col("sensor_source")) === spec.sensorSource.toLowerCase &&
         col("job_state") === "UNPAUSED")
     val jobs = jobsToTrigger(spark, controlTable, scoped)
-    val full = spark.table(controlTable)
+    val full = controlRows(spark, controlTable)
     val fired = jobs.filter { jobId =>
       anchorJobRecord(full, jobId, spec.sensorSource).take(1).nonEmpty &&
         runJob(jobId).isDefined
@@ -333,7 +339,7 @@ object HeartbeatControl {
       sensorTable: String, jobId: String,
       now: Option[java.sql.Timestamp] = None): Unit = {
     val ts = now.getOrElse(new java.sql.Timestamp(System.currentTimeMillis()))
-    val jobRows = spark.table(controlTable)
+    val jobRows = controlRows(spark, controlTable)
       .filter(col("trigger_job_id") === jobId)
       .withColumn("status", lit(Completed))
       .withColumn("status_change_timestamp", lit(ts).cast("timestamp"))
@@ -358,7 +364,7 @@ object HeartbeatControl {
     * bounded. */
   private def mergeByKeys(spark: SparkSession, controlTable: String,
       updated: DataFrame, extraTargetCond: Column): Unit = {
-    val target = spark.table(controlTable)
+    val target = controlRows(spark, controlTable)
     val keys = updated
       .select(concat_ws("||", col("sensor_id"), col("trigger_job_id")))
       .collect().map(_.getString(0)).toSeq.distinct

@@ -1,8 +1,12 @@
 package graft.dq
 
+import graft.exec.Stage
 import graft.spec.{DQFunctionSpec, DQSpec}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.graft.ObservedMetrics
 
 /** Exception raised when a DQ process breaches its failure policy
   * (reference `DQValidationsFailedException`). */
@@ -270,10 +274,11 @@ object DQEngine {
 
   /** Table expectations expressible as plain aggregate columns: the
     * aggregates to fold into ONE combined pass plus the outcome built
-    * from the corresponding value slice. [[run]] coalesces every such
-    * expectation in a suite into a single `df.agg(...)` — a suite with N
-    * aggregate expectations costs one scan, not N, the table-level
-    * analogue of the single-scan row-expectation pass. */
+    * from the corresponding value slice. [[runOutcome]] and
+    * [[stageOutcome]] fold every such expectation in a suite into one
+    * pass (a collect or an observation) — a suite with N aggregate
+    * expectations costs one scan, not N, the table-level analogue of the
+    * single-scan row-expectation pass. */
   private def aggExpectation(
       f: DQFunctionSpec): Option[(Seq[Column], Seq[Any] => ExpectationOutcome)] = {
     val a = f.args
@@ -679,9 +684,64 @@ object DQEngine {
 
   /** Run a DQ spec: one scan for every row-level and aggregate table
     * expectation + one action per other table-level expectation; apply
-    * the failure policy. */
+    * the failure policy. The aggregates are evaluated by one collect. */
   def runOutcome(spark: SparkSession, df: DataFrame,
       spec: DQSpec): (DQRunResult, Option[DQValidationFailedException]) = {
+    val (_, result, failure) = outcome(spark, df, spec) { aggs =>
+      (df, if (aggs.isEmpty) None else Some(df.agg(aggs.head, aggs.tail: _*).collect()(0)))
+    }
+    (result, failure)
+  }
+
+  /** Run a DQ spec over one staged evaluation of `df`, and return the
+    * stage with the outcome. The stage is one eager pass
+    * ([[graft.exec.Stage]], job description `dq:<spec_id>`) that also
+    * observes the row and aggregate expectations, so the rows the run
+    * counts are the rows every later reader of the stage sees. DISTINCT
+    * aggregates, which observations reject, and the other table
+    * expectations are evaluated on the stage. */
+  def stageOutcome(spark: SparkSession, df: DataFrame, spec: DQSpec)
+      : (DataFrame, DQRunResult, Option[DQValidationFailedException]) = {
+    val name = s"dq:${spec.specId}"
+    outcome(spark, df, spec) { aggs =>
+      val named = aggs.zipWithIndex.map { case (c, i) => c.as(s"__a$i") }
+      val isDistinct = if (aggs.isEmpty) Seq.empty else distinctAggregates(df, named)
+      val (distinct, observed) = named.indices.partition(isDistinct)
+      val observing =
+        if (observed.isEmpty) df
+        else df.observe(name, named(observed.head), observed.tail.map(named): _*)
+      val staged = Stage.eager(observing, name)
+      val values = new Array[Any](aggs.size)
+      if (observed.nonEmpty) {
+        val row = ObservedMetrics.of(observing)(name)
+        observed.zipWithIndex.foreach { case (i, j) => values(i) = row.get(j) }
+      }
+      if (distinct.nonEmpty) {
+        val row = staged.agg(named(distinct.head), distinct.tail.map(named): _*).collect()(0)
+        distinct.zipWithIndex.foreach { case (i, j) => values(i) = row.get(j) }
+      }
+      (staged, if (aggs.isEmpty) None else Some(Row.fromSeq(values.toSeq)))
+    }
+  }
+
+  /** Which of `aggs` hold a DISTINCT aggregate (`count_distinct` et al.),
+    * read off the analyzed `df.agg(aggs)`; no job runs. */
+  private def distinctAggregates(df: DataFrame, aggs: Seq[Column]): Seq[Boolean] =
+    df.agg(aggs.head, aggs.tail: _*).queryExecution.analyzed match {
+      case a: Aggregate => a.aggregateExpressions.map(_.exists {
+        case e: AggregateExpression => e.isDistinct
+        case _ => false
+      })
+      case other => sys.error(s"unexpected aggregate plan: ${other.nodeName}")
+    }
+
+  /** The one evaluation plan behind [[runOutcome]] and [[stageOutcome]]:
+    * `evaluate` gets the spec's aggregate columns (possibly none) and
+    * returns the frame every other read of the run uses plus the
+    * aggregates' values (None when there are none). */
+  private def outcome(spark: SparkSession, df: DataFrame, spec: DQSpec)(
+      evaluate: Seq[Column] => (DataFrame, Option[Row]))
+      : (DataFrame, DQRunResult, Option[DQValidationFailedException]) = {
     // Each function instance carries its own critical flag — the same
     // function name may appear in both lists with different args, so
     // outcomes must never be classified by name.
@@ -690,9 +750,9 @@ object DQEngine {
     val rowFns = allFns.flatMap { case (f, crit) => rowPredicate(f).map(p => (f, crit, p)) }
     val tableFns = allFns.filter { case (f, _) => rowPredicate(f).isEmpty }
 
-    // ONE df.agg action scans the input for every row expectation's
-    // counts and every aggregate-expressible table expectation; the other
-    // table expectations evaluate one by one.
+    // ONE evaluation of the aggregates scans the input for every row
+    // expectation's counts and every aggregate-expressible table
+    // expectation; the other table expectations evaluate one by one.
     //
     // GX column-map semantics: a row whose predicate is NULL (the null
     // domain of the expectation, e.g. a NULL value under
@@ -716,8 +776,7 @@ object DQEngine {
       case ((_, crit, Some((aggs, mk))), i) => (i, crit, aggs, mk)
     }
     val allAggs = rowAggs ++ planned.flatMap(_._3)
-    val aggRow =
-      if (allAggs.isEmpty) None else Some(df.agg(allAggs.head, allAggs.tail: _*).collect()(0))
+    val (evaluated, aggRow) = evaluate(allAggs)
 
     val rowOutcomes: Seq[(ExpectationOutcome, Boolean)] = aggRow match {
       case Some(row) if rowFns.nonEmpty =>
@@ -742,7 +801,7 @@ object DQEngine {
       else rowOutcomes.zip(rowFns).map { case ((o, crit), (_, _, pred)) =>
         if (o.success || o.unexpectedCount == 0) (o, crit)
         else {
-          val sample = df.where(coalesce(!pred, lit(false)))
+          val sample = evaluated.where(coalesce(!pred, lit(false)))
             .select(to_json(struct(spec.unexpectedRowsPk.map(col): _*)))
             .limit(UnexpectedSampleLimit)
             .collect().map(_.getString(0)).toSeq
@@ -761,7 +820,7 @@ object DQEngine {
     val tableOutcomes: Seq[(ExpectationOutcome, Boolean)] =
       aggPlans.zipWithIndex.flatMap {
         case ((_, _, Some(_)), i) => combined.get(i)
-        case ((f, crit, None), _) => tableExpectation(spark, df, f).map(_ -> crit)
+        case ((f, crit, None), _) => tableExpectation(spark, evaluated, f).map(_ -> crit)
       }
     val unknown = tableFns.filterNot { case (f, _) =>
       tableOutcomes.exists(_._1.function == f.function)
@@ -801,7 +860,7 @@ object DQEngine {
         s"DQ run ${result.runName} failed: " +
           failed.map(o => s"${o.function}(${o.unexpectedCount}/${o.elementCount})")
             .mkString("; ")))
-    (result, failure)
+    (evaluated, result, failure)
   }
 
   /** Run a DQ spec and apply the failure policy. Like the reference
@@ -940,9 +999,6 @@ object DQEngine {
     untouched.unionByName(perChunk, allowMissingColumns = false)
   }
 
-  /** Result sink honoring the chunking config: full-coverage chunked
-    * layout when failing PKs are tracked, the plain per-expectation
-    * layout otherwise. */
   /** Exploded result sinks splat expectation kwargs into columns, so the
     * column set varies run to run; the reference therefore writes them with
     * mergeSchema=true (`dq_processors/dq_factory.py:952`). Default it on
@@ -985,20 +1041,18 @@ object DQEngine {
   }
 
   /** Result-sink layout dispatch: Some(true) = reference EXPLODED,
-    * Some(false) = reference RAW, None = the engine-local flat layout. */
+    * Some(false) = reference RAW, None = the engine-local flat layout
+    * (chunked over the failing keys when `unexpected_rows_pk` is set). The
+    * driver-built layouts are written from one partition: one file per
+    * run, not one per outcome row. */
   def resultSinkOutput(spark: SparkSession, df: DataFrame, spec: DQSpec,
       result: DQRunResult): DataFrame =
     spec.resultSinkExplode match {
-      case Some(true) => resultSinkExploded(spark, spec, result)
-      case Some(false) => resultSinkRaw(spark, spec, result)
-      case None => resultSinkFor(spark, df, spec, result)
+      case Some(true) => resultSinkExploded(spark, spec, result).coalesce(1)
+      case Some(false) => resultSinkRaw(spark, spec, result).coalesce(1)
+      case None if spec.unexpectedRowsPk.nonEmpty => resultSinkDfChunked(spark, df, spec, result)
+      case None => resultSinkDf(spark, result, spec.specId).coalesce(1)
     }
-
-  def resultSinkFor(
-      spark: SparkSession, df: DataFrame, spec: DQSpec,
-      result: DQRunResult): DataFrame =
-    if (spec.unexpectedRowsPk.nonEmpty) resultSinkDfChunked(spark, df, spec, result)
-    else resultSinkDf(spark, result, spec.specId)
 
   /** The reference's EXPLODED result-sink layout (`dq_factory.py`
     * result-sink explode + `tests/.../data_validator_schema.json`): one

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -78,11 +78,12 @@ private[graft] object PartitionedRewrite {
       touched: TouchedDirs, fmt: String = "parquet",
       options: Map[String, String] = Map.empty)(transform: DataFrame => DataFrame): Unit = {
     val base = loc.stripSuffix("/")
-    val reader = spark.read.format(fmt).option("basePath", loc)
+    def read(dirs: Seq[String]) =
+      ParquetSchema.load(spark, dirs.map(n => s"$base/$n"), Map("basePath" -> loc), fmt)
     val existing = touched.names.filter(touched.live)
     val slice =
-      if (existing.nonEmpty) reader.load(existing.map(n => s"$base/$n"): _*)
-      else reader.load(s"$base/${touched.live.head}").limit(0)
+      if (existing.nonEmpty) read(existing)
+      else read(Seq(touched.live.head)).limit(0)
     val conf = spark.sparkContext.hadoopConfiguration
     val stage = new Path(base + "__stage_parts")
     val fs = stage.getFileSystem(conf)
@@ -112,9 +113,10 @@ private[graft] object PartitionedRewrite {
     val root = new Path(loc)
     val fs = root.getFileSystem(conf)
     val layout = if (declared.nonEmpty) declared else discoverLayout(fs, root)
-    val reader = spark.read.format(fmt)
     val current =
-      if (fs.exists(root)) Some(schema.fold(reader)(s => reader.schema(s)).load(loc)) else None
+      if (!fs.exists(root)) None
+      else Some(schema.fold(ParquetSchema.load(spark, Seq(loc), fmt = fmt))(
+        spark.read.format(fmt).schema(_).load(loc)))
     val stage = loc.stripSuffix("/") + "__stage"
     val w = transform(current, layout).write.format(fmt).options(options).mode("overwrite")
     (if (layout.nonEmpty) w.partitionBy(layout: _*) else w).save(stage)
@@ -149,6 +151,21 @@ private[graft] object PartitionedRewrite {
           .iterator.map(d => walk(d.getPath)).collectFirst { case Some(f) => f })
     }
     if (fs.exists(root)) walk(root) else None
+  }
+
+  /** Every file under `root` (`root` itself when it is a file), skipping
+    * entries whose name `skip` matches, files and dirs alike. Lists with
+    * `listStatus`: `FileSystem.listFiles` builds a `LocatedFileStatus` per
+    * file, which on the local file system forks a process to load the
+    * file's permissions. */
+  def leafFiles(fs: FileSystem, root: Path,
+      skip: String => Boolean = _ => false): Seq[FileStatus] = {
+    def walk(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.filterNot(s => skip(s.getPath.getName)).flatMap { s =>
+        if (s.isDirectory) walk(s.getPath) else Seq(s)
+      }
+    val status = fs.getFileStatus(root)
+    if (status.isFile) Seq(status) else walk(root)
   }
 
   /** Relative `c1=v1/c2=v2` dir paths at exactly `depth` levels under

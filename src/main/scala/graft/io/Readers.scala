@@ -143,18 +143,18 @@ object Readers {
           val r = spark.readStream.format(fileFormat).options(spec.options)
           // streaming file sources require a schema
           val withSchema = declared.map(r.schema)
-            .getOrElse(r.schema(spark.read.format(fileFormat).options(spec.options).load(loc).schema))
+            .getOrElse(r.schema(ParquetSchema.load(spark, Seq(loc), spec.options, fileFormat).schema))
           withSchema.load(loc)
         } else {
           // delta fallback: the write path evolves schemas across files
           // (deltaSchemaContract), so the table view is the FOOTER UNION
-          val r0 = spark.read.format(fileFormat).options(spec.options)
-          val r =
+          val options =
             if (requested == "delta" && fileFormat == "parquet" &&
                 !spec.options.contains("mergeSchema"))
-              r0.option("mergeSchema", "true")
-            else r0
-          declared.map(r.schema).getOrElse(r).load(loc)
+              spec.options + ("mergeSchema" -> "true")
+            else spec.options
+          declared.fold(ParquetSchema.load(spark, Seq(loc), options, fileFormat))(
+            spark.read.format(fileFormat).options(options).schema(_).load(loc))
         }
     }
 

@@ -31,7 +31,7 @@ private[graft] object TableRef {
       if (settled.exists(_ != "none")) spark.catalog.refreshTable(ref)
       Some(spark.table(ref))
     } else if (new Path(ref).getFileSystem(conf).exists(new Path(ref)))
-      Some(spark.read.parquet(ref))
+      Some(ParquetSchema.load(spark, Seq(ref)))
     else None
   }
 

@@ -129,13 +129,8 @@ object Versioned {
   private def listFilesRelative(fs: org.apache.hadoop.fs.FileSystem,
       root: Path): Seq[String] = {
     val rootStr = root.toUri.getPath.stripSuffix("/")
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next().getPath.toUri.getPath
-      out += f.stripPrefix(rootStr).stripPrefix("/")
-    }
-    out.toSeq
+    PartitionedRewrite.leafFiles(fs, root)
+      .map(_.getPath.toUri.getPath.stripPrefix(rootStr).stripPrefix("/"))
   }
 
   /** Record the file set present at `location` BEFORE an append lands —

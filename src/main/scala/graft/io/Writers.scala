@@ -400,8 +400,8 @@ object Writers {
       val evolving = autoMerge && {
         val tCols: Set[String] = PartitionedRewrite
           .firstDataFile(fs, new Path(loc))
-          .map(f => spark.read.format(mergeFmt).options(spec.options)
-            .load(f.toString).columns.map(_.toLowerCase).toSet ++
+          .map(f => ParquetSchema.load(spark, Seq(f.toString), spec.options, mergeFmt)
+            .columns.map(_.toLowerCase).toSet ++
             discovered.map(_.toLowerCase))
           .getOrElse(spark.read.format(mergeFmt).options(spec.options)
             .load(loc).columns.map(_.toLowerCase).toSet)
@@ -438,7 +438,11 @@ object Writers {
     *    un-read partition is missed and the row duplicates;
     *  - update/insert column sets must not assign partition columns (an
     *    assigned value could land outside the touched set, and the commit
-    *    would then replace that un-read live partition). */
+    *    would then replace that un-read live partition);
+    *  - the touched set and the merge read ONE evaluation of the source:
+    *    unless it is already materialized ([[graft.exec.Stage]]), it is
+    *    staged first (job description `merge-source:<location>`), so a
+    *    source nondeterministic in a partition column cannot do the same. */
   private def partitionScopedMerge(
       spark: SparkSession, source: DataFrame, opts: graft.spec.MergeOptions,
       mergeFmt: String, options: Map[String, String], loc: String,
@@ -448,14 +452,17 @@ object Writers {
     if (!pinned || (opts.updateColumnSet.keySet ++ opts.insertColumnSet.keySet)
         .exists(partCols.contains)) return false
     val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    PartitionedRewrite.resolveTouched(fs, loc, partCols, source) match {
+    val staged =
+      if (graft.exec.Stage.isMaterialized(source)) source
+      else graft.exec.Stage.eager(source, s"merge-source:$loc")
+    PartitionedRewrite.resolveTouched(fs, loc, partCols, staged) match {
       case PartitionedRewrite.NothingTouched => true
       case PartitionedRewrite.NotScopable => false
       case touched: PartitionedRewrite.TouchedDirs =>
         // merged values are source values cast to the slice's types, so
         // their dir spellings match the touched names (collision-checked)
         PartitionedRewrite.rewriteTouched(spark, loc, partCols, touched, mergeFmt, options)(
-          MergeOps.mergeWithOptions(_, source, opts))
+          MergeOps.mergeWithOptions(_, staged, opts))
         true
     }
   }

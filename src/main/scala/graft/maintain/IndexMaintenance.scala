@@ -41,23 +41,16 @@ object IndexMaintenance {
     val p = new Path(location)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return (0, 0L)
-    val it = fs.listFiles(p, true)
-    var files = 0
-    var bytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
+    val data = graft.io.PartitionedRewrite.leafFiles(fs, p).filterNot { f =>
       val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) {
-        files += 1; bytes += f.getLen
-      }
+      n.startsWith("_") || n.startsWith(".")
     }
-    (files, bytes)
+    (data.size, data.map(_.getLen).sum)
   }
 
   /** What a compaction read (data files, bytes) and its output task
     * count. `filesAfter` lists the location when it is first read: most
-    * callers never read it, and on the local file system a listing costs
-    * a process fork per file (Hadoop loads each file's permissions). */
+    * callers never read it. */
   final case class CompactionResult(filesBefore: Int, bytes: Long, outputTasks: Int)(
       countFiles: () => Int) {
     lazy val filesAfter: Int = countFiles()

@@ -27,7 +27,7 @@ final case class QueryDef(
 object QueryCatalog {
 
   private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.io.ParquetSchema.load(s, Seq(s"$dir/$name.parquet"))
 
   /** events.ts has shipped in two testdata vintages: parquet
     * TIMESTAMP(NANOS) — which Spark surfaces as a nanosecond long under

@@ -42,3 +42,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"right-only sample: ${right.take(5).mkString("; ")}")
   }
 }
+
+/** A call count shared by every task in the JVM (a counter captured in a
+  * closure would be copied into each task), for UDFs whose result
+  * depends on how often they ran. */
+object CallCounter {
+  val calls = new java.util.concurrent.atomic.AtomicLong
+}

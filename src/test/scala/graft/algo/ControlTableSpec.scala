@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 /** Sensor control tables and GAB insights: a control table written by the
   * earlier location-addressed sensor (5 columns) keeps working, and every
   * read of a control or insights table settles an interrupted commit
-  * before it rewrites the table. */
+  * before it rewrites the table; heartbeat control reads settle one too. */
 class ControlTableSpec extends SparkSpec {
 
   import spark.implicits._
@@ -122,6 +122,23 @@ class ControlTableSpec extends SparkSpec {
     assert(statuses(spark.table("ctl_torn")) ==
       Map("s1" -> SensorControl.Processed, "s2" -> SensorControl.Processed))
     spark.sql("DROP TABLE ctl_torn")
+  }
+
+  test("heartbeat control reads through a catalog table settle a torn commit first") {
+    val loc = tmpDir("hb-torn-table") + "/ctl"
+    spark.sql("DROP TABLE IF EXISTS hb_torn")
+    spark.sql("CREATE TABLE hb_torn (sensor_id string, trigger_job_id string, " +
+      s"sensor_source string, job_state string, status string) USING parquet LOCATION '$loc'")
+    Seq(("s1", "j1", "kafka", "UNPAUSED", null), ("s2", "j2", "kafka", "UNPAUSED", "IN_PROGRESS"))
+      .toDF("sensor_id", "trigger_job_id", "sensor_source", "job_state", "status")
+      .write.mode("append").insertInto("hb_torn")
+    // the interrupted commit completed j2
+    tear(loc, spark.read.parquet(loc).withColumn("status",
+      when(col("sensor_id") === "s2", lit("COMPLETED")).otherwise(col("status"))))
+    val active = HeartbeatControl.activeHeartbeatJobs(spark, "hb_torn", "kafka")
+    assertSettled(loc)
+    assert(active.select("sensor_id").as[String].collect().sorted.toSeq == Seq("s1", "s2"))
+    spark.sql("DROP TABLE hb_torn")
   }
 
   test("Gab.execute settles a torn insights commit before it replaces a use case") {

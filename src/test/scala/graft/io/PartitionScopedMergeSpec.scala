@@ -42,6 +42,22 @@ class PartitionScopedMergeSpec extends SparkSpec {
       .toDF("id", "name", "day", "op")
       .write.partitionBy("day").mode("overwrite").parquet(loc)
 
+  test("a source nondeterministic in its partition column keeps every live row") {
+    val loc = tmpDir("psm-nondeterministic") + "/t"
+    initTarget(loc)
+    graft.CallCounter.calls.set(0)
+    // day 10 on the first two calls, day 20 after them: a second
+    // evaluation of the source lands its rows in an untouched partition
+    val day = org.apache.spark.sql.functions.udf(() =>
+      if (graft.CallCounter.calls.incrementAndGet() <= 2) 10 else 20).asNondeterministic()
+    val source = Seq((5, "e", "U"), (6, "f", "U")).toDF("id", "name", "op")
+      .withColumn("day", day())
+    writeMerge(loc, source)
+    val out = spark.read.parquet(loc)
+    assert(out.select("id", "day").as[(Int, Int)].collect().sorted.toSeq ==
+      Seq(1 -> 10, 2 -> 10, 3 -> 20, 4 -> 30, 5 -> 10, 6 -> 10))
+  }
+
   test("merge rewrites only touched partitions; untouched files stay bit-identical") {
     val loc = tmpDir("psm") + "/t"
     initTarget(loc)

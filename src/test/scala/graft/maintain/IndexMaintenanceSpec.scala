@@ -3,6 +3,7 @@ package graft.maintain
 import graft.SparkSpec
 import graft.functions.{DedupFunctions, IvfPq, MinhashIndex}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** Compaction laws for the three persisted append-only indexes: the
@@ -18,6 +19,26 @@ class IndexMaintenanceSpec extends SparkSpec {
       (f"$prefix$i%03d",
         Seq.fill(2 + rng.nextInt(4))(blocks(rng.nextInt(blocks.size))).mkString(" "))
     }.toDF("doc_id", "text")
+  }
+
+  test("stats counts every data file under nested partitions, skipping _ and . names") {
+    val path = tmpDir("im-stats") + "/t"
+    Seq((1, "a", 1.0), (2, "b", 2.0), (3, "a", 3.0)).toDF("k", "grp", "v")
+      .write.partitionBy("grp", "k").parquet(path)
+    // a stray data file under a hidden dir counts; hidden names never do
+    val stray = new java.io.File(s"$path/_temporary/0/part-stray.parquet")
+    stray.getParentFile.mkdirs()
+    java.nio.file.Files.write(stray.toPath, Array.fill[Byte](17)(1))
+    new java.io.File(s"$path/grp=a/.hidden").mkdirs()
+    java.nio.file.Files.write(new java.io.File(s"$path/grp=a/_meta").toPath, Array[Byte](1))
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+    val data =
+      try walk.iterator().asScala.map(_.toFile).filter { f =>
+        f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")
+      }.toList
+      finally walk.close()
+    assert(data.size == 4) // three partition files and the stray one
+    assert(IndexMaintenance.stats(spark, path) == (data.size, data.map(_.length).sum))
   }
 
   test("chunk index: many appends -> compact: checkBatch identical, files drop, rows distinct") {

@@ -77,6 +77,20 @@ class PlanAuditSpec extends SparkSpec {
       .toSeq
   }
 
+  test("catalog tables: the driver-read schema is Spark's, and reading it runs no job") {
+    val tables = new java.io.File(sfDir).listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).sorted.toSeq
+    assert(tables.nonEmpty)
+    tables.foreach { t =>
+      val path = s"$sfDir/$t"
+      val (df, jobs) = org.apache.spark.JobCounter.jobs(spark.sparkContext) {
+        graft.io.ParquetSchema.load(spark, Seq(path))
+      }
+      assert(jobs.isEmpty, s"$t: ${jobs.size} jobs")
+      assert(df.schema == spark.read.parquet(path).schema, t)
+    }
+  }
+
   test("catalog plans: no undeclared nested-loop joins, no cartesian products") {
     val offenders = QueryCatalog.all.flatMap { q =>
       val plan = q.run(spark, sfDir).queryExecution.executedPlan
