@@ -168,18 +168,25 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val failCount = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+    // Spark jobs each query launched in its last successful pass: a
+    // counter that does not move with the host (the listener bus is
+    // drained outside the timed block)
+    val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     def runPass(): Map[String, Double] =
       ordered.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch {
-            case e: Throwable =>
-              errors(name) = e.getClass.getName
-              failCount(name) = failCount.getOrElse(name, 0) + 1
-              false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val ((ok, dt), launched) = org.apache.spark.JobCounter.jobs(spark.sparkContext) {
+          val t0 = System.nanoTime()
+          val ok =
+            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+            catch {
+              case e: Throwable =>
+                errors(name) = e.getClass.getName
+                failCount(name) = failCount.getOrElse(name, 0) + 1
+                false
+            }
+          (ok, (System.nanoTime() - t0) / 1e9)
+        }
+        if (ok) jobs(name) = launched.size
         name -> (if (ok) dt else -dt)
       }.toMap
     var passes = (1 to 3).map(_ => runPass())
@@ -270,7 +277,7 @@ object Bench {
         s""""cal_norm_ratio":${f"$norm%.3f"},"compared":$n,""" +
         s""""outliers":$outJson}"""
     }.getOrElse("null")
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","forcing":"$Forcing","value_median":$totalMedian,"failed":${errors.size},"errors":$errJson,"intermittent":$interJson,"pass_totals":$passTotals,"host_settling":$settling,"cpu_cal_sec":$cal,"io_cal_sec":$ioCal,"cal_norm_total":${f"$calNormTotal%.3f"},"prev":$prevJson,"jvm":${jvmDiag()},"queries":$qs,"queries_median":$qsMedian,"sf":"$sfDir"}"""
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","forcing":"$Forcing","value_median":$totalMedian,"failed":${errors.size},"errors":$errJson,"intermittent":$interJson,"pass_totals":$passTotals,"host_settling":$settling,"cpu_cal_sec":$cal,"io_cal_sec":$ioCal,"cal_norm_total":${f"$calNormTotal%.3f"},"prev":$prevJson,"jvm":${jvmDiag()},"queries":$qs,"queries_median":$qsMedian,"jobs":${jmap(jobs.map { case (k, v) => k -> v.toString })},"sf":"$sfDir"}"""
     try {
       val p = java.nio.file.Paths.get("BENCH_FULL.json")
       java.nio.file.Files.write(p, fullJson.getBytes("UTF-8"))

@@ -45,18 +45,27 @@ private[graft] object PartitionedRewrite {
   final case class TouchedDirs(names: Seq[String], live: Set[String]) extends Touched
 
   /** The partitions of `loc` (layout `partCols`) that the rows of `keys`
-    * land in — a bounded driver collect of their distinct partition
-    * tuples (cap + 1 detects overflow without draining). Touched dir
-    * names are constructed from the VALUE TEXT, so unescapable values,
-    * nulls and spelling collisions answer [[NotScopable]]. */
+    * land in — one job with no shuffle: each task collects the distinct
+    * partition tuples of its rows and the driver folds them in as tasks
+    * finish, each side capped at cap + 1 (which detects overflow without
+    * draining). Touched dir names are constructed from the VALUE TEXT, so
+    * unescapable values, nulls and spelling collisions answer
+    * [[NotScopable]]. */
   def resolveTouched(fs: FileSystem, loc: String, partCols: Seq[String],
       keys: DataFrame): Touched = {
-    val rows = keys.select(partCols.map(col): _*).distinct().limit(TouchedCap + 1).collect()
-    if (rows.isEmpty) NothingTouched
-    else if (rows.length > TouchedCap ||
-        rows.exists(r => partCols.indices.exists(r.isNullAt))) NotScopable
-    else touchedNames(partCols,
-        rows.map(r => partCols.indices.map(i => String.valueOf(r.get(i)))).toSeq) match {
+    val (width, cap) = (partCols.size, TouchedCap)
+    val values = keys.select(partCols.map(col): _*).rdd.mapPartitions { rows =>
+      val seen = scala.collection.mutable.HashSet.empty[Seq[String]]
+      while (seen.size <= cap && rows.hasNext) {
+        val r = rows.next()
+        seen += (0 until width).map(i => if (r.isNullAt(i)) null else String.valueOf(r.get(i)))
+      }
+      Iterator.single(seen.toSet)
+    }.fold(Set.empty[Seq[String]])((a, b) => if (a.size > cap) a else (a ++ b).take(cap + 1))
+      .toVector
+    if (values.isEmpty) NothingTouched
+    else if (values.length > cap || values.exists(_.contains(null))) NotScopable
+    else touchedNames(partCols, values) match {
       case None => NotScopable
       case Some(names) =>
         val live = listPartitionDirs(fs, new Path(loc), partCols.size)

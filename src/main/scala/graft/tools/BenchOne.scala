@@ -7,10 +7,11 @@ import graft.queries.QueryCatalog
   * Args: sfDir names...
   *
   * SPARK_GRAFT_MINOF=N runs each query N times and reports every run plus
-  * min/median, followed by the Bench JVM-health snapshot — the
-  * host-vs-regression evidence protocol: a min-of-5 back at a previous
-  * round's level says "host noise", an elevated min with clean JVM
-  * diagnostics says "real regression, go find the change".
+  * min/median and each run's Spark job count, followed by the Bench
+  * JVM-health snapshot — the host-vs-regression evidence protocol: a
+  * min-of-5 back at a previous round's level says "host noise", an
+  * elevated min with clean JVM diagnostics says "real regression, go find
+  * the change".
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -36,18 +37,21 @@ object BenchOne {
     val countForce = sys.env.get("SPARK_GRAFT_FORCE").contains("count")
     QueryCatalog.all.filter(q => names.isEmpty || names(q.name)).foreach { q =>
       val times = (1 to repeats).map { _ =>
-        val t0 = System.nanoTime()
-        val df = q.run(spark, sfDir)
-        val n =
-          if (countForce) df.count()
-          else { df.write.format("noop").mode("overwrite").save(); -1L }
-        val sec = (System.nanoTime() - t0) / 1e9
-        (sec, n)
+        val ((sec, n), jobs) = org.apache.spark.JobCounter.jobs(spark.sparkContext) {
+          val t0 = System.nanoTime()
+          val df = q.run(spark, sfDir)
+          val n =
+            if (countForce) df.count()
+            else { df.write.format("noop").mode("overwrite").save(); -1L }
+          ((System.nanoTime() - t0) / 1e9, n)
+        }
+        (sec, n, jobs.size)
       }
       val secs = times.map(_._1).sorted
       val med = secs(secs.size / 2)
       println(f"== ${q.name}: rows=${times.head._2} min=${secs.head}%.3fs " +
-        f"median=$med%.3fs runs=[${times.map(t => f"${t._1}%.2f").mkString(",")}]")
+        f"median=$med%.3fs runs=[${times.map(t => f"${t._1}%.2f").mkString(",")}] " +
+        s"jobs=[${times.map(_._3).mkString(",")}]")
     }
     println(s"jvm=${graft.Bench.jvmDiag()}")
     spark.stop()

@@ -5,7 +5,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 /** The Spark jobs a block launches, by job description ("" when a job
   * has none). The listener bus is drained before and after the block, so
   * only its own jobs count; lives in the `org.apache.spark` namespace for
-  * the bus's `waitUntilEmpty`. */
+  * the bus's `waitUntilEmpty`. The bench records each query's count with
+  * it, and tests pin job counts with it. */
 object JobCounter {
 
   def jobs[A](sc: SparkContext)(body: => A): (A, Seq[String]) = {

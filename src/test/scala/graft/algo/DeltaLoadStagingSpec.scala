@@ -111,13 +111,13 @@ class DeltaLoadStagingSpec extends SparkSpec {
     finally walk.close()
   }
 
-  test("a DQ'd CDC merge delta runs in at most 9 Spark jobs and merges correctly") {
+  test("a DQ'd CDC merge delta runs in at most 8 Spark jobs and merges correctly") {
     val base = loaded("delta-jobs", 1)
     val (_, jobs) = JobCounter.jobs(spark.sparkContext) {
       DataLoader.loadData(spark, deltaAcon(base, 1))
     }
     info(s"${jobs.size} jobs: ${jobs.mkString(", ")}")
-    assert(jobs.size <= 9, jobs.mkString("jobs: ", ", ", ""))
+    assert(jobs.size <= 8, jobs.mkString("jobs: ", ", ", ""))
     // the DQ pass stages the batch; the merge reads that stage as it is
     assert(jobs.contains("dq:checked"), jobs)
     assert(!jobs.exists(_.startsWith("merge-source:")), jobs)

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.spec.{MergeOptions, OutputSpec}
 import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.DataFrame
 import scala.jdk.CollectionConverters._
 
@@ -324,5 +325,30 @@ class PartitionScopedMergeSpec extends SparkSpec {
       assert(out.where("id = 2 AND region = 'EU'").count() == 1)
       assert(out.where("id = 1 AND region IS NULL").count() == 1)
     } finally spark.conf.unset("spark.databricks.delta.schema.autoMerge.enabled")
+  }
+
+  test("the touched set resolves in one job, merged across tasks, with the cap and null guards") {
+    import PartitionedRewrite.{NotScopable, NothingTouched, TouchedCap, TouchedDirs}
+    val loc = tmpDir("touched-set") + "/t"
+    Seq((1, "2024-01-01"), (2, "2024-01-02")).toDF("id", "day")
+      .write.partitionBy("day").parquet(loc)
+    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def resolve(keys: DataFrame) = PartitionedRewrite.resolveTouched(fs, loc, Seq("day"), keys)
+    def days(n: Long, day: String) = spark.range(0, n, 1, 4).selectExpr("id", s"$day as day")
+    // every one of the 4 tasks sees both days
+    val keys = days(400, "if(id % 2 = 0, '2024-01-01', '2024-01-03')")
+    val (touched, jobs) = JobCounter.jobs(spark.sparkContext)(resolve(keys))
+    assert(jobs.size == 1, jobs)
+    touched match {
+      case TouchedDirs(names, live) =>
+        assert(names.sorted == Seq("day=2024-01-01", "day=2024-01-03"))
+        assert(live == Set("day=2024-01-01", "day=2024-01-02"))
+      case other => fail(other.toString)
+    }
+    assert(resolve(keys.limit(0)) == NothingTouched)
+    assert(resolve(days(400, "if(id = 399, null, '2024-01-01')")) == NotScopable)
+    val atCap = resolve(days(TouchedCap, "cast(id as string)"))
+    assert(atCap.asInstanceOf[TouchedDirs].names.size == TouchedCap)
+    assert(resolve(days(TouchedCap + 1L, "cast(id as string)")) == NotScopable)
   }
 }
