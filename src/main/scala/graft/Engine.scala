@@ -192,53 +192,41 @@ object Engine {
     algo.Gab.executeFromConfig(spark, config, source, insightsLocation,
       reconWindow, logLocation)
 
-  /** `execute_heartbeat_sensor`: sweep one sensor source over the
-    * heartbeat control table. */
-  def executeHeartbeatSensor(
-      spark: SparkSession, controlLocation: String,
-      sensorControlLocation: String, sensorSource: String): Seq[(String, String)] =
-    algo.Heartbeat.sweepControl(spark, controlLocation, sensorControlLocation, sensorSource)
+  // Heartbeat (`engine.py:220-325`): each control table — the heartbeat
+  // one and the sensor one it drives — is a storage location or a catalog
+  // table (a reference containing `/` is a location, [[graft.io.TableRef]]).
 
-  /** `trigger_heartbeat_sensor_jobs`: fire dependency-satisfied jobs. */
-  def triggerHeartbeatSensorJobs(
-      spark: SparkSession, controlLocation: String,
-      jobTrigger: algo.Heartbeat.JobTrigger): Seq[String] =
-    algo.Heartbeat.triggerReadyJobs(spark, controlLocation, jobTrigger)
-
-  /** `execute_heartbeat_sensor_data_feed`: merge a feed into the
-    * heartbeat control table. */
-  def executeHeartbeatSensorDataFeed(
-      spark: SparkSession, controlLocation: String, feed: DataFrame): DataFrame =
-    algo.Heartbeat.controlTableDataFeed(spark, controlLocation, feed)
-
-  /** `update_heartbeat_sensor_status`: completion callback for a
-    * triggered job: a storage location ([[graft.io.TableRef.isLocation]])
-    * routes through [[algo.Heartbeat]], a `db.table` name through
-    * [[algo.HeartbeatControl]]. */
-  def updateHeartbeatSensorStatus(
-      spark: SparkSession, controlLocation: String,
-      sensorControlLocation: String, jobId: String): Unit =
-    if (graft.io.TableRef.isLocation(controlLocation))
-      algo.Heartbeat.completeJob(spark, controlLocation, sensorControlLocation, jobId)
-    else
-      algo.HeartbeatControl.updateCompletionStatus(
-        spark, controlLocation, sensorControlLocation, jobId)
-
-  /** `execute_sensor_heartbeat` over the reference's ACON shape
-    * (heartbeat + sensor control addressed as `db.table`). */
+  /** `execute_sensor_heartbeat`: sweep the active control rows of the
+    * acon's sensor source; rows whose sensor acquires new data land
+    * NEW_EVENT_AVAILABLE. */
   def executeSensorHeartbeat(spark: SparkSession, acon: Map[String, Any]): Unit =
     algo.HeartbeatControl.execute(spark, algo.HeartbeatControl.specFromAcon(acon))
 
-  /** `trigger_heartbeat_sensor_jobs` over the reference's ACON shape. */
-  def triggerHeartbeatSensorJobs(spark: SparkSession, acon: Map[String, Any]): Seq[String] = {
+  /** `trigger_heartbeat_sensor_jobs`: launch every dependency-satisfied
+    * job and mark its rows IN_PROGRESS; returns the launched job ids.
+    * `runJob` returns the scheduler's run id, or None when the launch
+    * failed; by default it is the jobs `run-now` call against the acon's
+    * `domain` and `token`. */
+  def triggerHeartbeatSensorJobs(
+      spark: SparkSession, acon: Map[String, Any],
+      runJob: Option[String => Option[String]] = None): Seq[String] = {
     val spec = algo.HeartbeatControl.specFromAcon(acon)
     algo.HeartbeatControl.triggerJobs(spark, spec,
-      algo.HeartbeatControl.runJobHttp(spec))
+      runJob.getOrElse(algo.HeartbeatControl.runJobHttp(spec)))
   }
 
-  /** `execute_heartbeat_sensor_data_feed`: CSV feed upsert into the
-    * heartbeat control table. */
+  /** `execute_heartbeat_sensor_data_feed`: upsert the definitions of a
+    * CSV feed into the heartbeat control table, keeping running state;
+    * a location with no table yet is created from the feed. */
   def executeHeartbeatSensorDataFeed(
       spark: SparkSession, dataFeedPath: String, controlTable: String): Unit =
     algo.HeartbeatControl.controlTableDataFeed(spark, dataFeedPath, controlTable)
+
+  /** `update_heartbeat_sensor_status`: completion callback for a
+    * triggered job — its control rows COMPLETED, its sensor-table rows
+    * PROCESSED_NEW_DATA. */
+  def updateHeartbeatSensorStatus(
+      spark: SparkSession, controlTable: String,
+      sensorTable: String, jobId: String): Unit =
+    algo.HeartbeatControl.updateCompletionStatus(spark, controlTable, sensorTable, jobId)
 }

@@ -133,7 +133,8 @@ final class DataLoader(
     val (staged, result, failure) = DQEngine.stageOutcome(spark, df, dq)
     dq.resultSink.foreach { sink =>
       val sdf = DQEngine.resultSinkOutput(spark, staged, dq, result)
-      Writers.writeBatch(spark, DQEngine.resultSinkSpec(dq, sink), sdf)
+      graft.exec.Stage.named(spark, s"dq-sink:${dq.specId}")(
+        Writers.writeBatch(spark, DQEngine.resultSinkSpec(dq, sink), sdf))
     }
     graft.dq.Prisma.writeProcessedKeys(spark, dq, staged, result.runName)
     failure.foreach(throw _)

@@ -25,10 +25,33 @@ import org.apache.spark.sql.functions._
   * tests the same way); timestamps take an optional fixed clock so runs
   * are replayable. Control tables are config-sized by definition — the
   * driver-side collects here are bounded by the fleet size, not data.
+  *
+  * A control table is a storage location or a catalog table
+  * ([[graft.io.TableRef]]); every read settles an interrupted commit
+  * first, and every write commits through
+  * [[graft.io.PartitionedRewrite.rewriteAll]]. The data feed creates a
+  * control table at a location that holds none yet.
   */
 object HeartbeatControl {
 
-  import Heartbeat.{Completed, InProgress, NewEventAvailable, StateColumns, sensorTableId}
+  val NewEventAvailable = "NEW_EVENT_AVAILABLE"
+  val InProgress = "IN_PROGRESS"
+  val Completed = "COMPLETED"
+
+  /** Control-table columns (the reference's heartbeat sensor table):
+    * the definitions a data feed carries, then the running state. */
+  val ConfigColumns: Seq[String] = Seq(
+    "sensor_source", "sensor_id", "sensor_read_type", "asset_description",
+    "upstream_key", "preprocess_query", "trigger_job_id", "trigger_job_name",
+    "job_state", "dependency_flag")
+  val StateColumns: Seq[String] = Seq(
+    "latest_event_fetched_timestamp", "status", "status_change_timestamp",
+    "job_start_timestamp", "job_end_timestamp")
+
+  /** Sensor-table id (or asset) for a control row — the reference's
+    * `generate_unique_column_values`: `[ :.]` -> `_`, + `_<trigger job>`. */
+  def sensorTableId(sensorId: String, triggerJobId: String): String =
+    sensorId.replaceAll("[ :.]", "_") + "_" + triggerJobId
 
   /** `HeartbeatConfigSpec` (reference `core/definitions.py`). */
   final case class Spec(
@@ -93,13 +116,22 @@ object HeartbeatControl {
       controlTable: String): Unit = {
     val feed = spark.read.format("csv").option("header", "true").load(feedPath)
       .withColumn("job_state", upper(col("job_state")))
-    val target = controlRows(spark, controlTable)
-    val state = target.select(
-      ("sensor_id" +: "trigger_job_id" +: StateColumns).map(col): _*)
-    val merged = feed.join(state, Seq("sensor_id", "trigger_job_id"), "left")
-    val aligned = merged.select(target.schema.fields.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-    TableRef.rewrite(spark, controlTable)(_ => aligned.coalesce(1))
+    TableRef.rewrite(spark, controlTable) {
+      case Some(target) =>
+        val state = target.select(
+          ("sensor_id" +: "trigger_job_id" +: StateColumns).map(col): _*)
+        val merged = feed.join(state, Seq("sensor_id", "trigger_job_id"), "left")
+        merged.select(target.schema.fields.map(f =>
+          col(f.name).cast(f.dataType).as(f.name)).toSeq: _*).coalesce(1)
+      case None =>
+        // a location with no table yet: every feed row is new, state null
+        feed.select(ConfigColumns.map(col) ++ Seq(
+          lit(null).cast("timestamp").as("latest_event_fetched_timestamp"),
+          lit(null).cast("string").as("status"),
+          lit(null).cast("timestamp").as("status_change_timestamp"),
+          lit(null).cast("timestamp").as("job_start_timestamp"),
+          lit(null).cast("timestamp").as("job_end_timestamp")): _*).coalesce(1)
+    }
   }
 
   // -------------------------------------------------------------------
@@ -233,7 +265,9 @@ object HeartbeatControl {
     active.collect().foreach { row =>
       val acon = sensorAconFromHeartbeat(spark, spec, row, secretProvider)
       run(acon, row).foreach { case (sid, job) =>
-        val updated = active
+        // read afresh: an earlier hit's commit replaced the files `active`
+        // was listed from
+        val updated = activeHeartbeatJobs(spark, controlTable, spec.sensorSource)
           .filter(col("sensor_id") === sid && col("trigger_job_id") === job)
           .withColumn("status", lit(NewEventAvailable))
           .withColumn("status_change_timestamp", nowCol)
@@ -320,10 +354,56 @@ object HeartbeatControl {
     fired
   }
 
+  /** Jobs `run-now` HTTP trigger — the wire shape of the reference's
+    * `SensorJobRunManager.run_job` (`core/sensor_manager.py:410-452`):
+    * `POST {base}/api/2.1/jobs/run-now` with a bearer token and body
+    * `{"job_id": ..., "notebook_params": {"msg": ...}}`; 200 carries the
+    * `run_id`, any other status carries `error_code` + `message`, which
+    * raise here (the reference logs and returns the error — a scheduler
+    * fleet wants the failed trigger loud). `baseUrl` is the workspace
+    * host. */
+  final class HttpJobTrigger(
+      baseUrl: String,
+      tokenProvider: () => String,
+      client: java.net.http.HttpClient =
+        java.net.http.HttpClient.newBuilder()
+          .connectTimeout(java.time.Duration.ofSeconds(30)).build()) {
+
+    import java.net.http.{HttpRequest, HttpResponse}
+
+    /** Trigger and return the scheduler's run id. */
+    def run(jobId: String): Long = {
+      val body =
+        s"""{"job_id": "${jobId.replace("\"", "\\\"")}", """ +
+          """"notebook_params": {"msg": "triggered via heartbeat sensor"}}"""
+      val req = HttpRequest.newBuilder(
+          java.net.URI.create(s"${baseUrl.stripSuffix("/")}/api/2.1/jobs/run-now"))
+        .header("Authorization", s"Bearer ${tokenProvider()}")
+        .header("Content-Type", "application/json")
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build()
+      val res = client.send(req, HttpResponse.BodyHandlers.ofString())
+      if (res.statusCode() == 200) {
+        val parsed = graft.spec.Specs.parseJsonMap(res.body())
+        parsed.get("run_id").collect { case n: Number => n.longValue() }
+          .getOrElse(sys.error(s"jobs/run-now 200 response missing run_id: ${res.body().take(200)}"))
+      } else {
+        // an error body may be proxy HTML or empty — a JSON parse failure
+        // there must not mask the real HTTP status and message
+        val detail = scala.util.Try(graft.spec.Specs.parseJsonMap(res.body())).toOption match {
+          case Some(p) if p.contains("error_code") || p.contains("message") =>
+            p.get("error_code").map(String.valueOf(_)).getOrElse(res.statusCode().toString) +
+              "  " + p.get("message").map(String.valueOf(_)).getOrElse("")
+          case _ => s"HTTP ${res.statusCode()}: ${res.body().take(200)}"
+        }
+        sys.error(s"jobs/run-now failed: $detail")
+      }
+    }
+  }
+
   /** Default launcher: the Databricks jobs `run-now` wire call
     * (`SensorJobRunManager.run_job`) against the acon's domain+token. */
   def runJobHttp(spec: Spec)(jobId: String): Option[String] = {
-    val trigger = new Heartbeat.HttpJobTrigger(
+    val trigger = new HttpJobTrigger(
       "https://" + spec.domain.getOrElse(sys.error("heartbeat acon needs domain")),
       () => spec.token.getOrElse(sys.error("heartbeat acon needs token")))
     scala.util.Try(trigger.run(jobId)).toOption.map(_.toString)

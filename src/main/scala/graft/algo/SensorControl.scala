@@ -20,8 +20,9 @@ import org.apache.spark.sql.types._
   * the MERGE runs as a staged rewrite ([[graft.io.TableRef.rewrite]]; no
   * Delta jars in the build) with the reference's
   * whenMatchedUpdate(set)/whenNotMatchedInsertAll row semantics. The ACON
-  * path ([[executeSensor]]) and [[checkUpstream]] (behind
-  * `Engine.executeSensor` and [[Heartbeat]]) share one engine.
+  * path ([[executeSensor]], which [[HeartbeatControl]]'s sweep runs per
+  * control row) and [[checkUpstream]] (behind `Engine.executeSensor`)
+  * share one engine.
   *
   * Scale note: the control table is config-sized (one row per sensor), so
   * the full-table rewrite the merge performs is bounded; upstream reads
@@ -265,12 +266,12 @@ object SensorControl {
     hasNewData
   }
 
-  /** `execute_sensor` without an ACON (`Engine.executeSensor`, the
-    * location-addressed [[Heartbeat]]): [[executeSensor]] minus the ACON
-    * data-format allowlist. A streaming upstream checkpoints at
-    * `<control location>__ckpt/<sensorId>`. Returns whether THIS call
-    * acquired new data; with `failOnEmptyResult` an empty upstream
-    * raises [[NoNewDataException]] instead. */
+  /** `execute_sensor` without an ACON (`Engine.executeSensor`):
+    * [[executeSensor]] minus the ACON data-format allowlist. A streaming
+    * upstream checkpoints at `<control location>__ckpt/<sensorId>`.
+    * Returns whether THIS call acquired new data; with
+    * `failOnEmptyResult` an empty upstream raises [[NoNewDataException]]
+    * instead. */
   def checkUpstream(spark: SparkSession, control: String, sensorId: String,
       upstream: InputSpec, preprocessQuery: Option[String] = None,
       assets: Seq[String] = Seq.empty, failOnEmptyResult: Boolean = false): Boolean = {

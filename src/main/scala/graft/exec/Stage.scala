@@ -1,6 +1,6 @@
 package graft.exec
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -10,11 +10,17 @@ import org.apache.spark.sql.execution.LogicalRDD
   * description, so a listener or an event log can attribute them. */
 object Stage {
 
-  def eager(df: DataFrame, name: String): DataFrame = {
-    val sc = df.sparkSession.sparkContext
+  def eager(df: DataFrame, name: String): DataFrame =
+    named(df.sparkSession, name)(df.localCheckpoint(eager = true))
+
+  /** Run `body` with `name` as the job description of every Spark job it
+    * starts (unless a nested call names its own), then restore the
+    * caller's description. */
+  def named[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
     val previous = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(name)
-    try df.localCheckpoint(eager = true)
+    try body
     finally sc.setJobDescription(previous)
   }
 

@@ -4,11 +4,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A reference that names a table's rows either by storage location or
-  * by catalog name — sensor control tables, the heartbeat completion
-  * facade and PRISMA's `rules_table` all take one. The one rule: a
-  * reference containing `/` is a parquet location; anything else is a
-  * catalog table or view, so a mistyped table name never becomes a
-  * relative directory. Reads and rewrites settle an interrupted commit
+  * by catalog name — sensor and heartbeat control tables and PRISMA's
+  * `rules_table` all take one. The one rule: a reference containing `/`
+  * is a parquet location; anything else is a catalog table or view, so a
+  * mistyped table name never becomes a relative directory. Reads and rewrites settle an interrupted commit
   * at the rows' location ([[StagedSwap.recover]]) before they read. */
 private[graft] object TableRef {
 

@@ -58,7 +58,9 @@ object Writers {
       return graft.streaming.StreamingFaces.writeBatch(spark, spec, df)
     val fmt = spec.dataFormat.getOrElse(if (spec.dbTable.isDefined) "parquet" else "parquet")
     spec.writeType match {
-      case "merge" => mergeWrite(spark, spec, df)
+      case "merge" =>
+        graft.exec.Stage.named(spark, s"merge:${spec.location.getOrElse(spec.specId)}")(
+          mergeWrite(spark, spec, df))
       case writeType =>
         val mode = writeType match {
           case "overwrite" | "complete" => "overwrite"

@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.TableRef
 import graft.spec.{DQFunctionSpec, DQSpec, InputSpec}
 
 /** The public facade delegates faithfully (one smoke case per entry
@@ -46,6 +47,82 @@ class EngineSpec extends SparkSpec {
     assert(q2.contains("sensor_id = 's1'") && q2.contains("PROCESSED_NEW_DATA"))
     // table manager passthrough
     assert(Engine.manageTable(spark).executeSql("SELECT 1 AS one").head.count() == 1)
+  }
+
+  /** Feed -> sweep -> gated trigger -> completion through the four
+    * heartbeat facades, with `ctl` and `sensorCtl` as the control tables
+    * (locations or catalog tables). Job `job-A` is gated on sensors s1 and
+    * s2, whose upstreams land one sweep apart; `job-B` on s3 alone. */
+  private def heartbeatLifecycle(base: String, ctl: String, sensorCtl: String): Unit = {
+    import spark.implicits._
+    def rows = TableRef.read(spark, ctl).get
+    val feed = s"$base/feed"
+    Seq("s1" -> "job-A", "s2" -> "job-A", "s3" -> "job-B").map { case (sid, job) =>
+        ("trigger_file", sid, "streaming", sid, null: String, null: String, job, job,
+          "unpaused", "TRUE") }
+      .toDF(algo.HeartbeatControl.ConfigColumns: _*).coalesce(1)
+      .write.option("header", "true").csv(feed)
+    def land(sid: String, row: String): Unit = {
+      val dir = java.nio.file.Paths.get(s"$base/trigger/$sid")
+      java.nio.file.Files.createDirectories(dir)
+      if (row.nonEmpty) java.nio.file.Files.writeString(dir.resolve("f.csv"), row + "\n")
+    }
+    val acon = Map[String, Any](
+      "heartbeat_sensor_db_table" -> ctl, "lakehouse_engine_sensor_db_table" -> sensorCtl,
+      "sensor_source" -> "trigger_file", "data_format" -> "csv",
+      "schema_dict" -> "id INT, v STRING",
+      "base_trigger_file_location" -> s"$base/trigger",
+      "base_checkpoint_location" -> s"$base/checkpoints")
+    val launched = scala.collection.mutable.ArrayBuffer.empty[String]
+    val launcher: String => Option[String] = { jobId => launched += jobId; Some("run-1") }
+    def statuses = rows.select("sensor_id", "status").as[(String, String)].collect().toMap
+
+    Engine.executeHeartbeatSensorDataFeed(spark, feed, ctl)
+    assert(statuses == Map("s1" -> null, "s2" -> null, "s3" -> null))
+    assert(rows.select("job_state").as[String].collect().toSet == Set("UNPAUSED"))
+    land("s1", "1,a")
+    land("s2", "")
+    land("s3", "3,c")
+    Engine.executeSensorHeartbeat(spark, acon) // two sensors acquire in one sweep
+    assert(statuses ==
+      Map("s1" -> "NEW_EVENT_AVAILABLE", "s2" -> null, "s3" -> "NEW_EVENT_AVAILABLE"))
+    // job-A waits for s2
+    assert(Engine.triggerHeartbeatSensorJobs(spark, acon, Some(launcher)) == Seq("job-B"))
+    land("s2", "2,b")
+    Engine.executeSensorHeartbeat(spark, acon)
+    assert(Engine.triggerHeartbeatSensorJobs(spark, acon, Some(launcher)) == Seq("job-A"))
+    assert(launched.toSeq == Seq("job-B", "job-A"))
+    assert(statuses == Map("s1" -> "IN_PROGRESS", "s2" -> "IN_PROGRESS", "s3" -> "IN_PROGRESS"))
+    // a re-fed definition keeps its running state
+    Engine.executeHeartbeatSensorDataFeed(spark, feed, ctl)
+    assert(statuses == Map("s1" -> "IN_PROGRESS", "s2" -> "IN_PROGRESS", "s3" -> "IN_PROGRESS"))
+    Engine.updateHeartbeatSensorStatus(spark, ctl, sensorCtl, "job-A")
+    assert(statuses == Map("s1" -> "COMPLETED", "s2" -> "COMPLETED", "s3" -> "IN_PROGRESS"))
+    Seq("s1", "s2").foreach(sid => assert(algo.SensorControl.sensorStatus(spark,
+      algo.HeartbeatControl.sensorTableId(sid, "job-A"), sensorCtl)
+      .contains(algo.SensorControl.Processed)))
+  }
+
+  test("heartbeat facades run the control-table lifecycle on locations") {
+    val base = tmpDir("engine-hb")
+    heartbeatLifecycle(base, s"$base/control", s"$base/sensors")
+  }
+
+  test("heartbeat facades run the control-table lifecycle on catalog tables") {
+    val base = tmpDir("engine-hb-tables")
+    val stateDdl = "latest_event_fetched_timestamp timestamp, status string, " +
+      "status_change_timestamp timestamp, job_start_timestamp timestamp, " +
+      "job_end_timestamp timestamp"
+    val tables = Seq(
+      "hb_engine_control" -> (algo.HeartbeatControl.ConfigColumns.map(c => s"$c string")
+        .mkString(", ") + ", " + stateDdl),
+      "hb_engine_sensors" -> algo.SensorControl.SensorSchema.toDDL)
+    tables.foreach { case (t, ddl) =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"CREATE TABLE $t ($ddl) USING parquet LOCATION '$base/$t'")
+    }
+    try heartbeatLifecycle(base, "hb_engine_control", "hb_engine_sensors")
+    finally tables.foreach { case (t, _) => spark.sql(s"DROP TABLE IF EXISTS $t") }
   }
 
   test("dq args parse through ACON JSON: value_set, quantile_ranges, bounds") {

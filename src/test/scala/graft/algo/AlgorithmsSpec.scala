@@ -386,59 +386,92 @@ class AlgorithmsSpec extends SparkSpec {
     assert(!fm.list(dir).exists(_.endsWith("c.txt")))
   }
 
+  /** A heartbeat over `trigger_file` sources: each row's sensor reads the
+    * csv files landing at `<base>/trigger/<sensor_id>` as a stream. */
+  private def heartbeatSpec(base: String): HeartbeatControl.Spec =
+    HeartbeatControl.specFromAcon(Map(
+      "heartbeat_sensor_db_table" -> s"$base/control",
+      "lakehouse_engine_sensor_db_table" -> s"$base/sensor-control",
+      "sensor_source" -> "trigger_file", "data_format" -> "csv",
+      "schema_dict" -> "id INT, v STRING",
+      "base_trigger_file_location" -> s"$base/trigger",
+      "base_checkpoint_location" -> s"$base/checkpoints"))
+
+  /** The data-feed csv of (sensor_id, trigger_job_id, job_state) rows,
+    * written under `base`; its path. */
+  private def hbFeed(base: String, name: String, rows: Seq[(String, String, String)]): String = {
+    val path = s"$base/$name"
+    rows.map { case (sid, job, state) => ("trigger_file", sid, "streaming", s"asset-$sid",
+        null: String, null: String, job, s"name-$job", state, "TRUE") }
+      .toDF(HeartbeatControl.ConfigColumns: _*).coalesce(1)
+      .write.option("header", "true").csv(path)
+    path
+  }
+
+  /** An empty upstream for each sensor id (a missing one fails the sweep). */
+  private def hbUpstreams(base: String, sids: String*): Unit =
+    sids.foreach(sid => Files.createDirectories(Paths.get(s"$base/trigger/$sid")))
+
+  private def hbLand(base: String, sid: String, file: String, rows: String): Unit =
+    Files.writeString(Paths.get(s"$base/trigger/$sid/$file.csv"), rows)
+
+  /** (sensor_id, trigger_job_id) of the control rows in `status`. */
+  private def hbRows(ctl: String, status: String): Set[(String, String)] =
+    spark.read.parquet(ctl).where($"status" === status)
+      .select("sensor_id", "trigger_job_id").as[(String, String)].collect().toSet
+
   test("heartbeat control-table lifecycle: feed, sweep, gated trigger, completion") {
     val base = tmpDir("hb-life")
-    val (ctl, sctl) = (s"$base/control", s"$base/sensor-control")
-    def feedRow(sid: String, job: String, upstream: String,
-        state: String = "UNPAUSED") =
-      ("parquet", sid, "batch", s"asset-$sid", upstream, "", job, s"name-$job",
-        state, "TRUE")
+    val spec = heartbeatSpec(base)
+    val (ctl, sctl) = (spec.heartbeatSensorDbTable, spec.lakehouseEngineSensorDbTable)
     // job-A is gated on TWO sensors; job-B on one; one row is PAUSED
-    val feed = Seq(
-      feedRow("sa1", "job-A", s"$base/up-a1"),
-      feedRow("sa2", "job-A", s"$base/up-a2"),
-      feedRow("sb1", "job-B", s"$base/up-b1"),
-      feedRow("sp1", "job-P", s"$base/up-p1", state = "PAUSED"))
-      .toDF("sensor_source", "sensor_id", "sensor_read_type", "asset_description",
-        "upstream_key", "preprocess_query", "trigger_job_id", "trigger_job_name",
-        "job_state", "dependency_flag")
-    val control0 = Heartbeat.controlTableDataFeed(spark, ctl, feed)
+    val feed = Seq(("sa1", "job-A", "UNPAUSED"), ("sa2", "job-A", "UNPAUSED"),
+      ("sb1", "job-B", "UNPAUSED"), ("sp1", "job-P", "PAUSED"))
+    hbUpstreams(base, "sa1", "sa2", "sb1", "sp1")
+    HeartbeatControl.controlTableDataFeed(spark, hbFeed(base, "feed", feed), ctl)
+    val control0 = spark.read.parquet(ctl)
+    assert(control0.columns.toSeq ==
+      HeartbeatControl.ConfigColumns ++ HeartbeatControl.StateColumns)
     assert(control0.count() == 4 && control0.where("status IS NOT NULL").count() == 0)
-    // only sa1 and sb1 have upstream data
-    Seq((1, "x")).toDF("id", "v").write.parquet(s"$base/up-a1")
-    Seq((2, "y")).toDF("id", "v").write.parquet(s"$base/up-b1")
-    val hits1 = Heartbeat.sweepControl(spark, ctl, sctl, "parquet")
-    assert(hits1.toSet == Set("sa1" -> "job-A", "sb1" -> "job-B"))
+    // only sa1, sb1 and the paused sp1 have upstream data
+    hbLand(base, "sa1", "f1", "1,x\n")
+    hbLand(base, "sb1", "f1", "2,y\n")
+    hbLand(base, "sp1", "f1", "9,p\n")
+    HeartbeatControl.execute(spark, spec)
+    assert(hbRows(ctl, HeartbeatControl.NewEventAvailable) ==
+      Set("sa1" -> "job-A", "sb1" -> "job-B"))
+    assert(SensorControl.sensorStatus(spark,
+      HeartbeatControl.sensorTableId("sp1", "job-P"), sctl).isEmpty) // never swept
     // job-A is blocked (sa2 has not fired); job-B triggers
     val triggered = scala.collection.mutable.ArrayBuffer.empty[String]
-    val ready1 = Heartbeat.triggerReadyJobs(spark, ctl,
-      (jobId: String, _: String) => triggered += jobId)
-    assert(ready1 == Seq("job-B") && triggered.toSeq == Seq("job-B"))
-    val afterB = Heartbeat.readControl(spark, ctl)
-    assert(afterB.where("trigger_job_id = 'job-B' AND status = 'IN_PROGRESS' " +
-      "AND job_start_timestamp IS NOT NULL").count() == 1)
+    val launch: String => Option[String] = { jobId => triggered += jobId; Some(s"run-$jobId") }
+    assert(HeartbeatControl.triggerJobs(spark, spec, launch) == Seq("job-B"))
+    assert(triggered.toSeq == Seq("job-B"))
+    assert(spark.read.parquet(ctl).where("trigger_job_id = 'job-B' AND " +
+      "status = 'IN_PROGRESS' AND job_start_timestamp IS NOT NULL").count() == 1)
     // sa2's upstream lands -> sweep -> job-A's gated deps now agree
-    Seq((3, "z")).toDF("id", "v").write.parquet(s"$base/up-a2")
-    assert(Heartbeat.sweepControl(spark, ctl, sctl, "parquet")
-      == Seq("sa2" -> "job-A"))
-    val ready2 = Heartbeat.triggerReadyJobs(spark, ctl,
-      (jobId: String, _: String) => triggered += jobId)
-    assert(ready2 == Seq("job-A"))
+    hbLand(base, "sa2", "f1", "3,z\n")
+    HeartbeatControl.execute(spark, spec)
+    assert(hbRows(ctl, HeartbeatControl.NewEventAvailable) ==
+      Set("sa1" -> "job-A", "sa2" -> "job-A"))
+    assert(HeartbeatControl.triggerJobs(spark, spec, launch) == Seq("job-A"))
     // completion: COMPLETED rows + sensor table re-armed as PROCESSED
-    Heartbeat.completeJob(spark, ctl, sctl, "job-B")
-    val done = Heartbeat.readControl(spark, ctl)
-    assert(done.where("trigger_job_id = 'job-B' AND status = 'COMPLETED' " +
-      "AND job_end_timestamp IS NOT NULL").count() == 1)
-    assert(SensorControl.sensorStatus(spark, Heartbeat.sensorTableId("sb1", "job-B"), sctl)
-      .contains(SensorControl.Processed))
-    // a COMPLETED row is active again; a plain batch sensor with no
-    // preprocess query re-fires on any non-empty upstream (incremental
-    // detection is the preprocess query's job, as in the reference)
-    assert(Heartbeat.sweepControl(spark, ctl, sctl, "parquet")
-      == Seq("sb1" -> "job-B"))
+    HeartbeatControl.updateCompletionStatus(spark, ctl, sctl, "job-B")
+    assert(spark.read.parquet(ctl).where("trigger_job_id = 'job-B' AND " +
+      "status = 'COMPLETED' AND job_end_timestamp IS NOT NULL").count() == 1)
+    assert(SensorControl.sensorStatus(spark, HeartbeatControl.sensorTableId("sb1", "job-B"),
+      sctl).contains(SensorControl.Processed))
+    // a COMPLETED row is active again; its streaming sensor fires on the
+    // next file that lands, not on the one it already consumed
+    HeartbeatControl.execute(spark, spec)
+    assert(hbRows(ctl, HeartbeatControl.NewEventAvailable).isEmpty)
+    hbLand(base, "sb1", "f2", "4,w\n")
+    HeartbeatControl.execute(spark, spec)
+    assert(hbRows(ctl, HeartbeatControl.NewEventAvailable) == Set("sb1" -> "job-B"))
     // data-feed delete: a feed without job-B's row removes it, state kept
-    val control2 = Heartbeat.controlTableDataFeed(spark, ctl,
-      feed.where("trigger_job_id <> 'job-B'"))
+    HeartbeatControl.controlTableDataFeed(spark,
+      hbFeed(base, "feed2", feed.filter(_._2 != "job-B")), ctl)
+    val control2 = spark.read.parquet(ctl)
     assert(control2.count() == 3)
     assert(control2.where("trigger_job_id = 'job-A' AND status = 'IN_PROGRESS'")
       .count() == 2) // preserved running state
@@ -446,29 +479,23 @@ class AlgorithmsSpec extends SparkSpec {
 
   test("heartbeat sweeps sensors and triggers jobs for acquired sources") {
     val base = tmpDir("hb")
-    Seq((1, "x")).toDF("id", "v").write.parquet(s"$base/up1")
-    Files.createDirectories(Paths.get(s"$base/up2"))
-    Seq((2, "y")).toDF("id", "v").write.mode("overwrite").parquet(s"$base/up2")
-    val triggered = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val results = Heartbeat.run(spark, s"$base/control",
-      Seq(
-        Heartbeat.Source("hb1", s"$base/up1", jobId = "job-1"),
-        Heartbeat.Source("hb2", s"$base/up2", jobId = "job-2", enabled = false),
-        Heartbeat.Source("hb3", {
-          val d = s"$base/empty"; Files.createDirectories(Paths.get(d)); d
-        }, dataFormat = "csv", jobId = "job-3",
-          schema = Some("id INT, v STRING"),
-          options = Map("header" -> "true"))),
-      (jobId: String, sensorId: String) => triggered += (jobId -> sensorId))
-    assert(results.map(_.sensorId) == Seq("hb1", "hb3")) // hb2 disabled
-    assert(results.find(_.sensorId == "hb1").get.triggeredJob.contains("job-1"))
-    assert(results.find(_.sensorId == "hb3").get.triggeredJob.isEmpty)
-    assert(triggered.toSeq == Seq("job-1" -> "hb1"))
-    // control df loading path
-    val ctl = Seq(("hb9", s"$base/up1", "parquet", "batch", "job-9", true))
-      .toDF("sensor_id", "location", "data_format", "read_type", "job_id", "enabled")
-    val srcs = Heartbeat.sourcesFrom(ctl)
-    assert(srcs == Seq(Heartbeat.Source("hb9", s"$base/up1", jobId = "job-9")))
+    val spec = heartbeatSpec(base)
+    hbUpstreams(base, "hb1", "hb2", "hb3")
+    hbLand(base, "hb1", "f1", "1,x\n")
+    hbLand(base, "hb2", "f1", "2,y\n") // data, but its row is PAUSED
+    HeartbeatControl.controlTableDataFeed(spark, hbFeed(base, "feed", Seq(
+      ("hb1", "job-1", "UNPAUSED"), ("hb2", "job-2", "PAUSED"), ("hb3", "job-3", "UNPAUSED"))),
+      spec.heartbeatSensorDbTable)
+    HeartbeatControl.execute(spark, spec)
+    // hb3's upstream is empty; hb2 is paused
+    assert(hbRows(spec.heartbeatSensorDbTable, HeartbeatControl.NewEventAvailable) ==
+      Set("hb1" -> "job-1"))
+    val triggered = scala.collection.mutable.ArrayBuffer.empty[String]
+    assert(HeartbeatControl.triggerJobs(spark, spec,
+      jobId => { triggered += jobId; Some("run") }) == Seq("job-1"))
+    assert(triggered.toSeq == Seq("job-1"))
+    assert(hbRows(spec.heartbeatSensorDbTable, HeartbeatControl.InProgress) ==
+      Set("hb1" -> "job-1"))
   }
 
   test("sensor→heartbeat e2e: a landing file flips the streaming sensor and triggers exactly once") {
@@ -478,42 +505,39 @@ class AlgorithmsSpec extends SparkSpec {
     // so each sweep sees only files that arrived since the last one),
     // flips the sensor control row, and fires the downstream job trigger.
     val base = tmpDir("hb-e2e")
-    val up = s"$base/upstream"
-    Files.createDirectories(Paths.get(up))
-    val src = Heartbeat.Source("lnd1", up, dataFormat = "csv",
-      readType = "streaming", schema = Some("id INT, v STRING"),
-      jobId = "job-lnd")
-    val triggered = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val trig: Heartbeat.JobTrigger =
-      (jobId: String, sensorId: String) => triggered += (jobId -> sensorId)
-    val ctl = s"$base/control"
+    val spec = heartbeatSpec(base)
+    val (ctl, sctl) = (spec.heartbeatSensorDbTable, spec.lakehouseEngineSensorDbTable)
+    val sensorId = HeartbeatControl.sensorTableId("lnd1", "job-lnd")
+    hbUpstreams(base, "lnd1")
+    HeartbeatControl.controlTableDataFeed(spark,
+      hbFeed(base, "feed", Seq(("lnd1", "job-lnd", "UNPAUSED"))), ctl)
+    val triggered = scala.collection.mutable.ArrayBuffer.empty[String]
+    def sweep(): Seq[String] = {
+      HeartbeatControl.execute(spark, spec)
+      HeartbeatControl.triggerJobs(spark, spec, jobId => { triggered += jobId; Some("run") })
+    }
 
     // sweep 1: upstream is empty — no acquisition, no trigger
-    val r1 = Heartbeat.run(spark, ctl, Seq(src), trig)
-    assert(r1 == Seq(Heartbeat.Result("lnd1", acquiredNewData = false, None)))
-    assert(triggered.isEmpty)
+    assert(sweep().isEmpty && triggered.isEmpty)
+    assert(SensorControl.sensorStatus(spark, sensorId, sctl).isEmpty)
 
     // a file lands → sweep 2 acquires and fires the job
-    Files.writeString(Paths.get(s"$up/batch1.csv"), "1,a\n2,b\n")
-    val r2 = Heartbeat.run(spark, ctl, Seq(src), trig)
-    assert(r2 == Seq(Heartbeat.Result("lnd1", acquiredNewData = true, Some("job-lnd"))))
-    assert(triggered.toSeq == Seq("job-lnd" -> "lnd1"))
-    assert(SensorControl.sensorStatus(spark, "lnd1", ctl).contains(SensorControl.Acquired))
+    hbLand(base, "lnd1", "batch1", "1,a\n2,b\n")
+    assert(sweep() == Seq("job-lnd"))
+    assert(triggered.toSeq == Seq("job-lnd"))
+    assert(SensorControl.sensorStatus(spark, sensorId, sctl).contains(SensorControl.Acquired))
 
-    // downstream consumed; sweep 3 sees the SAME file — checkpointed
+    // downstream done; sweep 3 sees the SAME file — checkpointed
     // stream yields nothing new, job must NOT re-fire
-    SensorControl.updateSensorStatusById(spark, "lnd1", ctl)
-    val r3 = Heartbeat.run(spark, ctl, Seq(src), trig)
-    assert(r3 == Seq(Heartbeat.Result("lnd1", acquiredNewData = false, None)))
-    assert(triggered.size == 1)
-    assert(SensorControl.sensorStatus(spark, "lnd1", ctl).contains(SensorControl.Processed))
+    HeartbeatControl.updateCompletionStatus(spark, ctl, sctl, "job-lnd")
+    assert(sweep().isEmpty && triggered.size == 1)
+    assert(SensorControl.sensorStatus(spark, sensorId, sctl).contains(SensorControl.Processed))
 
     // a second file lands → sweep 4 re-acquires and re-fires
-    Files.writeString(Paths.get(s"$up/batch2.csv"), "3,c\n")
-    val r4 = Heartbeat.run(spark, ctl, Seq(src), trig)
-    assert(r4 == Seq(Heartbeat.Result("lnd1", acquiredNewData = true, Some("job-lnd"))))
-    assert(triggered.toSeq == Seq("job-lnd" -> "lnd1", "job-lnd" -> "lnd1"))
-    assert(SensorControl.sensorStatus(spark, "lnd1", ctl).contains(SensorControl.Acquired))
+    hbLand(base, "lnd1", "batch2", "3,c\n")
+    assert(sweep() == Seq("job-lnd"))
+    assert(triggered.toSeq == Seq("job-lnd", "job-lnd"))
+    assert(SensorControl.sensorStatus(spark, sensorId, sctl).contains(SensorControl.Acquired))
   }
 
   test("reconciliator thresholds: green within, raises on red") {

@@ -141,6 +141,29 @@ class ControlTableSpec extends SparkSpec {
     spark.sql("DROP TABLE hb_torn")
   }
 
+  test("a heartbeat completion through a location settles a torn control-table commit first") {
+    val base = tmpDir("hb-torn")
+    val (loc, sensorLoc) = (s"$base/control", s"$base/sensors")
+    Seq(("s1", "j1"), ("s2", "j2")).toDF("sensor_id", "trigger_job_id").selectExpr(
+        "'kafka' AS sensor_source", "sensor_id", "'batch' AS sensor_read_type",
+        "sensor_id AS asset_description", "CAST(NULL AS STRING) AS upstream_key",
+        "CAST(NULL AS STRING) AS preprocess_query", "trigger_job_id",
+        "trigger_job_id AS trigger_job_name", "'UNPAUSED' AS job_state",
+        "'TRUE' AS dependency_flag", "CAST(NULL AS TIMESTAMP) AS latest_event_fetched_timestamp",
+        "'IN_PROGRESS' AS status", "current_timestamp() AS status_change_timestamp",
+        "current_timestamp() AS job_start_timestamp", "CAST(NULL AS TIMESTAMP) AS job_end_timestamp")
+      .write.parquet(loc)
+    // the interrupted commit completed j2
+    tear(loc, spark.read.parquet(loc).withColumn("status",
+      when(col("trigger_job_id") === "j2", lit("COMPLETED")).otherwise(col("status"))))
+    Engine.updateHeartbeatSensorStatus(spark, loc, sensorLoc, "j1")
+    assertSettled(loc)
+    val after = spark.read.parquet(loc)
+    assert(statuses(after) == Map("s1" -> "COMPLETED", "s2" -> "COMPLETED"))
+    assert(after.where("sensor_id = 's1' AND job_end_timestamp IS NOT NULL").count() == 1)
+    assert(SensorControl.sensorStatus(spark, "s1_j1", sensorLoc).contains(SensorControl.Processed))
+  }
+
   test("Gab.execute settles a torn insights commit before it replaces a use case") {
     val loc = tmpDir("gab-torn") + "/insights"
     def uc(name: String) = Gab.UseCase(name = name, dateCol = "d", dimensions = Seq("grp"),

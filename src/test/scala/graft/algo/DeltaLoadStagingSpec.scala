@@ -118,6 +118,8 @@ class DeltaLoadStagingSpec extends SparkSpec {
     }
     info(s"${jobs.size} jobs: ${jobs.mkString(", ")}")
     assert(jobs.size <= 8, jobs.mkString("jobs: ", ", ", ""))
+    // every job carries a description an event log can attribute
+    assert(!jobs.exists(_.isEmpty), jobs.mkString("jobs: ", ", ", ""))
     // the DQ pass stages the batch; the merge reads that stage as it is
     assert(jobs.contains("dq:checked"), jobs)
     assert(!jobs.exists(_.startsWith("merge-source:")), jobs)

@@ -138,4 +138,15 @@ class StagedSwapSpec extends SparkSpec {
       StagedSwap.commit(conf, live, s"${live}__other_stage")
     }
   }
+
+  test("only graft.io commits a location: no other main source calls a commit itself") {
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"missing ${root.getAbsolutePath}")
+    val io = new java.io.File(root, "io").getCanonicalPath + java.io.File.separator
+    val commit = "StagedSwap\\.commit|Versioned\\.(commit|write)".r
+    val callers = graft.spec.TestFiles.walk(root, ".scala")
+      .filterNot(_.getCanonicalPath.startsWith(io))
+      .filter(f => commit.findFirstIn(java.nio.file.Files.readString(f.toPath)).isDefined)
+    assert(callers.isEmpty, callers.mkString("commit outside graft.io: ", ", ", ""))
+  }
 }
