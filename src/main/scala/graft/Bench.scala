@@ -24,8 +24,17 @@ object Bench {
     val heap = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage
     val ccFlag = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
       .find(_.contains("ReservedCodeCacheSize")).getOrElse("unset")
-    s"""{"code_cache":$pools,"gc":$gc,"heap_used_mb":${heap.getUsed / 1048576},"heap_max_mb":${heap.getMax / 1048576},"cc_flag":"$ccFlag"}"""
+    // the classes the codegen cache retains live in metaspace
+    val metaspace = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .find(_.getName == "Metaspace").map(_.getUsage.getUsed / 1048576).getOrElse(-1L)
+    val loaded = ManagementFactory.getClassLoadingMXBean.getLoadedClassCount
+    s"""{"code_cache":$pools,"gc":$gc,"heap_used_mb":${heap.getUsed / 1048576},"heap_max_mb":${heap.getMax / 1048576},"metaspace_mb":$metaspace,"loaded_classes":$loaded,"cc_flag":"$ccFlag"}"""
   }
+
+  /** Generated classes janino has compiled in this JVM so far, on the
+    * driver and in local tasks (Spark's codegen metrics). */
+  private[graft] def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Single-thread CPU calibration: a fixed 400M multiply-add loop whose
     * wall time depends only on host speed. Recorded in every bench line so
@@ -168,12 +177,17 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val failCount = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    // Spark jobs each query launched in its last successful pass: a
-    // counter that does not move with the host (the listener bus is
-    // drained outside the timed block)
+    // Spark jobs and generated-class compiles of each query's last
+    // successful pass, and the compiles of each pass: counters that do not
+    // move with the host (the listener bus is drained outside the timed
+    // block). A warm pass should compile next to nothing.
     val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    def runPass(): Map[String, Double] =
-      ordered.map { case (name, fn) =>
+    val compiled = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val passCompiles = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def runPass(): Map[String, Double] = {
+      val passStart = compiles()
+      val times = ordered.map { case (name, fn) =>
+        val before = compiles()
         val ((ok, dt), launched) = org.apache.spark.JobCounter.jobs(spark.sparkContext) {
           val t0 = System.nanoTime()
           val ok =
@@ -186,9 +200,15 @@ object Bench {
             }
           (ok, (System.nanoTime() - t0) / 1e9)
         }
-        if (ok) jobs(name) = launched.size
+        if (ok) {
+          jobs(name) = launched.size
+          compiled(name) = compiles() - before
+        }
         name -> (if (ok) dt else -dt)
       }.toMap
+      passCompiles += compiles() - passStart
+      times
+    }
     var passes = (1 to 3).map(_ => runPass())
     def totalsOf(ps: Seq[Map[String, Double]]) = commonSuccessTotals(ps)
     // A monotonically-settling window gets a FOURTH pass (the first three
@@ -277,7 +297,7 @@ object Bench {
         s""""cal_norm_ratio":${f"$norm%.3f"},"compared":$n,""" +
         s""""outliers":$outJson}"""
     }.getOrElse("null")
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","forcing":"$Forcing","value_median":$totalMedian,"failed":${errors.size},"errors":$errJson,"intermittent":$interJson,"pass_totals":$passTotals,"host_settling":$settling,"cpu_cal_sec":$cal,"io_cal_sec":$ioCal,"cal_norm_total":${f"$calNormTotal%.3f"},"prev":$prevJson,"jvm":${jvmDiag()},"queries":$qs,"queries_median":$qsMedian,"jobs":${jmap(jobs.map { case (k, v) => k -> v.toString })},"sf":"$sfDir"}"""
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","forcing":"$Forcing","value_median":$totalMedian,"failed":${errors.size},"errors":$errJson,"intermittent":$interJson,"pass_totals":$passTotals,"host_settling":$settling,"cpu_cal_sec":$cal,"io_cal_sec":$ioCal,"cal_norm_total":${f"$calNormTotal%.3f"},"prev":$prevJson,"jvm":${jvmDiag()},"queries":$qs,"queries_median":$qsMedian,"jobs":${jmap(jobs.map { case (k, v) => k -> v.toString })},"compiles":${jmap(compiled.map { case (k, v) => k -> v.toString })},"pass_compiles":${passCompiles.mkString("[", ",", "]")},"sf":"$sfDir"}"""
     try {
       val p = java.nio.file.Paths.get("BENCH_FULL.json")
       java.nio.file.Files.write(p, fullJson.getBytes("UTF-8"))
@@ -297,9 +317,10 @@ object Bench {
     // {"q_ratio_median","cpu_cal_ratio","io_cal_ratio","cal_norm_ratio"}
     // in BENCH_FULL.json.
     // "out" mirrors prev.outliers with short names + 2-decimal pairs
-    // [raw_ratio, normalized]: ~18 chars per entry, <= 5 entries.
+    // [raw_ratio, normalized]: ~18 chars per entry, the worst 3 (all 5 are
+    // in BENCH_FULL.json; the two dropped made room for pass_compiles).
     val prevShort = prevStats.map { case (_, qMed, calR, ioR, norm, _, outl) =>
-      val outShort = outl.map { case (name, r, nr) =>
+      val outShort = outl.take(3).map { case (name, r, nr) =>
         s"""["${name.takeWhile(_ != '_')}",${f"$r%.2f"},${f"$nr%.2f"}]"""
       }.mkString("[", ",", "]")
       s"""{"qmed":${f"$qMed%.3f"},"cal":${f"$calR%.3f"},"io":${f"$ioR%.3f"},"norm":${f"$norm%.3f"},"out":$outShort}"""
@@ -320,7 +341,7 @@ object Bench {
       (if (errors.nonEmpty) s""","errors":$errJson""" else "") +
         (if (intermittent.nonEmpty) s""","intermittent":$interJson""" else "")
     val extraConfs = sys.env.get("SPARK_GRAFT_EXTRA_CONFS").exists(_.trim.nonEmpty)
-    val line = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","forcing":"$Forcing","value_median":${f"$totalMedian%.3f"},"failed":${errors.size}$errPart,"pass_totals":$passTotalsShort,"host_settling":$settling,"cpu_cal_sec":${f"$cal%.3f"},"io_cal_sec":${f"$ioCal%.3f"},"cal_norm":${f"$calNormTotal%.1f"},"extra_confs":$extraConfs,"prev":$prevShort,"queries_file":"BENCH_FULL.json","queries":$qsShort,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","forcing":"$Forcing","value_median":${f"$totalMedian%.3f"},"failed":${errors.size}$errPart,"pass_totals":$passTotalsShort,"pass_compiles":${passCompiles.mkString("[", ",", "]")},"host_settling":$settling,"cpu_cal_sec":${f"$cal%.3f"},"io_cal_sec":${f"$ioCal%.3f"},"cal_norm":${f"$calNormTotal%.1f"},"extra_confs":$extraConfs,"prev":$prevShort,"queries_file":"BENCH_FULL.json","queries":$qsShort,"sf":"$sfDir"}"""
     spark.stop()
     println(line)
   }

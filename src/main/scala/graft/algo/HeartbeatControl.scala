@@ -252,7 +252,8 @@ object HeartbeatControl {
 
   /** `Heartbeat.execute`: sweep the active rows of the acon's sensor
     * source; acquiring sensors land NEW_EVENT_AVAILABLE with the sweep's
-    * event timestamp. */
+    * event timestamp, in one commit after the sweep. The commit runs even
+    * when a sensor throws, so the hits acquired before it are kept. */
   def execute(spark: SparkSession, spec: Spec,
       runSensor: Option[(Map[String, Any], Row) => Option[(String, String)]] = None,
       now: Option[java.sql.Timestamp] = None,
@@ -262,21 +263,20 @@ object HeartbeatControl {
     val controlTable = spec.heartbeatSensorDbTable
     val active = activeHeartbeatJobs(spark, controlTable, spec.sensorSource)
     val run = runSensor.getOrElse(executeBatchOfSensor(spark) _)
-    active.collect().foreach { row =>
-      val acon = sensorAconFromHeartbeat(spark, spec, row, secretProvider)
-      run(acon, row).foreach { case (sid, job) =>
-        // read afresh: an earlier hit's commit replaced the files `active`
-        // was listed from
-        val updated = activeHeartbeatJobs(spark, controlTable, spec.sensorSource)
-          .filter(col("sensor_id") === sid && col("trigger_job_id") === job)
-          .withColumn("status", lit(NewEventAvailable))
-          .withColumn("status_change_timestamp", nowCol)
-          .withColumn("latest_event_fetched_timestamp", nowCol)
-        if (updated.count() > 0)
-          mergeByKeys(spark, controlTable, updated,
-            extraTargetCond = lower(col("sensor_source")) ===
-              spec.sensorSource.toLowerCase)
-      }
+    val hits = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    try active.collect().foreach { row =>
+      hits ++= run(sensorAconFromHeartbeat(spark, spec, row, secretProvider), row)
+    } finally if (hits.nonEmpty) {
+      val updated = activeHeartbeatJobs(spark, controlTable, spec.sensorSource)
+        .filter(hits.map { case (sid, job) =>
+          col("sensor_id") === sid && col("trigger_job_id") === job
+        }.reduce(_ || _))
+        .withColumn("status", lit(NewEventAvailable))
+        .withColumn("status_change_timestamp", nowCol)
+        .withColumn("latest_event_fetched_timestamp", nowCol)
+      mergeByKeys(spark, controlTable, updated,
+        extraTargetCond = lower(col("sensor_source")) ===
+          spec.sensorSource.toLowerCase)
     }
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-import org.apache.spark.sql.graft.ObservedMetrics
+import org.apache.spark.sql.graft.{DistinctCounts, ObservedMetrics}
 
 /** Exception raised when a DQ process breaches its failure policy
   * (reference `DQValidationsFailedException`). */
@@ -444,8 +444,7 @@ object DQEngine {
   def tableExpectation(spark: SparkSession, df: DataFrame, f: DQFunctionSpec): Option[ExpectationOutcome] = {
     val a = f.args
     aggExpectation(f).foreach { case (aggs, mk) =>
-      val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-      return Some(mk(row.toSeq))
+      return Some(mk(aggregateRow(df, aggs).toSeq))
     }
     f.function match {
       case "expect_column_distinct_values_to_be_in_set" =>
@@ -688,7 +687,7 @@ object DQEngine {
   def runOutcome(spark: SparkSession, df: DataFrame,
       spec: DQSpec): (DQRunResult, Option[DQValidationFailedException]) = {
     val (_, result, failure) = outcome(spark, df, spec) { aggs =>
-      (df, if (aggs.isEmpty) None else Some(df.agg(aggs.head, aggs.tail: _*).collect()(0)))
+      (df, if (aggs.isEmpty) None else Some(aggregateRow(df, aggs)))
     }
     (result, failure)
   }
@@ -717,11 +716,43 @@ object DQEngine {
         observed.zipWithIndex.foreach { case (i, j) => values(i) = row.get(j) }
       }
       if (distinct.nonEmpty) {
-        val row = staged.agg(named(distinct.head), distinct.tail.map(named): _*).collect()(0)
+        val row = aggregateRow(staged, distinct.map(named))
         distinct.zipWithIndex.foreach { case (i, j) => values(i) = row.get(j) }
       }
       (staged, if (aggs.isEmpty) None else Some(Row.fromSeq(values.toSeq)))
     }
+  }
+
+  /** `df.agg(aggs)`, collected as one row, in a plan whose generated code
+    * is the same on every run. Two or more `count(DISTINCT x)` over
+    * different inputs make Spark copy each row once per input and number
+    * the copies in the hash order of the inputs' expression ids, which are
+    * new for every DataFrame; the code then differs from run to run and is
+    * compiled again each time (q81: 9 classes per run). Such counts run
+    * here as the same expansion in the order of `aggs`: each row becomes
+    * one row per input, holding that input in its own column and null in
+    * the others; the distinct rows are counted per column, and a count
+    * skips nulls as a DISTINCT count does. The other aggregates run as
+    * written, in the same collect. */
+  private def aggregateRow(df: DataFrame, aggs: Seq[Column]): Row = {
+    val inputs = DistinctCounts.inputs(df, aggs)
+    val counted = aggs.indices.filter(inputs(_).isDefined)
+    if (counted.size < 2) return df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val slots = counted.map(i => inputs(i).get)
+    val names = slots.indices.map(j => s"__d$j")
+    val expanded = df.select(explode(array(slots.indices.map { j =>
+      struct(slots.indices.map { k =>
+        (if (k == j) slots(k)._1 else lit(null).cast(slots(k)._2)).as(names(k))
+      }: _*)
+    }: _*)).as("__e")).select("__e.*")
+    val distinctCounts = expanded.distinct().agg(count(names.head), names.tail.map(count): _*)
+    val others = aggs.indices.filterNot(counted.contains)
+    val row = (if (others.isEmpty) distinctCounts
+      else df.agg(aggs(others.head), others.tail.map(aggs): _*).crossJoin(distinctCounts))
+      .collect()(0)
+    val values = new Array[Any](aggs.size)
+    (others ++ counted).zipWithIndex.foreach { case (i, j) => values(i) = row.get(j) }
+    Row.fromSeq(values.toSeq)
   }
 
   /** Which of `aggs` hold a DISTINCT aggregate (`count_distinct` et al.),

@@ -164,6 +164,66 @@ class ControlTableSpec extends SparkSpec {
     assert(SensorControl.sensorStatus(spark, "s1_j1", sensorLoc).contains(SensorControl.Processed))
   }
 
+  /** The locations `body` commits through a staged rewrite, one entry per
+    * commit: the writes it sends to `<location>__stage`. */
+  private def commits(body: => Unit): Seq[String] = {
+    val staged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        qe.logical.foreach {
+          case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+              if c.outputPath.getName.endsWith("__stage") =>
+            staged.add(c.outputPath.toString.stripSuffix("__stage"))
+          case _ =>
+        }
+      def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // JobCounter drains the listener bus, which delivers these events
+    try org.apache.spark.JobCounter.jobs(spark.sparkContext)(body)
+    finally spark.listenerManager.unregister(listener)
+    staged.toArray(Array.empty[String]).toSeq
+  }
+
+  private def heartbeatControl(loc: String, sensors: Seq[(String, String)]): Unit =
+    sensors.toDF("sensor_id", "trigger_job_id").selectExpr(
+        "'trigger_file' AS sensor_source", "sensor_id", "'batch' AS sensor_read_type",
+        "sensor_id AS asset_description", "CAST(NULL AS STRING) AS upstream_key",
+        "CAST(NULL AS STRING) AS preprocess_query", "trigger_job_id",
+        "trigger_job_id AS trigger_job_name", "'UNPAUSED' AS job_state",
+        "'TRUE' AS dependency_flag", "CAST(NULL AS TIMESTAMP) AS latest_event_fetched_timestamp",
+        "CAST(NULL AS STRING) AS status", "CAST(NULL AS TIMESTAMP) AS status_change_timestamp",
+        "CAST(NULL AS TIMESTAMP) AS job_start_timestamp", "CAST(NULL AS TIMESTAMP) AS job_end_timestamp")
+      .write.mode("overwrite").parquet(loc)
+
+  test("a heartbeat sweep commits its hits once, and keeps them when a later sensor throws") {
+    val base = tmpDir("hb-sweep")
+    val loc = s"$base/control"
+    val spec = HeartbeatControl.Spec(loc, s"$base/sensors", "trigger_file")
+    def sensorId(row: Row) = row.getString(row.fieldIndex("sensor_id"))
+    def hit(row: Row) = Some(sensorId(row) -> row.getString(row.fieldIndex("trigger_job_id")))
+    heartbeatControl(loc, Seq("s1" -> "j1", "s2" -> "j2", "s3" -> "j3"))
+    val swept = commits(HeartbeatControl.execute(spark, spec,
+      runSensor = Some((_: Map[String, Any], row: Row) => if (sensorId(row) == "s3") None else hit(row))))
+    assert(swept.map(new Path(_).getName) == Seq("control"))
+    assert(statuses(spark.read.parquet(loc)) == Map("s1" -> HeartbeatControl.NewEventAvailable,
+      "s2" -> HeartbeatControl.NewEventAvailable, "s3" -> null))
+
+    // the second sensor throws: the first one's hit is still committed
+    heartbeatControl(loc, Seq("s1" -> "j1", "s2" -> "j2"))
+    val ran = scala.collection.mutable.ArrayBuffer.empty[String]
+    val failed = intercept[IllegalStateException](HeartbeatControl.execute(spark, spec,
+      runSensor = Some { (_: Map[String, Any], row: Row) =>
+        ran += sensorId(row)
+        if (ran.size == 2) throw new IllegalStateException("sensor down") else hit(row)
+      }))
+    assert(failed.getMessage == "sensor down")
+    assert(statuses(spark.read.parquet(loc)) == Map(
+      ran.head -> HeartbeatControl.NewEventAvailable, ran(1) -> null))
+  }
+
   test("Gab.execute settles a torn insights commit before it replaces a use case") {
     val loc = tmpDir("gab-torn") + "/insights"
     def uc(name: String) = Gab.UseCase(name = name, dateCol = "d", dimensions = Seq("grp"),
