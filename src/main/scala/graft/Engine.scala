@@ -183,14 +183,14 @@ object Engine {
         algo.EmailNotifier.createNotification(spec.args))
     else algo.Notifier.notify(spec, failed)
 
-  /** `execute_gab`: run every active config-table use case and register
-    * its consumption views. */
-  def executeGab(
-      spark: SparkSession, config: DataFrame, source: DataFrame,
-      insightsLocation: String, reconWindow: Option[Int] = None,
-      logLocation: Option[String] = None): Seq[algo.Gab.ConfiguredUseCase] =
-    algo.Gab.executeFromConfig(spark, config, source, insightsLocation,
-      reconWindow, logLocation)
+  /** `execute_gab` over the reference's ACON: run the active
+    * `lookup_table` use cases of the acon's queues and labels through
+    * their stage files, replace their cadence slices of `target_table`,
+    * log each stage to `gab_log_events` and (re)create their consumption
+    * views in `target_database` ([[algo.GabChoreography]]). Returns the
+    * run's log messages. */
+  def executeGab(spark: SparkSession, aconJson: String): algo.GabChoreography.RunLog =
+    algo.GabChoreography.execute(spark, algo.GabChoreography.specFromAcon(aconJson))
 
   // Heartbeat (`engine.py:220-325`): each control table — the heartbeat
   // one and the sensor one it drives — is a storage location or a catalog

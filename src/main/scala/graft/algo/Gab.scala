@@ -1,34 +1,17 @@
 package graft.algo
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Gold Asset Builder: templated cadence aggregation over a calendar.
-  *
-  * Capability parity with the reference GAB
-  * (`lakehouse_engine/algorithms/gab.py`, `core/gab_manager.py`,
-  * `core/gab_sql_generator.py`): for a configured use case, aggregate the
-  * source at each requested cadence (DAY/WEEK/MONTH/QUARTER/YEAR),
-  * union the cadences into one unified insights dataset (the reference's
-  * DELETE+INSERT into a unified table), and attach computed metrics —
-  * formula-derived columns and window/lag metrics over previous cadence
-  * periods (`core/gab_manager.py:630-838`).
-  *
-  * Scale shape: one shuffle per cadence (partial aggregation map-side),
-  * cadence windows derived with `date_trunc` — no calendar-table join
-  * needed for standard cadences; a custom calendar join (range BETWEEN)
-  * is available via [[calendarJoin]] for fiscal variants.
-  */
 /** Single source of the GAB calculated-metric WINDOW semantics
   * (reference `core/gab_manager.py:630-891`): the `last_cadence` lag,
   * the same-period-last-year lag (partitioned additionally by the
   * in-year position — month/day for sub-year cadences, ISO week for
   * WEEK) and the bounded `window_function` aggregate, rendered as Spark
-  * SQL expression text. Used verbatim by BOTH GAB engines: the
-  * choreography's view generator string-interpolates these into CREATE
-  * VIEW bodies ([[GabChoreography]]), the capability engine compiles
-  * them with `expr()` inside [[Gab.consumptionView]] — so a cadence/lag
+  * SQL expression text. The run loop's view generator string-interpolates
+  * these into CREATE VIEW bodies ([[GabChoreography]]) and
+  * [[Gab.consumptionView]] compiles them with `expr()`, so a cadence/lag
   * semantics fix lands exactly once. */
 object GabCalc {
 
@@ -61,6 +44,21 @@ object GabCalc {
       s" order by from_date ROWS BETWEEN $w0 PRECEDING AND $w1 PRECEDING),0)"
 }
 
+/** Gold Asset Builder kernels: cadence aggregation as DataFrame
+  * functions (the config-table run loop is [[GabChoreography]]). For a
+  * use case, aggregate the source at each requested cadence
+  * (DAY/WEEK/MONTH/QUARTER/YEAR), optionally as period-to-date
+  * snapshots, union the cadences into one insights dataset and attach
+  * computed metrics — formula-derived columns and window/lag metrics over
+  * previous cadence periods (`core/gab_manager.py:630-838`);
+  * [[consumptionView]] builds a view's calculated metrics over that
+  * dataset.
+  *
+  * Scale shape: one shuffle per cadence (partial aggregation map-side),
+  * cadence windows derived with `date_trunc` — no calendar-table join
+  * needed for standard cadences; a custom calendar join (range BETWEEN)
+  * is available via [[calendarJoin]] for fiscal variants.
+  */
 object Gab {
 
   /** One metric: output name -> aggregation expression over the source. */
@@ -280,58 +278,6 @@ object Gab {
     }.reduce(_ unionByName _)
       .withColumn("use_case", lit(uc.name))
 
-  /** Start date of the reconciliation window: the cutoff `nPeriods`
-    * cadence periods back from the source's max date (reference
-    * `core/gab_manager.py` recon-window computation). */
-  def reconWindowStart(source: DataFrame, uc: UseCase, cadence: String, nPeriods: Int): java.sql.Date = {
-    val trunc = date_trunc(cadence.toLowerCase, max(col(uc.dateCol)))
-    val shifted = cadence.toUpperCase match {
-      case "DAY" => date_add(trunc, -(nPeriods - 1))
-      case "WEEK" => date_add(trunc, -7 * (nPeriods - 1))
-      case "MONTH" => add_months(trunc, -(nPeriods - 1))
-      case "QUARTER" => add_months(trunc, -3 * (nPeriods - 1))
-      case "YEAR" => add_months(trunc, -12 * (nPeriods - 1))
-    }
-    source.agg(shifted.cast("date")).collect()(0).getDate(0)
-  }
-
-  /** Execute a use case into a parquet insights location, replacing that
-    * use case's rows (the reference's DELETE+INSERT —
-    * `algorithms/gab.py:485-532`) through
-    * [[graft.io.PartitionedRewrite.rewriteAll]], so an interrupted commit
-    * is settled before the other use cases' rows are read.
-    *
-    * @param reconWindow when set, only the last N cadence periods are
-    *        recomputed and replaced (the reference's reconciliation
-    *        window) — older periods of the use case stay untouched, so an
-    *        incremental refresh reads a bounded slice of the source.
-    */
-  def execute(spark: SparkSession, source: DataFrame, uc: UseCase,
-      insightsLocation: String, reconWindow: Option[Int] = None): DataFrame = {
-    graft.io.PartitionedRewrite.rewriteAll(spark, insightsLocation) { (existing, _) =>
-      val (insights, keepOld): (DataFrame, DataFrame => DataFrame) = reconWindow match {
-        case Some(n) if existing.isDefined =>
-          // per-cadence cutoffs; source pruned to the widest window
-          val cutoffs = uc.cadences.map(c => c -> reconWindowStart(source, uc, c, n)).toMap
-          val minCutoff = cutoffs.values.min(Ordering.by((d: java.sql.Date) => d.getTime))
-          val pruned = source.where(col(uc.dateCol) >= lit(minCutoff))
-          val rebuilt = buildInsights(pruned, uc)
-            .where(uc.cadences.map(c =>
-              col("cadence") === c.toUpperCase && col("from_date") >= lit(cutoffs(c)))
-              .reduce(_ || _))
-          (rebuilt, old => old.where(col("use_case") =!= uc.name ||
-            uc.cadences.map(c =>
-              col("cadence") === c.toUpperCase && col("from_date") < lit(cutoffs(c)))
-              .reduce(_ || _)))
-        case _ =>
-          (buildInsights(source, uc), old => old.where(col("use_case") =!= uc.name))
-      }
-      existing.map(keepOld(_).unionByName(insights, allowMissingColumns = true))
-        .getOrElse(insights)
-    }
-    spark.read.parquet(insightsLocation)
-  }
-
   // ---------------------------------------------------------------------
   // Consumption views (reference `core/gab_manager.py:305-891`,
   // `core/gab_sql_generator.py:187-428`)
@@ -376,7 +322,7 @@ object Gab {
     val dimCols = m.dims.values.toSeq
 
     // calculated metrics compile the SHARED [[GabCalc]] SQL expressions —
-    // the same text the choreography interpolates into its view DDLs —
+    // the same text the run loop interpolates into its view DDLs —
     // so the lag/year-lag/window semantics exist exactly once. The
     // snapshot branch carries its rank as a column literally named `rn`
     // (the name the shared expressions partition by).
@@ -418,260 +364,6 @@ object Gab {
       else None).flatten
     branches.reduce(_ unionByName _)
   }
-
-  /** Register every configured view of a use case as a temp view (the
-    * runtime analogue of the reference's CREATE OR REPLACE VIEW DDLs). */
-  def generateUseCaseViews(
-      insights: DataFrame, uc: UseCase, mappings: Seq[ViewMapping]): Unit =
-    mappings.foreach(m => consumptionView(insights, uc, m).createOrReplaceTempView(m.name))
-
-  // ---------------------------------------------------------------------
-  // Config-table-driven execution (reference `lkp_query_builder`)
-  // ---------------------------------------------------------------------
-
-  /** A parsed use-case row of the GAB config table. */
-  final case class ConfiguredUseCase(uc: UseCase, views: Seq[ViewMapping])
-
-  /** Parse GAB use cases from a `lkp_query_builder`-shaped config table:
-    * (query_id, query_label, mappings, recon_window, start_of_the_week,
-    * is_active, date_column, source metric columns inside mappings).
-    * `recon_window` follows the reference's JSON shape
-    * `{CADENCE: {"recon_window": {RECON: {"snapshot": "Y"|"N"}}}}` and
-    * `mappings` the reference's view-mapping shape. Only active rows
-    * (`is_active = 'Y'`) are returned. Parsing is driver-side (the config
-    * table is tiny by construction). */
-  def useCasesFromConfig(config: DataFrame): Seq[ConfiguredUseCase] = {
-    import scala.jdk.CollectionConverters._
-    // single-quoted pseudo-JSON is the reference's own lkp_query_builder
-    // CSV style (`tests/resources/feature/gab/setup/data`): accept both
-    val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
-      .enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_SINGLE_QUOTES)
-      .build()
-    def node(s: String) = mapper.readTree(s)
-    config.where(col("is_active") === "Y").collect().toSeq.map { row =>
-      def str(c: String) = row.getString(row.fieldIndex(c))
-      val recon = node(str("recon_window"))
-      val cadences = recon.fieldNames.asScala.toSeq
-      val snapshots = cadences.flatMap { cad =>
-        val rw = recon.get(cad).get("recon_window")
-        if (rw == null) None
-        else rw.fieldNames.asScala.collectFirst {
-          case r if rw.get(r).path("snapshot").asText("N") == "Y" => cad.toUpperCase -> r.toUpperCase
-        }
-      }.toMap
-      val mappings = node(str("mappings"))
-      val views = mappings.fieldNames.asScala.toSeq.map { viewName =>
-        val v = mappings.get(viewName)
-        val dims = v.path("dimensions").properties().asScala
-          .map(e => e.getKey -> e.getValue.asText())
-          .filter { case (alias, _) => alias != "from_date" && alias != "to_date" }
-          .toMap
-        val metricsNode = v.path("metric")
-        val metricNames = metricsNode.fieldNames.asScala.toSeq
-        val (lags, yearLags, winFns, deriveds) =
-          metricNames.foldLeft((Seq.empty[CalcLag], Seq.empty[CalcYearLag],
-            Seq.empty[CalcWindow], Seq.empty[DerivedMetric])) { case ((l, y, w, d), mk) =>
-            val mNode = metricsNode.get(mk)
-            val name = mNode.path("metric_name").asText()
-            val cm = mNode.path("calculated_metric")
-            val newL = cm.path("last_cadence").asScala.toSeq.map(n =>
-              CalcLag(n.get("label").asText(), name, n.get("window").asInt(1)))
-            val newY = cm.path("last_year_cadence").asScala.toSeq.map(n =>
-              CalcYearLag(n.get("label").asText(), name, n.get("window").asInt(1)))
-            val newW = cm.path("window_function").asScala.toSeq.map(n =>
-              CalcWindow(n.get("label").asText(), name, n.get("agg_func").asText(),
-                n.get("window").get(0).asInt(), n.get("window").get(1).asInt()))
-            val newD = mNode.path("derived_metric").asScala.toSeq.map(n =>
-              DerivedMetric(n.get("label").asText(), n.get("formula").asText()))
-            (l ++ newL, y ++ newY, w ++ newW, d ++ newD)
-          }
-        val filterStr = Option(v.path("filter").asText(null)).filter(_.nonEmpty)
-        ViewMapping(viewName, dims,
-          metricNames.map(mk => metricsNode.get(mk).path("metric_name").asText()),
-          lags, yearLags, winFns,
-          deriveds.map(d => DerivedMetric(d.name, d.formula)), filterStr)
-      }
-      val metricSpecs = {
-        val v = mappings.get(mappings.fieldNames.asScala.toSeq.head)
-        v.path("metric").properties().asScala.toSeq.map { e =>
-          val mName = e.getValue.path("metric_name").asText()
-          Metric(mName, e.getValue.path("agg").asText("sum"),
-            e.getValue.path("source_column").asText(mName))
-        }
-      }
-      val firstView = views.head
-      val uc = UseCase(
-        name = str("query_label"),
-        dateCol = str("date_column"),
-        dimensions = firstView.dims.values.toSeq,
-        metrics = metricSpecs,
-        cadences = cadences.map(_.toUpperCase),
-        weekStart =
-          GabChoreography.weekStartDay(str("start_of_the_week")).name,
-        snapshots = snapshots)
-      ConfiguredUseCase(uc, views)
-    }
-  }
-
-  /** Run every active config-table use case end-to-end: build insights,
-    * write/replace them at the insights location, and register the
-    * configured consumption views. Appends one stage-log row per stage to
-    * `logLocation` when set (the reference's `gab_log_events`). */
-  def executeFromConfig(
-      spark: SparkSession, config: DataFrame, source: DataFrame,
-      insightsLocation: String, reconWindow: Option[Int] = None,
-      logLocation: Option[String] = None): Seq[ConfiguredUseCase] = {
-    val cases = useCasesFromConfig(config)
-    cases.foreach { c =>
-      val t0 = System.currentTimeMillis()
-      def log(stage: String, status: String): Unit = logLocation.foreach { loc =>
-        import spark.implicits._
-        Seq((c.uc.name, stage, status, new java.sql.Timestamp(t0),
-          System.currentTimeMillis() - t0))
-          .toDF("use_case", "stage", "status", "run_start_time", "elapsed_ms")
-          .write.mode("append").parquet(loc)
-      }
-      try {
-        val insights = execute(spark, source, c.uc, insightsLocation, reconWindow)
-        generateUseCaseViews(insights, c.uc, c.views)
-        log("complete", "success")
-      } catch { case e: Throwable => log("complete", s"failed: ${e.getClass.getName}"); throw e }
-    }
-    cases
-  }
-
-  // ---------------------------------------------------------------------
-  // Intermediate stages (reference `lkp_query_builder.intermediate_stages`
-  // + `algorithms/gab.py:380-452,700-733`, `core/gab_sql_generator.py`):
-  // each use case may define an ordered chain of TEMPLATED SQL stages;
-  // every stage renders per cadence, executes, and registers its
-  // `table_alias` as a temp view the NEXT stage (and the final insights
-  // insert) can reference.
-  // ---------------------------------------------------------------------
-
-  /** One configured stage (reference stage dict fields). */
-  final case class IntermediateStage(
-      order: Int, filePath: String, tableAlias: String,
-      projectDateColumn: String, filterDateColumn: String,
-      storageLevel: Option[String],
-      repartitionNum: Option[Int], repartitionKeys: Seq[String])
-
-  /** Parse the `intermediate_stages` config cell. Reference rows carry
-    * single-quoted pseudo-JSON (`setup/data/lkp_query_builder.csv`);
-    * Jackson's ALLOW_SINGLE_QUOTES reads it as-is, including embedded
-    * double quotes inside values. */
-  def stagesFromJson(json: String): Seq[IntermediateStage] = {
-    import scala.jdk.CollectionConverters._
-    val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
-      .enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_SINGLE_QUOTES)
-      .build()
-    val node = mapper.readTree(json)
-    node.fieldNames.asScala.toSeq.sortBy(_.toInt).map { k =>
-      val s = node.get(k)
-      val projectCol = s.path("project_date_column").asText("")
-      val filterCol = s.path("filter_date_column").asText("")
-      IntermediateStage(
-        k.toInt,
-        s.path("file_path").asText(),
-        s.path("table_alias").asText(),
-        projectCol,
-        if (filterCol.nonEmpty) filterCol else projectCol,
-        Option(s.path("storage_level").asText("")).filter(_.nonEmpty),
-        Option(s.path("repartition").path("numPartitions").asInt(0)).filter(_ > 0),
-        s.path("repartition").path("keys").asScala.toSeq.map(_.asText()))
-    }
-  }
-
-  /** Projection (start, end) SQL for the snapshot-free cadence family —
-    * the reference COMBINED_CONFIGURATION entries with empty
-    * `join_select` (`core/definitions.py:1427-1690`): start truncates
-    * the date column to the cadence, end is the period's last day.
-    * Resolved through the choreography's 18-combination matrix
-    * ([[GabChoreography.cadenceConfiguration]]) so the projection
-    * strings exist exactly once; a combination that needs the calendar
-    * join (WEEK without snapshot) is not in this family. */
-  def cadenceProjection(cadence: String, dateColumn: String): (String, String) = {
-    val cad = cadence.toUpperCase(java.util.Locale.ROOT)
-    val (from, to, join) = GabChoreography.cadenceConfiguration(
-      cad, cad, "N", "M", dateColumn, "", "")
-    if (from.isEmpty || join.nonEmpty)
-      sys.error(s"no snapshot-free projection for cadence $cad")
-    (from.get, to.get)
-  }
-
-  /** Render one templated stage file the way the reference's
-    * `_render_template_query` does (`algorithms/gab.py:700-733`) —
-    * delegates to the ONE shared renderer
-    * ([[GabChoreography.renderTemplate]]): `{{ name }}` substitution
-    * plus the single conditional the reference templates use,
-    * `{% if NAME == VALUE %}A{% else %}B{% endif %}` (an UNDEFINED name
-    * compares unequal, exactly as Jinja renders the reference's
-    * `replace_offset_value` guard when the textual offset substitution
-    * hasn't been applied — this path never passes it, so the guard
-    * always falls to the else branch). */
-  def renderStageTemplate(template: String, vars: Map[String, String]): String =
-    GabChoreography.renderTemplate(template, vars)
-
-  /** Execute a use case's stage chain for one cadence: render each stage
-    * file (vars per the reference render — the cadence/query_id SELECT
-    * fragments, the cadence projection of the stage's date column, the
-    * filter window, the timezone offset), run it, repartition if
-    * configured, and register `table_alias`. Later stages see earlier
-    * aliases; returns the LAST alias (the use case's source view).
-    *
-    * Scale shape identical to the reference: stages are plain Spark SQL
-    * over registered views — Catalyst fuses the chain at the final
-    * consumer unless a stage asks for an explicit repartition/cache. */
-  def runIntermediateStages(
-      spark: SparkSession, stages: Seq[IntermediateStage], basePath: String,
-      cadence: String, database: String, queryId: String,
-      startDate: String, endDate: String, timezoneOffset: Int = 0,
-      targetTable: String = "gab_use_case_results"): String = {
-    require(stages.nonEmpty, "use case has no intermediate stages")
-    stages.sortBy(_.order).foreach { st =>
-      val (projStart, projEnd) =
-        if (st.projectDateColumn.nonEmpty)
-          cadenceProjection(cadence, st.projectDateColumn)
-        else ("", "")
-      val vars = Map(
-        "cadence" -> s"'${cadence.toUpperCase}' as cadence",
-        "cadence_run" -> cadence.toUpperCase,
-        "query_id" -> s"'$queryId' as query_id",
-        "project_date_column" -> projStart,
-        "to_date" -> projEnd,
-        "database" -> database,
-        "target_table" -> targetTable,
-        "start_date" -> startDate,
-        "end_date" -> endDate,
-        "filter_date_column" -> st.filterDateColumn,
-        "offset_value" -> timezoneOffset.toString,
-        "joins" -> "",
-        "partition_filter" -> "")
-      val sqlText = renderStageTemplate(
-        java.nio.file.Files.readString(
-          java.nio.file.Paths.get(basePath, st.filePath)), vars)
-      var df = spark.sql(sqlText)
-      st.repartitionNum.foreach { n =>
-        df = if (st.repartitionKeys.nonEmpty)
-          df.repartition(n, st.repartitionKeys.map(col): _*)
-        else df.repartition(n)
-      }
-      df.createOrReplaceTempView(st.tableAlias)
-      // Honor the requested level (reference runs `CACHE TABLE ... OPTIONS
-      // ('storageLevel' '<level>')`, `algorithms/gab.py:786-799`): a stage
-      // asking for DISK_ONLY must not silently get MEMORY_AND_DISK.
-      st.storageLevel.foreach { lvl =>
-        spark.catalog.cacheTable(st.tableAlias,
-          graft.exec.StorageLevels.parse(lvl))
-      }
-    }
-    stages.maxBy(_.order).tableAlias
-  }
-
-  /** Generate a calendar dimension (one row per day) for range joins. */
-  def calendar(spark: SparkSession, from: String, to: String): DataFrame =
-    spark.sql(
-      s"""SELECT explode(sequence(DATE '$from', DATE '$to', INTERVAL 1 DAY)) AS calendar_date""")
 
   /** GAB-style calendar range join: attach cadence windows to fact rows
     * (`algorithms/gab.py:668-684`, semantics

@@ -11,18 +11,16 @@ import com.fasterxml.jackson.core.JsonParser
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.desc
 
-/** Full choreography of the reference Gold Asset Builder run loop, driven
-  * by the same `lkp_query_builder` config table, templated stage SQL files
-  * and ACON shape the reference uses.
-  *
-  * This complements [[Gab]] (the capability-level windowed-aggregation
-  * engine): here the goal is scenario-for-scenario fidelity with the
-  * reference algorithm (`algorithms/gab.py:32-939`), its cadence manager
-  * (`core/gab_manager.py:17-304`), view manager (`gab_manager.py:306-891`),
-  * SQL generators (`core/gab_sql_generator.py:46-545`) and utilities
-  * (`utils/gab_utils.py:18-653`), verified against the reference's own
-  * golden fixtures (`tests/resources/feature/gab/control`).
+/** The Gold Asset Builder run loop: the reference's `execute_gab`
+  * (`algorithms/gab.py:32-939`), driven by the same `lkp_query_builder`
+  * config table, templated stage SQL files and ACON shape, with its
+  * cadence manager (`core/gab_manager.py:17-304`), view manager
+  * (`gab_manager.py:306-891`), SQL generators
+  * (`core/gab_sql_generator.py:46-545`) and utilities
+  * (`utils/gab_utils.py:18-653`). [[graft.Engine.executeGab]] is its ACON
+  * facade; the DataFrame kernels the catalog queries use are in [[Gab]].
   *
   * Scale note: every per-cadence run is one templated Spark SQL statement
   * over the source table (optionally broadcast-joined to the tiny
@@ -31,10 +29,14 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * data-proportional work is the stage aggregation itself, which Catalyst
   * plans as a normal shuffle-aggregate.
   *
-  * Deliberate divergences from the reference, all environment-driven:
+  * Deliberate divergences from the reference:
   *  - the insights DELETE executes through [[graft.maintain.TableManager
   *    .deleteWhere]] (staged parquet rewrite) instead of Delta SQL DELETE
   *    (no Delta jars in the build);
+  *  - `gab_log_events` is read and appended through [[graft.io.TableRef]],
+  *    so an interrupted commit of the log (an `optimize` of it, say) is
+  *    settled first; a failing read of the log fails the run instead of
+  *    reading as "never ran";
   *  - stage/log bookkeeping rows are appended with a typed DataFrame
   *    insert rather than a string-escaped `INSERT ... VALUES` — content is
   *    identical, quoting pitfalls are not reproduced;
@@ -428,9 +430,8 @@ object GabChoreography {
   }
 
   // ------------------------------------------------------------------
-  // Mini template renderer — THE one renderer both GAB engines use
-  // (the capability engine delegates via Gab.renderStageTemplate).
-  // Handles the Jinja constructs the reference stage files need:
+  // Mini template renderer for the stage files. Handles the Jinja
+  // constructs the reference stage files need:
   // `{{ var }}` substitution and the single conditional
   // `{% if LEFT == RIGHT %}A{% else %}B{% endif %}`, where LEFT is
   // either an integer literal (the choreography substitutes the offset
@@ -508,11 +509,14 @@ object GabChoreography {
       java.sql.Timestamp.valueOf(windowStart + " 00:00:00"),
       java.sql.Timestamp.valueOf(windowEnd + " 00:00:00"),
       queryId, queryLabel, cadence, stageName, query, status, errorMessage)
-    val schema = spark.table(s"${spec.targetDatabase}.gab_log_events").schema
+    val log = logTable(spec)
+    // reading settles an interrupted commit of the log before the append
+    val schema = graft.io.TableRef.read(spark, log).get.schema
     spark.createDataFrame(java.util.List.of(row), schema)
-      .write.mode("append")
-      .insertInto(s"${spec.targetDatabase}.gab_log_events")
+      .write.mode("append").insertInto(log)
   }
+
+  private def logTable(spec: RunSpec) = s"${spec.targetDatabase}.gab_log_events"
 
   // ------------------------------------------------------------------
   // Main run loop (gab.py:50-168)
@@ -551,7 +555,8 @@ object GabChoreography {
       else spec.cadenceFilter.intersect(configuredCadences)
         .sortBy(c => cadenceOrder.getOrElse(c, Int.MaxValue))
 
-    val (latestRunDate, latestConfigDate) = latestUseCaseData(spark, spec, queryId)
+    val latestRunDate = latestRunStart(spark, spec, queryId)
+    val latestConfigDate = cellFor(useCase, "lh_created_on")
 
     // stage templates, with the textual offset substitution the reference
     // applies before Jinja rendering (gab.py:170-192)
@@ -571,7 +576,7 @@ object GabChoreography {
 
     if (processed.nonEmpty) {
       if (latestConfigDate > latestRunDate)
-        generateUseCaseViews(spark, spec, useCase)
+        createUseCaseViews(spark, spec, useCase)
       else log.info(
         "View is not being re-created as there are no changes in the " +
           "configuration after the latest run")
@@ -581,23 +586,16 @@ object GabChoreography {
     }
   }
 
-  /** `_get_latest_usecase_data` (gab.py:474-532): (latest successful
-    * Final Insert run, use case config date), as comparable strings. */
-  private def latestUseCaseData(spark: SparkSession, spec: RunSpec,
-      queryId: String): (String, String) = {
-    val run =
-      try {
-        val rows = spark.sql(
-          s"""SELECT run_start_time FROM ${spec.targetDatabase}.gab_log_events
-             | WHERE query_id = $queryId AND stage_name = 'Final Insert'
-             | AND status = 'Success' ORDER BY 1 DESC LIMIT 1""".stripMargin).collect()
-        if (rows.isEmpty) "2020-01-01 00:00:00" else String.valueOf(rows(0).get(0))
-      } catch { case _: Exception => "2020-01-01 00:00:00" }
-    val config = String.valueOf(spark.sql(
-      s"SELECT lh_created_on FROM ${spec.lookupTable} WHERE query_id = $queryId")
-      .collect()(0).get(0))
-    (run, config)
-  }
+  /** `_get_latest_run_date` (gab.py:474-532): the start of the latest
+    * successful Final Insert of the use case, as a string comparable with
+    * its config row's `lh_created_on`. */
+  private def latestRunStart(spark: SparkSession, spec: RunSpec,
+      queryId: String): String =
+    graft.io.TableRef.read(spark, logTable(spec)).get
+      .where(s"query_id = $queryId AND stage_name = 'Final Insert' AND status = 'Success'")
+      .select("run_start_time").orderBy(desc("run_start_time")).limit(1)
+      .collect().headOption.map(r => String.valueOf(r.get(0)))
+      .getOrElse("2020-01-01 00:00:00")
 
   /** One cadence of one use case (gab.py:194-252). */
   private def processCadence(spark: SparkSession, spec: RunSpec,
@@ -656,7 +654,7 @@ object GabChoreography {
     (1 to stages.size).foreach { i =>
       val stage = stages.get(i.toString)
       val (templated, fullPath) = stageTemplates(i.toString)
-      val rendered = renderStageTemplate(spec, templated, useCase, stage,
+      val rendered = renderStage(spec, templated, useCase, stage,
         reconCadence, cadence, snapFlag, winStartStr, partitionEnd,
         fStartStr, fEndStr, partFilter)
       lastView = createStageView(spark, spec, rendered, stage, winStartStr,
@@ -673,7 +671,7 @@ object GabChoreography {
   /** Render one stage file (gab.py:372-452 + 684-743): pick the combined
     * configuration, build the calendar-join condition, substitute the
     * template variables. */
-  private def renderStageTemplate(spec: RunSpec, templated: String,
+  private def renderStage(spec: RunSpec, templated: String,
       useCase: Row, stage: JsonNode, reconCadence: String, cadence: String,
       snapFlag: String, windowStart: String, partitionEnd: String,
       filterStart: String, filterEnd: String, partitionFilter: String): String = {
@@ -736,10 +734,9 @@ object GabChoreography {
       }
       df.createOrReplaceTempView(alias)
       val storage = stage.path("storage_level").asText("")
-      if (storage.nonEmpty) {
+      // eager: CACHE TABLE without LAZY materializes the view itself
+      if (storage.nonEmpty)
         spark.sql(s"CACHE TABLE $alias OPTIONS ('storageLevel' '$storage')")
-        spark.sql(s"SELECT COUNT(*) FROM $alias").collect()
-      }
       alias
     } catch {
       case e: Exception => status = "Failed"; error = String.valueOf(e); throw e
@@ -763,12 +760,9 @@ object GabChoreography {
     // ---- delete (GABDeleteGenerator) ----
     val dimFrom = lastMapping.path("dimensions").path("from_date").asText()
     val dimTo = lastMapping.path("dimensions").path("to_date").asText()
-    def bound(agg: String, c: String): Option[String] = {
-      val v = spark.sql(s"SELECT $agg($c) FROM $stageView").collect()(0).get(0)
-      Option(v).map(String.valueOf(_))
-    }
-    val (minF, maxF) = (bound("MIN", dimFrom), bound("MAX", dimFrom))
-    val (minT, maxT) = (bound("MIN", dimTo), bound("MAX", dimTo))
+    val bounds = spark.sql(s"SELECT MIN($dimFrom), MAX($dimFrom), MIN($dimTo), " +
+      s"MAX($dimTo) FROM $stageView").collect()(0)
+    val Seq(minF, maxF, minT, maxT) = (0 until 4).map(i => Option(bounds.get(i)).map(String.valueOf))
     if (minF.isDefined && minT.isDefined) {
       val pred =
         s"query_id = $queryId AND cadence = '$cadence' AND " +
@@ -800,7 +794,7 @@ object GabChoreography {
   // :187-417)
   // ------------------------------------------------------------------
 
-  private def generateUseCaseViews(spark: SparkSession, spec: RunSpec,
+  private def createUseCaseViews(spark: SparkSession, spec: RunSpec,
       useCase: Row): Unit = {
     val queryId = cellFor(useCase, "query_id")
     val recon = parseCell(cellFor(useCase, "recon_window"))
@@ -817,12 +811,12 @@ object GabChoreography {
     val withoutSnap = snapshotStatus.filter(_._2 == "N").map(_._1)
     val mappings = parseCell(cellFor(useCase, "mappings"))
     mappings.properties().asScala.toSeq.foreach { e =>
-      generateUseCaseView(spark, spec, e.getKey, e.getValue, snapshotStatus,
+      createUseCaseView(spark, spec, e.getKey, e.getValue, snapshotStatus,
         withSnap, withoutSnap, queryId)
     }
   }
 
-  private def generateUseCaseView(spark: SparkSession, spec: RunSpec,
+  private def createUseCaseView(spark: SparkSession, spec: RunSpec,
       viewName: String, viewCfg: JsonNode,
       snapshotStatus: Seq[(String, String)], withSnap: Seq[String],
       withoutSnap: Seq[String], queryId: String): Unit = {

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.StructType
   *
   *   - [[rewriteAll]]: the whole location is read, transformed, written
   *     to a stage dir with its partition layout and swapped in by
-  *     [[StagedSwap.commit]] (control tables and GAB insights commit this
-  *     way too, through [[TableRef.rewrite]] and `Gab.execute`);
+  *     [[StagedSwap.commit]] (control tables commit this way too,
+  *     through [[TableRef.rewrite]]);
   *   - [[resolveTouched]] + [[rewriteTouched]]: only the partitions an
   *     operation touches are read and rewritten, via one stage write + a
   *     rename of each staged partition dir into place, leaving every other

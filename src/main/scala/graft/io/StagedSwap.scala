@@ -5,8 +5,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets
 
 /** Checked staged-swap commit for whole-directory rewrites (merge,
-  * delete-where, compaction, control-table update, GAB insights), and
-  * its partition-level form for partition-scoped rewrites
+  * delete-where, compaction, control-table update), and its
+  * partition-level form for partition-scoped rewrites
   * ([[commitPartitions]]).
   *
   * Protocol: the caller writes the new contents to `<location>__stage`

